@@ -91,6 +91,8 @@ object Bench {
     }
   }
 
+  private var stateHygieneFailed = false
+
   /** Inter-query isolation (VERDICT r4 #1): release ALL session state,
     * then settle GC debt, between timed units. See the suite-side use
     * for the full rationale. */
@@ -103,9 +105,16 @@ object Bench {
     // the query is gone (measured mid-suite: 1.65 M UnsafeRows / ~250 MB
     // live). An active query would simply reload its provider from the
     // checkpoint, so this is safe by construction — and between bench
-    // queries nothing is active.
+    // queries nothing is active. A failure (e.g. the forwarder broken by
+    // a Spark upgrade, a LinkageError) is reported on the first clear
+    // only, so the bench output shows it without repeating per query.
     try org.apache.spark.sql.graft.StateHygiene.unloadAllStateStores()
-    catch { case _: Throwable => () }
+    catch {
+      case e: Throwable =>
+        if (!stateHygieneFailed) System.err.println(
+          s"[bench] state-store unload failed: ${e.getClass.getName}: ${e.getMessage}")
+        stateHygieneFailed = true
+    }
     try {
       import scala.jdk.CollectionConverters._
       val tmp = Paths.get(System.getProperty("java.io.tmpdir"))

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.functions._
 
 /** One tuned SparkSession builder shared by Verify / Bench / tests.
   *
@@ -47,38 +49,10 @@ object Sessions {
       // native Catalyst extensions (SURVEY §7.2): custom codegen'd
       // expressions registered through the public extensions API
       .withExtensions { ext =>
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.CosineSimilarity.name),
-            graft.functions.CosineSimilarity.info,
-            graft.functions.CosineSimilarity.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.ScriptClass.name),
-            graft.functions.ScriptClass.info,
-            graft.functions.ScriptClass.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.ArrayAgreeCount.name),
-            graft.functions.ArrayAgreeCount.info,
-            graft.functions.ArrayAgreeCount.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.ArrayIntersectCount.name),
-            graft.functions.ArrayIntersectCount.info,
-            graft.functions.ArrayIntersectCount.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.SortedIntersectCount.name),
-            graft.functions.SortedIntersectCount.info,
-            graft.functions.SortedIntersectCount.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.LevenshteinWithin.name),
-            graft.functions.LevenshteinWithin.info,
-            graft.functions.LevenshteinWithin.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.UnicodeNormalize.name),
-            graft.functions.UnicodeNormalize.info,
-            graft.functions.UnicodeNormalize.builder))
-        ext.injectFunction(
-          (org.apache.spark.sql.catalyst.FunctionIdentifier(graft.functions.CharEntropy.name),
-            graft.functions.CharEntropy.info,
-            graft.functions.CharEntropy.builder))
+        Seq[SessionFunction](CosineSimilarity, ScriptClass, ArrayAgreeCount,
+            ArrayIntersectCount, SortedIntersectCount, LevenshteinWithin,
+            UnicodeNormalize, CharEntropy)
+          .foreach(f => ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
         // graft-catalog SQL views: DDL intercepted at parse time (Spark
         // 4.1's ResolveSessionCatalog refuses v2 view DDL before custom
         // resolution rules run), reads resolved by rule — see

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet table loaders for the driver testdata star schema
   * (TESTDATA.md; scan op S5 in SURVEY.md §2.1).
@@ -52,12 +53,13 @@ object Tables {
     * one of the cores.
     *
     * Scale-adaptive, derived from input size (never a local-only pin): the
-    * round-robin fires only when the optimizer's size estimate says the
-    * scan alone cannot saturate the cores (bytes < cores × maxPartitionBytes).
-    * Below that cutoff the added exchange moves at most cores×128 MiB —
-    * strictly cheaper than the serial stage it breaks up; above it (any
-    * real 100 TB scan plans thousands of row groups) this is the identity,
-    * so a corpus-sized shuffle can never be added. */
+    * round-robin fires only when the optimizer's size estimate is below
+    * `max(spark.sql.shuffle.partitions, defaultParallelism) ×
+    * spark.sql.files.maxPartitionBytes`. That cutoff scales with config —
+    * it is also the most this exchange can ever move — so below it the
+    * added shuffle is cheaper than the serial stage it breaks up; at or
+    * above it (any real 100 TB scan plans thousands of row groups) this is
+    * the identity. */
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // Target width = the session's deliberate shuffle sizing, floored at
@@ -72,5 +74,34 @@ object Tables {
       spark.sessionState.conf.filesMaxPartitionBytes
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= cutoff) df
     else df.repartition(target)
+  }
+
+  /** Stage `df` for the duration of `use`, then release it: the one
+    * staging policy of the LLM-data operators (PAPER.md §1.1 — each
+    * intermediate is staged once and dropped after its consumers ran).
+    *
+    * A spillable `MEMORY_AND_DISK` persist, not a `localCheckpoint`:
+    * checkpointed partitions pin executor storage and cannot recompute on
+    * executor loss, while a persist spills when memory runs out and
+    * rebuilds from lineage if an executor dies. The release rides a
+    * `finally`, so a failing action inside `use` (a probe, a collect, the
+    * materialization) never strands corpus-sized blocks for the session's
+    * lifetime, and no stage waits for driver GC to be freed.
+    *
+    * A result that reads the stage must be computed before the release:
+    * return it through [[materialize]] or collect it to a local relation.
+    * A lazy frame returned as-is would recompute over released storage. */
+  def withStaged[A](df: DataFrame)(use: DataFrame => A): A = {
+    val staged = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try use(staged) finally staged.unpersist(blocking = false)
+  }
+
+  /** Cache and count a small (pair-, pack- or audit-sized) result while
+    * the stages it reads are still live inside [[withStaged]]: callers
+    * get the cached relation, not a lineage over released blocks. Costs
+    * one result-sized pass. */
+  def materialize(out: DataFrame): DataFrame = {
+    out.cache().count()
+    out
   }
 }

@@ -198,9 +198,10 @@ private[graft] object Mv {
       srcMeta.schema.fieldNames.find(_.equalsIgnoreCase(k)).get).dataType)
 
     // the changed-key set is read three times (predicate build, merge
-    // source, accounting) — materialize it once; it is churn-sized
-    val changedC = changed.cache()
-    try {
+    // source, accounting) — stage it once; it is churn-sized. Each temp
+    // view drops after its stage's release, as dropping a view over a
+    // still-cached plan uncaches that plan through the view.
+    try graft.Tables.withStaged(changed) { changedC =>
       val inlined: Option[String] =
         if (d.keys.length != 1) None
         else {
@@ -229,14 +230,12 @@ private[graft] object Mv {
                 GROUP BY ${d.keys.map(k => s"s.$k").mkString(", ")}""")
       }
       // merge source: every changed key, alive (has recomputed row) or not
-      val msrc = changedC.alias("c")
-        .join(recompute.withColumn("__alive", lit(true)).alias("r"),
-          d.keys.map(k => col(s"c.$k") <=> col(s"r.$k")).reduce(_ && _), "left")
-        .select((d.keys.map(k => col(s"c.$k").as(k)) ++
-          d.aggs.map(a => col(s"r.${a.alias}").as(a.alias)) :+
-          coalesce(col("r.__alive"), lit(false)).as("__alive")): _*)
-        .cache()
-      try {
+      try graft.Tables.withStaged(changedC.alias("c")
+          .join(recompute.withColumn("__alive", lit(true)).alias("r"),
+            d.keys.map(k => col(s"c.$k") <=> col(s"r.$k")).reduce(_ && _), "left")
+          .select((d.keys.map(k => col(s"c.$k").as(k)) ++
+            d.aggs.map(a => col(s"r.${a.alias}").as(a.alias)) :+
+            coalesce(col("r.__alive"), lit(false)).as("__alive")): _*)) { msrc =>
         val acct = msrc.agg(
           sum(when(col("__alive"), 1L).otherwise(0L)),
           sum(when(col("__alive"), 0L).otherwise(1L))).head()
@@ -257,14 +256,8 @@ private[graft] object Mv {
         }
         bumpWatermark(mvDir, to)
         RefreshResult(fromW, to, "incremental", live + vanished, live, vanished)
-      } finally {
-        msrc.unpersist()
-        ss.catalog.dropTempView(tvMergeSrc)
-      }
-    } finally {
-      changedC.unpersist()
-      ss.catalog.dropTempView(tvChanged)
-    }
+      } finally ss.catalog.dropTempView(tvMergeSrc)
+    } finally ss.catalog.dropTempView(tvChanged)
   }
 
   /** The MV's recorded source watermark (observability, like

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
@@ -90,7 +88,7 @@ case class ArrayAgreeCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object ArrayAgreeCount {
+object ArrayAgreeCount extends SessionFunction {
   val name = "array_agree_count"
 
   val info: ExpressionInfo = new ExpressionInfo(classOf[ArrayAgreeCount].getName, name)
@@ -99,10 +97,4 @@ object ArrayAgreeCount {
     require(children.length == 2, s"$name expects 2 arguments")
     ArrayAgreeCount(children.head, children(1))
   }
-
-  /** Idempotent per-session registration, for sessions not built through
-    * [[graft.Sessions]] (whose extensions also inject it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,7 +76,7 @@ case class ArrayIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object ArrayIntersectCount {
+object ArrayIntersectCount extends SessionFunction {
   val name = "array_intersect_count"
 
   val info: ExpressionInfo = new ExpressionInfo(classOf[ArrayIntersectCount].getName, name)
@@ -87,10 +85,4 @@ object ArrayIntersectCount {
     require(children.length == 2, s"$name expects 2 arguments")
     ArrayIntersectCount(children.head, children(1))
   }
-
-  /** Idempotent per-session registration, for sessions not built through
-    * [[graft.Sessions]] (whose extensions also inject it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -51,7 +49,7 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object CharEntropy {
+object CharEntropy extends SessionFunction {
   val name = "char_entropy"
 
   val schema: StructType = StructType(Seq(
@@ -123,10 +121,4 @@ object CharEntropy {
     require(children.length == 1, s"$name expects 1 argument")
     CharEntropy(children.head)
   }
-
-  /** Idempotent per-session registration, for sessions not built through
-    * [[graft.Sessions]] (whose extensions also inject it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -52,7 +50,7 @@ case class LevenshteinWithin(left: Expression, right: Expression, maxDist: Int)
     copy(left = newLeft, right = newRight)
 }
 
-object LevenshteinWithin {
+object LevenshteinWithin extends SessionFunction {
   val name = "levenshtein_within"
 
   /** Per-thread Peq scratch: `masks` holds position bitmasks per byte
@@ -133,10 +131,4 @@ object LevenshteinWithin {
     }
     LevenshteinWithin(children.head, children(1), k)
   }
-
-  /** Idempotent per-session registration, for sessions not built through
-    * [[graft.Sessions]] (whose extensions also inject it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,7 +54,7 @@ case class ScriptClass(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object ScriptClass {
+object ScriptClass extends SessionFunction {
   val name = "script_class"
 
   private val Hangul = UTF8String.fromString("hangul")
@@ -100,10 +98,4 @@ object ScriptClass {
     require(children.length == 1, s"$name expects 1 argument")
     ScriptClass(children.head)
   }
-
-  /** Idempotent per-session registration, for sessions not built through
-    * [[graft.Sessions]] (whose extensions also inject it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

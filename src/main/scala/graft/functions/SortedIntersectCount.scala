@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -100,7 +98,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object SortedIntersectCount {
+object SortedIntersectCount extends SessionFunction {
   val name = "sorted_intersect_count"
 
   val info: ExpressionInfo = new ExpressionInfo(classOf[SortedIntersectCount].getName, name)
@@ -109,9 +107,4 @@ object SortedIntersectCount {
     require(children.length == 2, s"$name expects 2 arguments")
     SortedIntersectCount(children.head, children(1))
   }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -45,7 +43,7 @@ case class UnicodeNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object UnicodeNormalize {
+object UnicodeNormalize extends SessionFunction {
   val name = "nfc_normalize"
 
   /** NFC-normalize; already-normalized input (the overwhelming common
@@ -65,10 +63,4 @@ object UnicodeNormalize {
     require(children.length == 1, s"$name expects 1 argument")
     UnicodeNormalize(children.head)
   }
-
-  /** Idempotent per-session registration, for sessions not built through
-    * [[graft.Sessions]] (whose extensions also inject it). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name), info, builder)
 }

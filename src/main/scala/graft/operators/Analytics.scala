@@ -1523,31 +1523,28 @@ object Analytics {
   def sketchIntersection(spark: SparkSession, dir: String): DataFrame = {
     val tu = Tables.events(spark, dir)
       .select(col("event_type"), col("user_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sk = tu.groupBy("event_type")
-        .agg(hll_sketch_agg(col("user_id")).as("sk"),
-          count(lit(1)).as("nd")) // tu is distinct => count == countDistinct
-      val pairs = sk.select(col("event_type").as("ta"), col("sk").as("ska"),
-          col("nd").as("na"))
-        .join(sk.select(col("event_type").as("tb"), col("sk").as("skb"),
-          col("nd").as("nb")), col("ta") < col("tb"))
-      val exact = tu.select(col("event_type").as("ta"), col("user_id"))
-        .join(tu.select(col("event_type").as("tb"), col("user_id")), Seq("user_id"))
-        .filter(col("ta") < col("tb"))
-        .groupBy("ta", "tb").agg(count(lit(1)).as("n_common"))
-      pairs.join(exact, Seq("ta", "tb"), "left")
-        .select(col("ta"), col("tb"), col("na"), col("nb"),
-          coalesce(col("n_common"), lit(0L)).as("n_common"),
-          round(coalesce(col("n_common"), lit(0L)).cast("double")
-            / (col("na") + col("nb") - coalesce(col("n_common"), lit(0L))), 6)
-            .as("jaccard"),
-          (abs(hll_sketch_estimate(col("ska")) + hll_sketch_estimate(col("skb"))
-            - hll_sketch_estimate(hll_union(col("ska"), col("skb")))
-            - coalesce(col("n_common"), lit(0L)))
-            <= greatest(coalesce(col("n_common"), lit(0L)), lit(1L))
-               .cast("double") * 0.05).as("est_ok"))
-    } finally tu.unpersist(blocking = false)
+    val sk = tu.groupBy("event_type")
+      .agg(hll_sketch_agg(col("user_id")).as("sk"),
+        count(lit(1)).as("nd")) // tu is distinct => count == countDistinct
+    val pairs = sk.select(col("event_type").as("ta"), col("sk").as("ska"),
+        col("nd").as("na"))
+      .join(sk.select(col("event_type").as("tb"), col("sk").as("skb"),
+        col("nd").as("nb")), col("ta") < col("tb"))
+    val exact = tu.select(col("event_type").as("ta"), col("user_id"))
+      .join(tu.select(col("event_type").as("tb"), col("user_id")), Seq("user_id"))
+      .filter(col("ta") < col("tb"))
+      .groupBy("ta", "tb").agg(count(lit(1)).as("n_common"))
+    pairs.join(exact, Seq("ta", "tb"), "left")
+      .select(col("ta"), col("tb"), col("na"), col("nb"),
+        coalesce(col("n_common"), lit(0L)).as("n_common"),
+        round(coalesce(col("n_common"), lit(0L)).cast("double")
+          / (col("na") + col("nb") - coalesce(col("n_common"), lit(0L))), 6)
+          .as("jaccard"),
+        (abs(hll_sketch_estimate(col("ska")) + hll_sketch_estimate(col("skb"))
+          - hll_sketch_estimate(hll_union(col("ska"), col("skb")))
+          - coalesce(col("n_common"), lit(0L)))
+          <= greatest(coalesce(col("n_common"), lit(0L)), lit(1L))
+             .cast("double") * 0.05).as("est_ok"))
   }
 
   /** DuckDB oracle for [[sketchIntersection]] — the exact arms; the

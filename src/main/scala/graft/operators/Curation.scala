@@ -237,38 +237,30 @@ object Curation {
     // probe, the per-range totals, and the final window otherwise each
     // re-run the caller's scan + filter chain (three splits of `text` per
     // row in the curation pipeline) — three corpus passes for one packing.
-    val t0 = docs
-      .select(col("doc_id"),
-        size(split(col("text"), " ", -1)).cast("long").as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // coalesce: max over an EMPTY frame is null (a filter chain keeping
-    // zero docs must yield an empty pack list, not an NPE)
-    val rs =
-      if (rangeSize > 0) rangeSize
-      else math.max(1000L,
-        (t0.agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) + 1) / 1000L)
-    val t = t0.withColumn("rk", expr(s"doc_id div $rs"))
-    // Per-range totals → driver prefix sum. The collect is over ~1000 rows
-    // (NOT the corpus) — the documented metadata-scale exception.
-    val totals = t.groupBy("rk").agg(sum("n_tokens").as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = totals.map { case (rk, s) => val o = acc; acc += s; (rk, o) }
-    val offDf = offsets.toSeq.toDF("rk", "off")
-    val w = Window.partitionBy("rk").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = t.join(broadcast(offDf), "rk")
-      .withColumn("cum", sum(col("n_tokens")).over(w) + col("off"))
-      .withColumn("pack_id", expr(s"CAST((cum - n_tokens) div $budget AS BIGINT)"))
-      .groupBy("pack_id")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens"))
-    // materialize the pack-sized result while the staged projection is
-    // live, then release it (the containmentPairs idiom); the release
-    // rides a finally so a failed materialization cannot strand the
-    // staged corpus-sized blocks for the session lifetime (ADVICE r16)
-    try out.cache().count()
-    finally t0.unpersist(blocking = false)
-    out
+    Tables.withStaged(docs.select(col("doc_id"),
+        size(split(col("text"), " ", -1)).cast("long").as("n_tokens"))) { t0 =>
+      // coalesce: max over an EMPTY frame is null (a filter chain keeping
+      // zero docs must yield an empty pack list, not an NPE)
+      val rs =
+        if (rangeSize > 0) rangeSize
+        else math.max(1000L,
+          (t0.agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) + 1) / 1000L)
+      val t = t0.withColumn("rk", expr(s"doc_id div $rs"))
+      // Per-range totals → driver prefix sum. The collect is over ~1000 rows
+      // (NOT the corpus) — the documented metadata-scale exception.
+      val totals = t.groupBy("rk").agg(sum("n_tokens").as("s"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      var acc = 0L
+      val offsets = totals.map { case (rk, s) => val o = acc; acc += s; (rk, o) }
+      val offDf = offsets.toSeq.toDF("rk", "off")
+      val w = Window.partitionBy("rk").orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      Tables.materialize(t.join(broadcast(offDf), "rk")
+        .withColumn("cum", sum(col("n_tokens")).over(w) + col("off"))
+        .withColumn("pack_id", expr(s"CAST((cum - n_tokens) div $budget AS BIGINT)"))
+        .groupBy("pack_id")
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens")))
+    }
   }
 
   /** Train/eval DECONTAMINATION — the overlap check every serious
@@ -2244,12 +2236,9 @@ object Curation {
     // stage the per-row chunk arrays ONCE (the kernel would otherwise
     // evaluate per consumer): per-doc totals come straight off the array
     // (no shuffle); only the chunk census — ~1/16 of the token stream —
-    // is exploded. persist, not localCheckpoint: the
-    // [[Dedup.containmentPairs]] idiom.
-    val perRow = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), chunkArray(w).as("chunks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // is exploded.
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), chunkArray(w).as("chunks"))) { perRow =>
       val perDoc = perRow.select(col("doc_id"),
         expr("CAST(aggregate(chunks, 0L, (a, c) -> a + c.n_tok) AS BIGINT)")
           .as("n_tokens"),
@@ -2267,9 +2256,8 @@ object Curation {
           coalesce(col("dup_chunks"), lit(0L)).as("dup_chunks"),
           round(coalesce(col("dup_chunks"), lit(0L)).cast("double")
             / col("n_chunks"), 6).as("dup_ratio"))
-      out.cache().count()
-      out
-    } finally perRow.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** DuckDB oracle for [[cdcChunks]] — same rolling boundary rule, same
@@ -2368,13 +2356,11 @@ object Curation {
     // the cross-document census, staged once for its two consumers.
     // stage perRow: the kernel would otherwise evaluate TWICE (once for
     // the exploded census, once for the per-doc sizes)
-    val perRow = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), winnowArray(k, ww).as("fps"),
-        expr(s"""CAST(greatest(size(split(text, ' ', -1)) - ${k - 1}, 0)
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), winnowArray(k, ww).as("fps"),
+          expr(s"""CAST(greatest(size(split(text, ' ', -1)) - ${k - 1}, 0)
                  AS BIGINT)""").as("n_grams"))
-      .where(col("n_grams") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        .where(col("n_grams") > 0)) { perRow =>
       val fps = perRow.select(col("doc_id"), explode(col("fps")).as("fp"))
       val shared = fps.groupBy("fp")
         .agg(countDistinct(col("doc_id")).as("nd")).where(col("nd") >= 2)
@@ -2387,9 +2373,8 @@ object Curation {
         .select(col("doc_id"), col("n_grams"), col("n_fps"),
           coalesce(col("shared_fps"), lit(0L)).as("shared_fps"),
           round(col("n_fps").cast("double") / col("n_grams"), 6).as("density"))
-      out.cache().count()
-      out
-    } finally perRow.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** WINNOWING PAIR MINING — the MOSS detector end-to-end: rank document
@@ -2410,11 +2395,9 @@ object Curation {
                   maxDf: Int = 50, minShared: Int = 2): DataFrame = {
     // stage perRow once: the kernel feeds the exploded census AND the
     // per-doc sizes (same staging rationale as [[winnowing]])
-    val perRow = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), winnowArray(k, ww).as("fps"))
-      .where(size(col("fps")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), winnowArray(k, ww).as("fps"))
+        .where(size(col("fps")) > 0)) { perRow =>
       val exploded = perRow.select(col("doc_id"), explode(col("fps")).as("fp"))
       val dfc = exploded.groupBy("fp").agg(count(lit(1)).as("df"))
       val kept = exploded
@@ -2433,9 +2416,8 @@ object Curation {
         .select(col("da"), col("db"), col("n_shared"),
           round(col("n_shared").cast("double") / least(col("na"), col("nb")), 6)
             .as("overlap"))
-      out.cache().count()
-      out
-    } finally perRow.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** DuckDB oracle for [[winnowPairs]] — same kernel semantics (via the
@@ -2518,14 +2500,12 @@ object Curation {
   def dsirWeights(spark: SparkSession, dir: String, buckets: Int = 1024,
                   targetLang: String = "en", k: Int = 100): DataFrame = {
     require(buckets > 0 && k > 0, s"buckets=$buckets k=$k must be positive")
-    val pos = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), col("lang"),
-        explode(TextAnalysis.gramList(2)).as("bg"))
-      .select(col("doc_id"), col("lang"),
-        (conv(substring(md5(col("bg")), 1, 8), 16, 10).cast("long") % buckets)
-          .as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), col("lang"),
+          explode(TextAnalysis.gramList(2)).as("bg"))
+        .select(col("doc_id"), col("lang"),
+          (conv(substring(md5(col("bg")), 1, 8), 16, 10).cast("long") % buckets)
+            .as("b"))) { pos =>
       // rc and tc in ONE pass over pos (guide §2.4: two aggregations keyed
       // the same way share one exchange): the conditional count equals the
       // old filter→count→left-join→coalesce chain row for row — a bucket
@@ -2547,9 +2527,8 @@ object Curation {
         .limit(k)
         .select(col("doc_id"), col("lang"), col("n_bigrams"),
           round(col("w_exact").cast("double"), 6).as("dsir_weight"))
-      out.cache().count()
-      out
-    } finally pos.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** DuckDB oracle for [[dsirWeights]] — same bigram construction as the

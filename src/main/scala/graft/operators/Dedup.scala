@@ -551,7 +551,6 @@ object Dedup {
                                   minBands: Int, maxBucket: Int, estJaccard: Double,
                                   shingleK: Int, bands: Int,
                                   rowsPerBand: Int): DataFrame = {
-    graft.functions.ArrayAgreeCount.register(spark)
     val nHashes = bands * rowsPerBand
     val (_, profile) = signatureStore(spark, dir, shingleK, bands, rowsPerBand)
     val cand = candidatePairs(spark, dir, minBands, maxBucket, shingleK, bands, rowsPerBand)
@@ -581,7 +580,6 @@ object Dedup {
   private def jaccardVerify(spark: SparkSession, dir: String, pairs: DataFrame,
                             aCol: String, bCol: String, shingleK: Int,
                             threshold: Double): DataFrame = {
-    graft.functions.ArrayIntersectCount.register(spark)
     // fanOut: the per-doc shingle-set kernel runs once per join side over
     // the single-row-group scan — serial without the spread
     val sets = Tables.fanOut(Tables.documents(spark, dir))
@@ -616,7 +614,6 @@ object Dedup {
                          shingleK: Int = 1,
                          bands: Int = NumBands,
                          rowsPerBand: Int = RowsPerBand): DataFrame = {
-    graft.functions.ArrayAgreeCount.register(spark)
     val nHashes = bands * rowsPerBand
     // One metadata-scale action to derive the split id (parquet max stat).
     val splitFrom = Tables.documents(spark, dir)
@@ -767,19 +764,12 @@ object Dedup {
                     bands: Int = NumBands,
                     rowsPerBand: Int = RowsPerBand): DataFrame = {
     // pairs feed four consumers (degrees, orientation, the per-edge
-    // intersect probe, the edge count) and deg feeds three — spillable
-    // persist (the containmentPairs idiom: recomputable on executor
-    // loss, never pinned like localCheckpoint), released below
-    val pairs = nearDupPairs(spark, dir, threshold, minBands, maxBucket,
-      estJaccard, shingleK, bands, rowsPerBand)
-      .select("doc_a", "doc_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val deg = pairs.select(col("doc_a").as("doc_id"))
-        .union(pairs.select(col("doc_b").as("doc_id")))
-        .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    // intersect probe, the edge count) and deg feeds three
+    Tables.withStaged(nearDupPairs(spark, dir, threshold, minBands, maxBucket,
+        estJaccard, shingleK, bands, rowsPerBand).select("doc_a", "doc_b")) { pairs =>
+      Tables.withStaged(pairs.select(col("doc_a").as("doc_id"))
+          .union(pairs.select(col("doc_b").as("doc_id")))
+          .groupBy("doc_id").agg(count(lit(1)).as("deg"))) { deg =>
         // materialize the 1-row result to a LOCAL relation before the
         // inputs are released, so consumers never recompute — and nothing
         // stays behind in the block manager after the call returns
@@ -788,8 +778,8 @@ object Dedup {
         val out = triangleCountFrom(spark, pairs, deg)
         val rows = out.collect() // exactly 1 audit row by construction
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      } finally deg.unpersist(blocking = false)
-    } finally pairs.unpersist(blocking = false)
+      }
+    }
   }
 
   private def triangleCountFrom(spark: SparkSession, pairs: DataFrame,
@@ -816,7 +806,6 @@ object Dedup {
     // per EDGE row — on the near-dup fixture at sf0.1 that is ~20k kernel
     // calls instead of a 19M-row wedge shuffle + semi-join probe,
     // measured 6.4 s → <1 s with identical counts.
-    graft.functions.SortedIntersectCount.register(spark)
     val adj = oriented.groupBy("src")
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
     val tri = oriented
@@ -1362,7 +1351,6 @@ object Dedup {
     * is exactly oracle-checkable. */
   def fuzzyNameMatch(spark: SparkSession, dir: String,
                      maxDist: Int = 2): DataFrame = {
-    graft.functions.LevenshteinWithin.register(spark)
     val c = Tables.customer(spark, dir).select("c_custkey", "c_nationkey", "c_name")
     val a = c.select(col("c_nationkey").as("block"),
       col("c_custkey").as("id_a"), col("c_name").as("name_a"))
@@ -1531,21 +1519,14 @@ object Dedup {
                        maxDf: Int = 50, threshold: Double = 0.8): DataFrame = {
     // stage the exploded shingles ONCE: three consumers (sizes, df, the
     // join input) would otherwise re-run the explode+distinct scan.
-    // persist, not localCheckpoint: checkpointed partitions pin executor
-    // storage AND cannot recompute on executor loss — the spillable,
-    // lineage-preserving persist (memory while it fits, disk when it
-    // doesn't, rebuildable from the scan if an executor dies) is the
-    // survivable idiom at 100 TB.
     // DICTIONARY-ENCODE the shingle right at the explode: every
     // downstream stage (df count, the capped self-join, the pair
     // aggregate) shuffles and compares 8-byte longs instead of ~6-word
     // text (collision bound vocab²/2⁶⁴ — the same accepted hash regime
     // as the MinHash family and the ppjoin verify sets).
-    val sh = graft.Tables.fanOut(graft.Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(shingleSetK(k)).as("s"))
-      .select(col("doc_id"), xxhash64(col("s")).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), explode(shingleSetK(k)).as("s"))
+        .select(col("doc_id"), xxhash64(col("s")).as("shingle"))) { sh =>
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val dfCount = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       val kept = sh.join(dfCount.filter(col("df").between(2, maxDf)), "shingle")
@@ -1561,17 +1542,8 @@ object Dedup {
         .filter(col("c_raw") >= threshold) // threshold on the RAW ratio (oracle-identical), round only for display
         .select(col("da"), col("db"), col("n_common"),
           round(col("c_raw"), 6).as("containment"))
-      // materialize the pair-sized result while the shingle stage is
-      // live, then release the corpus-sized blocks eagerly — callers get
-      // the cached small relation, not a lineage over freed storage
-      // materialize the pair-sized result while the shingle stage is
-      // live, then release the corpus-sized blocks deterministically —
-      // at 100 TB a stage this size must not wait for driver GC to free
-      // it. Costs one result-sized pass (~0.5 s at sf0.1); callers get
-      // the cached small relation, not a lineage over freed storage.
-      out.cache().count()
-      out
-    } finally sh.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   def containmentPairsOracleSql(k: Int = 5, maxDf: Int = 50,
@@ -1666,7 +1638,6 @@ object Dedup {
                         shingleK: Int = 1,
                         bands: Int = NumBands,
                         rowsPerBand: Int = RowsPerBand): DataFrame = {
-    graft.functions.ArrayAgreeCount.register(spark)
     val nHashes = bands * rowsPerBand
     val pairs = nearDupPairs(spark, dir, threshold, minBands, maxBucket,
       estJaccard, shingleK, bands, rowsPerBand)
@@ -1876,18 +1847,15 @@ object Dedup {
     * is the audit one runs on samples. */
   def sourceOverlapSketch(spark: SparkSession, dir: String,
                           nHashes: Int = NumBands * RowsPerBand): DataFrame = {
-    graft.functions.ArrayAgreeCount.register(spark)
     // distinct (source, shingle): one exploded pass staged for the
     // sizes and exact-intersection consumers (the audit arm). NO fanOut
     // (r17, measured): round-robin spreading before the .distinct()
     // regressed 1.45/1.33 -> 1.93/1.66 s at sf0.1/32 cores — the same
     // partial-dedup-locality story as approxDistinct (a doc's duplicate
     // (source, shingle) rows dedup best inside one scan task).
-    val sh = Tables.documents(spark, dir)
-      .select(col("source"), explode(shingleSetK(1)).as("shingle"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Tables.withStaged(Tables.documents(spark, dir)
+        .select(col("source"), explode(shingleSetK(1)).as("shingle"))
+        .distinct()) { sh =>
       // Per-SOURCE sketch = elementwise MIN over the per-DOC MinHash
       // signatures (the union property: min over docs of per-doc mins =
       // min over the source's shingle-set union — within-source shingle
@@ -1939,9 +1907,8 @@ object Dedup {
             .as("exact_jaccard"))
         .withColumn("est_ok",
           abs(col("est_jaccard") - col("exact_jaccard")) <= 0.15)
-      out.cache().count()
-      out
-    } finally sh.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** DuckDB oracle for [[sourceOverlapSketch]] — same distinct

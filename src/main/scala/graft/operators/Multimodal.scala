@@ -586,12 +586,9 @@ object Multimodal {
   def imageNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4 bands only guarantee recall for hamming <= 3")
     // stage the hashes ONCE: both join sides consume them, and at 100 TB
-    // re-deriving a side means re-decoding every image — persist the
-    // 16-byte/image relation (spillable, lineage-preserving) instead.
-    val hashes = perceptualHash(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try imageNearDupFrom(hashes, maxHamming)
-    finally hashes.unpersist(blocking = false)
+    // re-deriving a side means re-decoding every image — stage the
+    // 16-byte/image relation instead.
+    Tables.withStaged(perceptualHash(spark, dir))(imageNearDupFrom(_, maxHamming))
   }
 
   private def imageNearDupFrom(hashes: DataFrame, maxHamming: Int): DataFrame = {
@@ -602,17 +599,13 @@ object Multimodal {
       col("phash_hi").as("hi_a"), col("phash_lo").as("lo_a"))
     val b = ph.select(col("band"), col("doc_id").as("b"),
       col("phash_hi").as("hi_b"), col("phash_lo").as("lo_b"))
-    val out = a.join(b, Seq("band")).filter(col("a") < col("b"))
+    Tables.materialize(a.join(b, Seq("band")).filter(col("a") < col("b"))
       .select(col("a"), col("b"),
         (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
           .cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-      .orderBy("a", "b")
-    // materialize the pair-sized result while the hash stage is live,
-    // then release it deterministically (same idiom as containmentPairs)
-    out.cache().count()
-    out
+      .orderBy("a", "b"))
   }
 
   /** DuckDB oracle for [[imageNearDup]] — brute-force all-pairs hamming
@@ -864,11 +857,9 @@ object Multimodal {
     * (a, b, hamming = min qualifying frame-pair distance). */
   def videoNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4 bands only guarantee recall for hamming <= 3")
-    val ph = videoFramePHash(spark, dir)
-      .select(col("doc_id"), col("phash_hi"), col("phash_lo"),
-        explode(phashBands(col("phash_hi"), col("phash_lo"))).as("band"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Tables.withStaged(videoFramePHash(spark, dir)
+        .select(col("doc_id"), col("phash_hi"), col("phash_lo"),
+          explode(phashBands(col("phash_hi"), col("phash_lo"))).as("band"))) { ph =>
       val a = ph.select(col("band"), col("doc_id").as("a"),
         col("phash_hi").as("hi_a"), col("phash_lo").as("lo_a"))
       val b = ph.select(col("band"), col("doc_id").as("b"),
@@ -880,9 +871,8 @@ object Multimodal {
         .filter(col("d") <= maxHamming)
         .groupBy("a", "b").agg(min(col("d")).as("hamming"))
         .orderBy("a", "b")
-      out.cache().count()
-      out
-    } finally ph.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** DuckDB oracle for [[videoNearDup]] — brute force over every frame
@@ -982,10 +972,7 @@ object Multimodal {
     * modalities. Exact at hamming ≤ 3 by the same pigeonhole. */
   def audioNearDup(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4 bands only guarantee recall for hamming <= 3")
-    val hashes = audioFingerprint(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try imageNearDupFrom(hashes, maxHamming)
-    finally hashes.unpersist(blocking = false)
+    Tables.withStaged(audioFingerprint(spark, dir))(imageNearDupFrom(_, maxHamming))
   }
 
   /** DuckDB oracle for [[audioNearDup]] — brute-force all-pairs hamming

@@ -133,7 +133,6 @@ object PrefixJoin {
     // allocation-free sorted-merge kernel over the index's
     // dictionary-encoded sets (sorted longs: integer compares,
     // 8 bytes/token; collision bound vocab²/2⁶⁴, the MinHash regime)
-    graft.functions.SortedIntersectCount.register(spark)
     cand
       .join(sets.select(col("doc_id").as("sa"), col("tsh").as("tsa"),
         col("sz").as("sza")), "sa")
@@ -204,7 +203,6 @@ object PrefixJoin {
     val cand = newPre.join(corpusPre,
         candCondition(newPre("tok"), corpusPre("tok"), threshold))
       .select("new_doc", "corpus_doc").distinct()
-    graft.functions.SortedIntersectCount.register(spark)
     cand
       .join(sets.select(col("doc_id").as("new_doc"), col("tsh").as("tsa"),
         col("sz").as("sza")), "new_doc")

@@ -42,10 +42,7 @@ object Similarity {
   /** Fused single-pass cosine via the custom codegen'd Catalyst
     * expression [[graft.functions.CosineSimilarity]] — no intermediate
     * zipped array, no per-element boxing. */
-  private def cosine(spark: SparkSession): Column = {
-    graft.functions.CosineSimilarity.register(spark)
-    expr("cosine_sim(emb, qemb)")
-  }
+  private def cosine: Column = expr("cosine_sim(emb, qemb)")
 
   /** Brute-force exact top-k cosine neighbors for queries vec_id < 10. */
   def topkCosine(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
@@ -54,7 +51,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(spark).as("sim_raw"))
+        cosine.as("sim_raw"))
     val w = Window.partitionBy("query_id").orderBy(desc("sim_raw"), asc("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -89,7 +86,7 @@ object Similarity {
     val scored = e.join(broadcast(q),
         col("label") === col("qlabel") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qlabel").as("label"),
-        col("vec_id").as("neighbor_id"), cosine(spark).as("sim_raw"))
+        col("vec_id").as("neighbor_id"), cosine.as("sim_raw"))
     val w = Window.partitionBy("query_id").orderBy(desc("sim_raw"), asc("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -189,7 +186,6 @@ object Similarity {
 
   private def computeEmbedNearDup(spark: SparkSession, dir: String,
                                   threshold: Double): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e0 = embDouble(spark, dir)
     val (n, dim) = corpusShape(e0)
     val e = e0.withColumn("bucket", bucketCol(bitsFor(n), dim))
@@ -344,7 +340,7 @@ object Similarity {
     val annScored = e.join(probes, Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(spark).as("sim_raw"))
+        cosine.as("sim_raw"))
       .distinct()
     recallVsBrute(spark, dir, annScored, k, minRecall)
   }
@@ -474,12 +470,11 @@ object Similarity {
     assigned.join(probes, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(spark).as("sim_raw"))
+        cosine.as("sim_raw"))
   }
 
   def annIvfRecall(spark: SparkSession, dir: String, k: Int = 10,
                    minRecall: Double = 0.6, lloydIters: Int = 0): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e0 = embDouble(spark, dir)
     val (n, _) = corpusShape(e0)
     val nCells = cellsFor(n)
@@ -563,7 +558,6 @@ object Similarity {
     * rebuilds the identical cells/probes/candidates and the rows
     * hash-match exactly — approximate search, exactly verified. */
   def annIvfTopk(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e0 = embDouble(spark, dir)
     val (n, _) = corpusShape(e0)
     val nCells = cellsFor(n)
@@ -864,8 +858,6 @@ object Similarity {
     * fused scores — are fully deterministic. */
   def hybridRrf(spark: SparkSession, dir: String, k: Int = 20,
                 kOut: Int = 10, c: Int = 60): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.ArrayIntersectCount.register(spark)
     // fanOut: the nested-loop query×candidate scoring (cosine + token
     // intersect per pair) otherwise inherits the single-row-group scan's
     // ONE partition and runs serial
@@ -971,7 +963,6 @@ object Similarity {
     * panel at 100 TB) — the corpus-sized side stays a broadcast-scored
     * scan, never an all-pairs join. */
   def retrievalEval(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e0 = embDouble(spark, dir)
     val q = e0.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
@@ -1041,7 +1032,6 @@ object Similarity {
     * corpus-linear scored scan; the two "hardest" picks are one ranked
     * window over the scored rows — never an all-pairs product. */
   def tripletMining(spark: SparkSession, dir: String, nAnchors: Int = 10): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"), col("label"))
     val anchors = e.filter(col("vec_id") < nAnchors)
@@ -1189,7 +1179,6 @@ object Similarity {
     * index. */
   private[graft] def ensureIvfIndex(spark: SparkSession, dir: String): String =
     Dedup.ensureArtifact(s"ivfidx-${dir.replace('/', '_')}") { tmp =>
-      graft.functions.CosineSimilarity.register(spark)
       val e0 = embDouble(spark, dir)
       val splitFrom = e0.agg(max(col("vec_id"))).head().getLong(0) * 9 / 10
       val old = e0.filter(col("vec_id") < splitFrom)
@@ -1209,7 +1198,6 @@ object Similarity {
     * aggregates. */
   private[graft] def ivfServingIndex(spark: SparkSession,
                                      dir: String): (Long, DataFrame, DataFrame, Int) = {
-    graft.functions.CosineSimilarity.register(spark)
     val idx = ensureIvfIndex(spark, dir)
     val e0 = embDouble(spark, dir)
     val splitFrom = e0.agg(max(col("vec_id"))).head().getLong(0) * 9 / 10
@@ -1332,42 +1320,34 @@ object Similarity {
     * the corpus, so the stage scales with the result set. */
   def rerankCrossEncoder(spark: SparkSession, dir: String, k: Int = 20,
                          kOut: Int = 10, c: Int = 60): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.ArrayIntersectCount.register(spark)
     val first = hybridRrf(spark, dir, k, kOut, c)
       .select(col("query_id"), col("cand_id"), col("rank").as("first_stage_rank"))
     // Stage the feature table once (it feeds BOTH the candidate side and
     // the broadcast query side — the bigram-set kernel otherwise runs
     // twice), fanned out of the single-row-group scan.
-    val feat = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), Dedup.shingleSetK(2).as("bset"))
-      .join(embDouble(spark, dir), col("doc_id") === col("vec_id"))
-      .select(col("doc_id"), col("bset"), col("emb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scored = feat
-      .join(broadcast(first), col("doc_id") === col("cand_id"))
-      .join(broadcast(
-        feat.join(broadcast(first.select("query_id").distinct()),
-          col("doc_id") === col("query_id"))
-          .select(col("query_id"), col("bset").as("qbset"), col("emb").as("qemb"))),
-        "query_id")
-      .withColumn("bi", expr("array_intersect_count(bset, qbset)").cast("double"))
-      .withColumn("bu",
-        (size(col("bset")) + size(col("qbset"))).cast("double") - col("bi"))
-      .withColumn("bjacc",
-        when(col("bu") > 0, col("bi") / col("bu")).otherwise(lit(0.0)))
-      .withColumn("ce_score",
-        round(lit(0.5) * expr("cosine_sim(emb, qemb)") + lit(0.5) * col("bjacc"), 6))
-    val w = Window.partitionBy("query_id").orderBy(desc("ce_score"), asc("cand_id"))
-    val out = scored.withColumn("rerank_pos", row_number().over(w))
-      .select(col("query_id"), col("cand_id"), col("first_stage_rank"),
-        col("rerank_pos"), col("ce_score"))
-    // materialize the rerank result while the staged features are live,
-    // then release them (the containmentPairs idiom); finally-scoped so a
-    // failed materialization cannot strand the staged blocks (ADVICE r16)
-    try out.cache().count()
-    finally feat.unpersist(blocking = false)
-    out
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), Dedup.shingleSetK(2).as("bset"))
+        .join(embDouble(spark, dir), col("doc_id") === col("vec_id"))
+        .select(col("doc_id"), col("bset"), col("emb"))) { feat =>
+      val scored = feat
+        .join(broadcast(first), col("doc_id") === col("cand_id"))
+        .join(broadcast(
+          feat.join(broadcast(first.select("query_id").distinct()),
+            col("doc_id") === col("query_id"))
+            .select(col("query_id"), col("bset").as("qbset"), col("emb").as("qemb"))),
+          "query_id")
+        .withColumn("bi", expr("array_intersect_count(bset, qbset)").cast("double"))
+        .withColumn("bu",
+          (size(col("bset")) + size(col("qbset"))).cast("double") - col("bi"))
+        .withColumn("bjacc",
+          when(col("bu") > 0, col("bi") / col("bu")).otherwise(lit(0.0)))
+        .withColumn("ce_score",
+          round(lit(0.5) * expr("cosine_sim(emb, qemb)") + lit(0.5) * col("bjacc"), 6))
+      val w = Window.partitionBy("query_id").orderBy(desc("ce_score"), asc("cand_id"))
+      Tables.materialize(scored.withColumn("rerank_pos", row_number().over(w))
+        .select(col("query_id"), col("cand_id"), col("first_stage_rank"),
+          col("rerank_pos"), col("ce_score")))
+    }
   }
 
   /** DuckDB oracle for [[rerankCrossEncoder]] — the shared RRF CTE chain
@@ -1434,14 +1414,6 @@ object Similarity {
               acc + CASE WHEN bit_count(i & j) % 2 = 1
                          THEN -element_at(emb, j + 1)
                          ELSE element_at(emb, j + 1) END) / $invRoot)""")
-    // The O(dim²)-per-vector Hadamard rotation has TWO consumers (its mse
-    // arm and the norm-drift audit), as does the plain corpus — stage each
-    // once, fanned across the cores (the single-row-group embeddings scan
-    // otherwise rotates the whole corpus serially, twice).
-    val e0 = graft.Tables.fanOut(e0raw)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rot = e0.select(col("vec_id"), rotExpr.as("emb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val subDim = dim / PqM
     // mean total quantization L2² for one space: encode against the
     // first-PqK-rows codebook of THAT space, min per (vector, subspace)
@@ -1463,26 +1435,25 @@ object Similarity {
         .agg(count(lit(1)).as("n_vecs"),
           (sum(col("dist")).cast("double") / count(lit(1))).as("mse"))
     }
-    val normDrift = e0.select(col("vec_id"),
-        expr("sqrt(aggregate(emb, 0D, (acc, x) -> acc + x * x))").as("n_plain"))
-      .join(rot.select(col("vec_id"),
-        expr("sqrt(aggregate(emb, 0D, (acc, x) -> acc + x * x))").as("n_rot")),
-        "vec_id")
-      .agg(max(abs(col("n_rot") - col("n_plain"))).as("drift"))
-      .select((col("drift") < 1e-9).as("norm_ok"))
-    val out = mse(e0).select(col("n_vecs"), round(col("mse"), 6).as("mse_plain"))
-      .crossJoin(mse(rot).select(round(col("mse"), 6).as("mse_rotated")))
-      .crossJoin(normDrift)
-    // materialize the 1-row audit while the staged frames are live, then
-    // release the corpus-sized blocks (the containmentPairs idiom);
-    // finally-scoped so a failed materialization cannot strand them
-    // (ADVICE r16)
-    try out.cache().count()
-    finally {
-      rot.unpersist(blocking = false)
-      e0.unpersist(blocking = false)
+    // The O(dim²)-per-vector Hadamard rotation has TWO consumers (its mse
+    // arm and the norm-drift audit), as does the plain corpus — stage each
+    // once, fanned across the cores (the single-row-group embeddings scan
+    // otherwise rotates the whole corpus serially, twice).
+    Tables.withStaged(Tables.fanOut(e0raw)) { e0 =>
+      Tables.withStaged(e0.select(col("vec_id"), rotExpr.as("emb"))) { rot =>
+        val normDrift = e0.select(col("vec_id"),
+            expr("sqrt(aggregate(emb, 0D, (acc, x) -> acc + x * x))").as("n_plain"))
+          .join(rot.select(col("vec_id"),
+            expr("sqrt(aggregate(emb, 0D, (acc, x) -> acc + x * x))").as("n_rot")),
+            "vec_id")
+          .agg(max(abs(col("n_rot") - col("n_plain"))).as("drift"))
+          .select((col("drift") < 1e-9).as("norm_ok"))
+        Tables.materialize(
+          mse(e0).select(col("n_vecs"), round(col("mse"), 6).as("mse_plain"))
+            .crossJoin(mse(rot).select(round(col("mse"), 6).as("mse_rotated")))
+            .crossJoin(normDrift))
+      }
     }
-    out
   }
 
   /** DuckDB oracle for [[opqRotationAudit]] — same Hadamard signs, same

@@ -296,7 +296,6 @@ object TextAnalysis {
     * are codegen'd built-in regexp_replace/length. Narrow scan + one
     * partial-aggregated groupBy over a tiny (lang, script) key space. */
   def scriptProfile(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ScriptClass.register(spark)
     Tables.fanOut(Tables.documents(spark, dir))
       .select(col("lang"), expr("script_class(text)").as("script"),
         length(regexp_replace(col("text"), HangulRe, "")).as("hc"),
@@ -392,24 +391,15 @@ object TextAnalysis {
     // counts c(w1·) aggregate from the bigram TYPE counts (Σ_w2 c(w1w2)
     // — vocabulary-sized input, not another corpus pass), and N is the
     // sum of the unigram counts rather than a second token explode.
-    // persist, not localCheckpoint, for the corpus-sized stage (the
-    // [[graft.operators.Dedup.containmentPairs]] idiom — spillable and
-    // recomputable on executor loss).
-    val bg = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(gramList(2)).as("bg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cu = Tables.fanOut(Tables.documents(spark, dir))
-        .select(explode(tokens).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cu"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), explode(gramList(2)).as("bg"))) { bg =>
+      Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+          .select(explode(tokens).as("token"))
+          .groupBy("token").agg(count(lit(1)).as("cu"))) { cu =>
         val total = cu.agg(sum(col("cu")).as("total"))
-        val cbg = bg.groupBy("bg").agg(count(lit(1)).as("cbg"))
-          .withColumn("w1", expr("split(bg, ' ')[0]"))
-          .withColumn("w2", expr("split(bg, ' ')[1]"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        Tables.withStaged(bg.groupBy("bg").agg(count(lit(1)).as("cbg"))
+            .withColumn("w1", expr("split(bg, ' ')[0]"))
+            .withColumn("w2", expr("split(bg, ' ')[1]"))) { cbg =>
           val ch = cbg.groupBy("w1").agg(sum(col("cbg")).as("ch"))
           val ptab = cbg
             .join(ch, "w1")
@@ -424,11 +414,10 @@ object TextAnalysis {
             .agg(count(lit(1)).as("n_bigrams"),
               round(sum(col("lp")).cast("double") / count(lit(1)), 6)
                 .as("mean_logprob2"))
-          out.cache().count()
-          out
-        } finally cbg.unpersist(blocking = false)
-      } finally cu.unpersist(blocking = false)
-    } finally bg.unpersist(blocking = false)
+          Tables.materialize(out)
+        }
+      }
+    }
   }
 
   /** DuckDB oracle for [[bigramLogProb]] — same counts, same interpolation
@@ -1046,7 +1035,6 @@ object TextAnalysis {
     * The oracle recomputes the identical formula from a real char unnest,
     * so the HOF pipeline is pinned against a relational ground truth. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CharEntropy.register(spark)
     // no fanOut: the shuffle-free plan is the pinned contract here
     // (TextAnalysisSpec) — the codegen expression's whole point is
     // scoring inline in the scan
@@ -1128,18 +1116,12 @@ object TextAnalysis {
                 discount: Double = 0.75): DataFrame = {
     // the corpus-bigram stream feeds the type counts AND the final
     // per-doc join; the TYPE table feeds all four KN statistics — stage
-    // both once with spillable, lineage-preserving persist (the
-    // [[graft.operators.Dedup.containmentPairs]] idiom; localCheckpoint
-    // pins executor storage and cannot recompute on executor loss)
-    val bg = Tables.fanOut(Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(gramList(2)).as("bg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cbg = bg.groupBy("bg").agg(count(lit(1)).as("cbg"))
-        .withColumn("w1", expr("split(bg, ' ')[0]"))
-        .withColumn("w2", expr("split(bg, ' ')[1]"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+    // both once
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+        .select(col("doc_id"), explode(gramList(2)).as("bg"))) { bg =>
+      Tables.withStaged(bg.groupBy("bg").agg(count(lit(1)).as("cbg"))
+          .withColumn("w1", expr("split(bg, ' ')[0]"))
+          .withColumn("w2", expr("split(bg, ' ')[1]"))) { cbg =>
         val hist = cbg.groupBy("w1")
           .agg(sum(col("cbg")).as("ch"), count(lit(1)).as("n1f"))
         val cont = cbg.groupBy("w2").agg(count(lit(1)).as("n1b"))
@@ -1159,10 +1141,9 @@ object TextAnalysis {
           .agg(count(lit(1)).as("n_bigrams"),
             round(sum(col("lp")).cast("double") / count(lit(1)), 6)
               .as("mean_logprob_kn"))
-        out.cache().count()
-        out
-      } finally cbg.unpersist(blocking = false)
-    } finally bg.unpersist(blocking = false)
+        Tables.materialize(out)
+      }
+    }
   }
 
   /** DuckDB oracle for [[knLogProb]] — same counts, same discount
@@ -1226,11 +1207,9 @@ object TextAnalysis {
     val dfc = tok.groupBy("token").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf))
     val nDocs = Tables.documents(spark, dir).agg(count(lit(1)).as("n_docs"))
-    val w = tok.join(dfc, "token").crossJoin(nDocs)
-      .select(col("doc_id"), col("token"),
-        (col("cnt") * log(col("n_docs").cast("double") / col("df"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Tables.withStaged(tok.join(dfc, "token").crossJoin(nDocs)
+        .select(col("doc_id"), col("token"),
+          (col("cnt") * log(col("n_docs").cast("double") / col("df"))).as("w"))) { w =>
       val norms = w.groupBy("doc_id")
         .agg(sqrt(sum((col("w") * col("w")).cast("decimal(28,12)"))
           .cast("double")).as("norm"))
@@ -1248,9 +1227,8 @@ object TextAnalysis {
         .filter(col("c_raw") >= threshold)
         .select(col("da"), col("db"), col("n_shared_terms"),
           round(col("c_raw"), 6).as("cosine"))
-      out.cache().count()
-      out
-    } finally w.unpersist(blocking = false)
+      Tables.materialize(out)
+    }
   }
 
   /** DuckDB oracle for [[tfidfCosinePairs]] — same df-capped feature

@@ -913,12 +913,10 @@ object StreamingOps {
                             threshold: Double = 0.95): DataFrame = {
     import graft.operators.Dedup
     // the whole query — static sides included — lives on the isolated
-    // state session, so the kernel functions register THERE (newSession
-    // gets a fresh FunctionRegistry; extension-injected functions carry,
-    // explicit registrations do not)
+    // state session; the kernel functions are there already (newSession
+    // gets a fresh FunctionRegistry, but extension-injected functions
+    // carry over)
     val ss = stateSession(spark)
-    graft.functions.ArrayAgreeCount.register(ss)
-    graft.functions.ArrayIntersectCount.register(ss)
     val splitFrom = graft.Tables.documents(spark, dir)
       .agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
     // static sides: the PERSISTED corpus signature store (parquet, built

@@ -31,7 +31,6 @@ object PairsDebug {
     val cand = Dedup.candidatePairs(spark, dir)
     timed("candidates")(System.err.println("candidates: " + cand.count()))
 
-    graft.functions.ArrayAgreeCount.register(spark)
     val mh = profile.select("doc_id", "mh")
     val agreed = cand
       .join(mh.select(col("doc_id").as("doc_a"), col("mh").as("mh_a")), "doc_a")
@@ -43,7 +42,6 @@ object PairsDebug {
     // verify stage, inlined from jaccardVerify (private), timed alone on
     // the materialized agreed set so its cost is not conflated with the
     // upstream band-join recompute
-    graft.functions.ArrayIntersectCount.register(spark)
     val agreedM = agreed.localCheckpoint()
     val sets = Tables.documents(spark, dir)
       .select(col("doc_id"), expr("array_distinct(split(text, ' ', -1))").as("sset"))

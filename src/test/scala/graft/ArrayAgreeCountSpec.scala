@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.ArrayAgreeCount
 
 /** The custom positional-agreement expression (the MinHash-agreement
   * kernel of Dedup.nearDupPairs): semantics, edge cases, codegen/eval
@@ -12,7 +11,6 @@ class ArrayAgreeCountSpec extends AnyFunSuite {
 
   private def agree(a: Seq[String], b: Seq[String]): Int = {
     import spark.implicits._
-    ArrayAgreeCount.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(expr("array_agree_count(a, b)")).head().getInt(0)
   }
@@ -31,7 +29,6 @@ class ArrayAgreeCountSpec extends AnyFunSuite {
 
   test("null array yields null; null elements never agree") {
     import spark.implicits._
-    ArrayAgreeCount.register(spark)
     val r = Seq((Seq("x"), Option.empty[Seq[String]]))
       .toDF("a", "b").select(expr("array_agree_count(a, b)")).head()
     assert(r.isNullAt(0))

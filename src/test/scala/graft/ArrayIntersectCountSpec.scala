@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.ArrayIntersectCount
 
 /** The custom distinct-intersection-count expression (the exact-Jaccard
   * kernel of the dedup verify stage): semantics, duplicates, nulls, and
@@ -12,7 +11,6 @@ class ArrayIntersectCountSpec extends AnyFunSuite {
 
   private def inter(a: Seq[String], b: Seq[String]): Int = {
     import spark.implicits._
-    ArrayIntersectCount.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(expr("array_intersect_count(a, b)")).head().getInt(0)
   }
@@ -28,7 +26,6 @@ class ArrayIntersectCountSpec extends AnyFunSuite {
   test("duplicates count once; null elements ignored; null array yields null") {
     import spark.implicits._
     assert(inter(Seq("x", "x", "y"), Seq("x", "x", "x")) == 1)
-    ArrayIntersectCount.register(spark)
     val r = spark.sql(
       "SELECT array_intersect_count(array('x', CAST(NULL AS STRING)), array('x', CAST(NULL AS STRING))) v")
     assert(r.head().getInt(0) == 1)
@@ -38,7 +35,6 @@ class ArrayIntersectCountSpec extends AnyFunSuite {
   }
 
   test("matches size(array_intersect) on the real token sets") {
-    ArrayIntersectCount.register(spark)
     val sets = Tables.documents(spark, TestSpark.sf)
       .select(col("doc_id"), array_distinct(split(col("text"), " ", -1)).as("s"))
     val pairs = sets.as("a").join(sets.as("b"), col("a.doc_id") < col("b.doc_id"))

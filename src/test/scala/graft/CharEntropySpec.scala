@@ -69,7 +69,6 @@ class CharEntropySpec extends AnyFunSuite {
 
   test("registered SQL surface agrees with the static helper under codegen") {
     import spark.implicits._
-    graft.functions.CharEntropy.register(spark)
     val rows = Seq("abab", "abcd", "🌀🌀x").toDF("s")
       .selectExpr("char_entropy(s) AS p")
       .selectExpr("p.n_distinct_chars", "p.n_chars", "p.entropy_bits")

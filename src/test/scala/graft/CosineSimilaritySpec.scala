@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.CosineSimilarity
 
 /** The custom codegen'd Catalyst expression must agree with the built-in
   * higher-order-function formulation and be reachable from SQL. */
@@ -20,7 +19,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("cosine_sim matches the zip_with/aggregate formulation") {
-    CosineSimilarity.register(spark)
     val rows = df.select(
       expr("cosine_sim(a, b)").as("custom"),
       expr("""aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, v) -> acc + v)

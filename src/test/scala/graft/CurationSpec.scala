@@ -759,6 +759,18 @@ class CurationSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"dupSpans left new persisted blocks: $leaked")
   }
 
+  test("packTokens releases its staged projection when a driver action fails") {
+    // every row's text raises, so the FIRST action on the staged
+    // (doc_id, n_tokens) projection — the range-size probe — fails
+    // while building the stage; the stage must still be released
+    val docs = spark.range(10).select(col("id").as("doc_id"),
+      raise_error(lit("boom")).cast("string").as("text"))
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](Curation.packTokens(spark, docs, budget = 512, rangeSize = 0))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"packTokens stranded persisted blocks: $leaked")
+  }
+
   private def writeDocs(rows: Seq[(Long, String)], prefix: String): String = {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory(prefix).toString

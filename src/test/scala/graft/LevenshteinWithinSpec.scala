@@ -64,7 +64,6 @@ class LevenshteinWithinSpec extends AnyFunSuite {
   }
 
   test("registered SQL form runs codegen'd and equals the builtin threshold form") {
-    LevenshteinWithin.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(500)((

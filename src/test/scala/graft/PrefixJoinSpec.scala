@@ -14,7 +14,6 @@ class PrefixJoinSpec extends AnyFunSuite {
   test("ppJoin equals Spark-side brute-force all-pairs Jaccard (lossless filter)") {
     val got = PrefixJoin.ppJoin(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    graft.functions.ArrayIntersectCount.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), array_distinct(split(col("text"), " ", -1)).as("ts"))
       .withColumn("sz", size(col("ts")))
@@ -131,7 +130,6 @@ class PrefixJoinSpec extends AnyFunSuite {
   test("incremental probe equals brute-force new-batch x corpus; store is reused") {
     val got = PrefixJoin.ppJoinIncremental(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    graft.functions.ArrayIntersectCount.register(spark)
     val splitFrom = Tables.documents(spark, sf)
       .agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
     val docs = Tables.documents(spark, sf)

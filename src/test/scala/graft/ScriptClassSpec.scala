@@ -49,7 +49,6 @@ class ScriptClassSpec extends AnyFunSuite {
     val rows = Seq("한글 문서입니다", "漢字 mixed 한글", "english only doc",
       "123 456 789", "", "   ", "韓國語 공부 123", "𠀀𠀀 x")
     val df = rows.toDF("text")
-    ScriptClass.register(spark)
     val viaSql = df.select(expr("script_class(text)")).as[String].collect()
     assert(viaSql.toSeq == rows.map(cls))
     // null stays null (UnaryExpression null-intolerant contract)

@@ -290,7 +290,6 @@ class SimilaritySpec extends AnyFunSuite {
       assert(ps >= -1 - 1e-9 && ps <= 1 + 1e-9 && ns >= -1 - 1e-9 && ns <= 1 + 1e-9)
     }
     // brute-force argmax check on one anchor
-    graft.functions.CosineSimilarity.register(spark)
     val e = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"), col("label"))
     val a0 = e.filter(col("vec_id") === 0L)
