@@ -1,9 +1,7 @@
 package graft.catalog
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.procedures
+import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.types._
@@ -122,92 +120,73 @@ private[graft] object TableColumnStats {
   * computing approx_count_distinct per column (plus avg/max length for
   * strings), persisted in table props as a metadata write. Returns one
   * row per analyzed column: (column, ndv, avg_len, max_len). */
-private[catalog] class AnalyzeProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+private[catalog] class AnalyzeProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "analyze",
+    "compute + persist per-column NDV / length statistics for the CBO",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("columns", StringType)
+        .defaultValue("NULL").comment("comma-separated; default = every column")
+        .build()),
+    StructType(Seq(
+      StructField("column", StringType, nullable = false),
+      StructField("ndv", LongType, nullable = false),
+      StructField("avg_len", LongType, nullable = true),
+      StructField("max_len", LongType, nullable = true)))) {
 
-  override def name(): String = "analyze"
-  override def description(): String =
-    "compute + persist per-column NDV / length statistics for the CBO"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = AnalyzeProcedure.this.name()
-      override def description(): String = AnalyzeProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("columns", StringType)
-          .defaultValue("NULL").comment("comma-separated; default = every column")
-          .build())
-
-      private val outSchema = StructType(Seq(
-        StructField("column", StringType, nullable = false),
-        StructField("ndv", LongType, nullable = false),
-        StructField("avg_len", LongType, nullable = true),
-        StructField("max_len", LongType, nullable = true)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val m = TableMeta.read(dir)
-        // default = every leaf-typed column; nested types are skipped
-        // (their NDV is rarely meaningful to JoinEstimation and their
-        // sketch cost is not) — name one explicitly to force it
-        val cols = if (input.isNullAt(1))
-          m.schema.fields.filterNot(f => f.dataType.isInstanceOf[ArrayType] ||
-            f.dataType.isInstanceOf[MapType] || f.dataType.isInstanceOf[StructType])
-            .map(_.name).toSeq
-          else input.getUTF8String(1).toString.split(',').map(_.trim)
-            .filter(_.nonEmpty).toSeq
-            // case-insensitive like the rest of the SQL surface, resolved
-            // to the schema's canonical spelling
-            .map(c => m.schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(
-              throw new IllegalArgumentException(
-                s"column '$c' is not in ${m.schema.fieldNames.mkString(", ")}")))
-        require(cols.nonEmpty,
-          s"nothing to analyze on '$table': no leaf-typed columns selected " +
-            "(name columns explicitly via columns => 'a,b')")
-        val ss = SparkSession.active
-        val v = m.latest
-        import org.apache.spark.sql.functions.{approx_count_distinct, avg, col, length, max}
-        val strCols = cols.filter(c => m.schema(c).dataType == StringType)
-        val aggs =
-          cols.map(c => approx_count_distinct(col(c)).as(s"ndv_$c")) ++
-            strCols.flatMap(c => Seq(avg(length(col(c))).as(s"al_$c"),
-              max(length(col(c))).as(s"ml_$c")))
-        val row = ss.sql(s"SELECT * FROM ${cat.name()}.$table VERSION AS OF $v")
-          .agg(aggs.head, aggs.tail: _*).head()
-        val ndvs = cols.map(c => c -> row.getAs[Long](s"ndv_$c")).toMap
-        val lens = strCols.flatMap { c =>
-          (Option(row.getAs[java.lang.Double](s"al_$c")),
-            Option(row.getAs[java.lang.Integer](s"ml_$c"))) match {
-            case (Some(a), Some(mx)) =>
-              Some(c -> (math.ceil(a.doubleValue).toLong, mx.longValue))
-            case _ => None // all-null column: no lengths
-          }
-        }.toMap
-        GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-          _ => new Object).synchronized {
-          val cur = TableMeta.read(dir)
-          val newProps = cur.props +
-            (TableColumnStats.VersionProp -> v.toString) ++
-            ndvs.map { case (c, n) => TableColumnStats.ndvProp(c) -> n.toString } ++
-            lens.map { case (c, (a, mx)) => TableColumnStats.lenProp(c) -> s"$a:$mx" }
-          TableMeta.write(dir, cur.copy(props = newProps),
-            expectedLatest = Some(cur.latest))
-        }
-        val outRows = cols.map { c =>
-          InternalRow(UTF8String.fromString(c), ndvs(c),
-            lens.get(c).map(l => java.lang.Long.valueOf(l._1)).orNull,
-            lens.get(c).map(l => java.lang.Long.valueOf(l._2)).orNull)
-        }.toArray
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = outRows
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val dir = cat.existingTableDir(table)
+    val m = TableMeta.read(dir)
+    // default = every leaf-typed column; nested types are skipped
+    // (their NDV is rarely meaningful to JoinEstimation and their
+    // sketch cost is not) — name one explicitly to force it
+    val cols = if (input.isNullAt(1))
+      m.schema.fields.filterNot(f => f.dataType.isInstanceOf[ArrayType] ||
+        f.dataType.isInstanceOf[MapType] || f.dataType.isInstanceOf[StructType])
+        .map(_.name).toSeq
+      else input.getUTF8String(1).toString.split(',').map(_.trim)
+        .filter(_.nonEmpty).toSeq
+        // case-insensitive like the rest of the SQL surface, resolved
+        // to the schema's canonical spelling
+        .map(c => m.schema.fieldNames.find(_.equalsIgnoreCase(c)).getOrElse(
+          throw new IllegalArgumentException(
+            s"column '$c' is not in ${m.schema.fieldNames.mkString(", ")}")))
+    require(cols.nonEmpty,
+      s"nothing to analyze on '$table': no leaf-typed columns selected " +
+        "(name columns explicitly via columns => 'a,b')")
+    val ss = SparkSession.active
+    val v = m.latest
+    import org.apache.spark.sql.functions.{approx_count_distinct, avg, col, length, max}
+    val strCols = cols.filter(c => m.schema(c).dataType == StringType)
+    val aggs =
+      cols.map(c => approx_count_distinct(col(c)).as(s"ndv_$c")) ++
+        strCols.flatMap(c => Seq(avg(length(col(c))).as(s"al_$c"),
+          max(length(col(c))).as(s"ml_$c")))
+    val row = ss.sql(s"SELECT * FROM ${cat.name()}.$table VERSION AS OF $v")
+      .agg(aggs.head, aggs.tail: _*).head()
+    val ndvs = cols.map(c => c -> row.getAs[Long](s"ndv_$c")).toMap
+    val lens = strCols.flatMap { c =>
+      (Option(row.getAs[java.lang.Double](s"al_$c")),
+        Option(row.getAs[java.lang.Integer](s"ml_$c"))) match {
+        case (Some(a), Some(mx)) =>
+          Some(c -> (math.ceil(a.doubleValue).toLong, mx.longValue))
+        case _ => None // all-null column: no lengths
       }
+    }.toMap
+    GraftTable.withCommitLock(dir) {
+      val cur = TableMeta.read(dir)
+      val newProps = cur.props +
+        (TableColumnStats.VersionProp -> v.toString) ++
+        ndvs.map { case (c, n) => TableColumnStats.ndvProp(c) -> n.toString } ++
+        lens.map { case (c, (a, mx)) => TableColumnStats.lenProp(c) -> s"$a:$mx" }
+      TableMeta.write(dir, cur.copy(props = newProps),
+        expectedLatest = Some(cur.latest))
     }
+    cols.map { c =>
+      InternalRow(UTF8String.fromString(c), ndvs(c),
+        lens.get(c).map(l => java.lang.Long.valueOf(l._1)).orNull,
+        lens.get(c).map(l => java.lang.Long.valueOf(l._2)).orNull)
+    }
+  }
 }

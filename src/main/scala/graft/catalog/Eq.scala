@@ -5,8 +5,9 @@ import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** EQUALITY DELETES — the zero-read upsert half of merge-on-read
   * (Iceberg v2 equality deletes, the format Flink's CDC sink writes).
@@ -205,139 +206,119 @@ private[catalog] case class EqRef(path: String, keyCol: String, rows: Long, seq:
   * insert files stay bucket-pure with recorded ids and the
   * storage-partitioned join survives the upsert.
   * Returns (version, inserted_rows, tombstone_keys). */
-private[catalog] class EqUpsertProcedure(cat: GraftCatalog)
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.catalog.procedures
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+private[catalog] class EqUpsertProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "eq_upsert",
+    "keyed upsert as insert files + one equality-delete tombstone (zero fact-file reads)",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("source", StringType)
+        .comment("view/table whose rows upsert into the target").build(),
+      ProcedureParameter.in("key", StringType)
+        .comment("single BIGINT/STRING key column").build()),
+    StructType(Seq(
+      StructField("version", IntegerType, nullable = false),
+      StructField("inserted_rows", LongType, nullable = false),
+      StructField("tombstone_keys", LongType, nullable = false)))) {
 
-  override def name(): String = "eq_upsert"
-  override def description(): String =
-    "keyed upsert as insert files + one equality-delete tombstone (zero fact-file reads)"
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val ss = SparkSession.active
+    val table = input.getUTF8String(0).toString
+    val source = input.getUTF8String(1).toString
+    val keyName = input.getUTF8String(2).toString
+    val dir = cat.existingTableDir(table)
+    val m = TableMeta.read(dir)
+    val keyField = m.schema.fields.find(_.name.equalsIgnoreCase(keyName)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$table: no key column '$keyName' (${m.schema.fieldNames.mkString(", ")})"))
+    require(Eq.supportedKeyType(keyField.dataType),
+      s"$table: eq_upsert keys must be BIGINT or STRING; " +
+        s"'$keyName' is ${keyField.dataType.simpleString}")
+    // a bucket-clustered target keeps its layout: the batch stages
+    // per-bucket (below), so insert files stay bucket-pure and the
+    // storage-partitioned join survives the upsert (eq-affected
+    // files temporarily route through the masked path; compact
+    // restores the full SPJ read)
+    val bucketLayout = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
+    // one key column per table: mixed-key tombstone sets would need
+    // per-blob schema plumbing the read path doesn't carry
+    m.manifest(m.latest).eqs.headOption.foreach(e =>
+      require(e.keyCol.equalsIgnoreCase(keyName),
+        s"$table already carries equality tombstones keyed by '${e.keyCol}'; " +
+          s"got key '$keyName' — one key column per table"))
 
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = EqUpsertProcedure.this.name()
-      override def description(): String = EqUpsertProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("source", StringType)
-          .comment("view/table whose rows upsert into the target").build(),
-        procedures.ProcedureParameter.in("key", StringType)
-          .comment("single BIGINT/STRING key column").build())
-
-      private val outSchema = StructType(Seq(
-        StructField("version", IntegerType, nullable = false),
-        StructField("inserted_rows", LongType, nullable = false),
-        StructField("tombstone_keys", LongType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val ss = SparkSession.active
-        val table = input.getUTF8String(0).toString
-        val source = input.getUTF8String(1).toString
-        val keyName = input.getUTF8String(2).toString
-        val dir = cat.tableDirOf(table)
-        require(java.nio.file.Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val m = TableMeta.read(dir)
-        val keyField = m.schema.fields.find(_.name.equalsIgnoreCase(keyName)).getOrElse(
-          throw new IllegalArgumentException(
-            s"$table: no key column '$keyName' (${m.schema.fieldNames.mkString(", ")})"))
-        require(Eq.supportedKeyType(keyField.dataType),
-          s"$table: eq_upsert keys must be BIGINT or STRING; " +
-            s"'$keyName' is ${keyField.dataType.simpleString}")
-        // a bucket-clustered target keeps its layout: the batch stages
-        // per-bucket (below), so insert files stay bucket-pure and the
-        // storage-partitioned join survives the upsert (eq-affected
-        // files temporarily route through the masked path; compact
-        // restores the full SPJ read)
-        val bucketLayout = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
-        // one key column per table: mixed-key tombstone sets would need
-        // per-blob schema plumbing the read path doesn't carry
-        m.manifest(m.latest).eqs.headOption.foreach(e =>
-          require(e.keyCol.equalsIgnoreCase(keyName),
-            s"$table already carries equality tombstones keyed by '${e.keyCol}'; " +
-              s"got key '$keyName' — one key column per table"))
-
-        // align to the table schema AND carry its field-id metadata per
-        // column (`.to` aligns names/types but drops metadata; the
-        // parquet writer only stamps ids it finds in the df schema)
-        val batch = ss.table(source).to(m.schema).select(m.schema.fields.map(f =>
-          org.apache.spark.sql.functions.col(f.name).as(f.name, f.metadata)).toSeq: _*)
-        val t0 = new GraftTable(table, dir, pinnedVersion = None)
-        val staging = dir.resolve("data").resolve(
-          s"c-${java.util.UUID.randomUUID().toString.take(12)}")
-        bucketLayout match {
-          case None =>
-            batch.write.options(t0.bloomWriteOptions).parquet(staging.toString)
-          case Some(bl) =>
-            // ONE pass: hive-partition the staged write by the row's
-            // bucket id (the catalog's own murmur mixer, resolved as the
-            // v2 `bucket` function) — each file lands bucket-pure under a
-            // __gb=<id> dir, id recovered below; NULL keys ride bucket 0
-            // like every other write path
-            batch.withColumn("__gb", org.apache.spark.sql.functions.coalesce(
-                org.apache.spark.sql.functions.expr(
-                  s"`${cat.name()}`.bucket(${bl.numBuckets}, `${bl.column}`)"),
-                org.apache.spark.sql.functions.lit(0)))
-              .write.options(t0.bloomWriteOptions).partitionBy("__gb")
-              .parquet(staging.toString)
-        }
-        val w = java.nio.file.Files.walk(staging)
-        val abs = try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala.filter(p => java.nio.file.Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet")).toSeq
-        } finally w.close()
-        val conf = ss.sessionState.newHadoopConf()
-        val stats0 = FooterStats.collect(dir, abs, m.schema, conf,
-          requireIdsAs = t0.idRequirement)
-        val stats = bucketLayout match {
-          case None => stats0
-          case Some(_) => stats0.map { case (r, fs) =>
-            val seg = java.nio.file.Paths.get(r).getParent.getFileName.toString
-            val b = "^__gb=(\\d+)$".r.findFirstMatchIn(seg).map(_.group(1).toInt)
-              .getOrElse(throw new IllegalStateException(
-                s"$table: staged eq-upsert file '$r' outside a bucket dir"))
-            r -> fs.copy(bucket = Some(b))
-          }
-        }
-        val rel = abs.map(p => dir.relativize(p).toString)
-        val inserted = stats.values.map(_.rows).sum
-
-        // keys come from the STAGED files (single source of truth; the
-        // source view may be nondeterministic) — churn-sized read
-        val keyRows = ss.read.parquet(abs.map(_.toString): _*)
-          .select(keyField.name).collect()
-        require(keyRows.forall(!_.isNullAt(0)),
-          s"$table: eq_upsert batch has NULL '$keyName' keys; a null key cannot " +
-            "tombstone earlier rows — filter or fix the source")
-        val keys: Eq.Keys = keyField.dataType match {
-          case LongType => Eq.LongKeys(keyRows.map(_.getLong(0)).distinct.sorted)
-          case _ => Eq.StringKeys(keyRows.map(_.getString(0)).toSet)
-        }
-        require(keys.n == keyRows.length,
-          s"$table: eq_upsert batch has duplicate '$keyName' keys " +
-            s"(${keyRows.length} rows, ${keys.n} distinct); intra-batch order is " +
-            "undefined — dedup the source first (CDC sinks keep the last image)")
-
-        val (version, nKeys) =
-          if (inserted == 0 && keys.n == 0) (t0.currentLatest, 0L)
-          else {
-            val blobRel = s"data/eq-${java.util.UUID.randomUUID().toString.take(12)}.eq"
-            Eq.write(new org.apache.hadoop.fs.Path(dir.resolve(blobRel).toUri), keys, conf)
-            t0.commitVersion("equpsert", t0.currentLatest, rel, replace = false,
-              newStats = stats, eqAdd = Some((blobRel, keyField.name, keys.n)))
-            (t0.currentLatest, keys.n)
-          }
-        val row: InternalRow = InternalRow(version, inserted, nKeys)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+    // align to the table schema AND carry its field-id metadata per
+    // column (`.to` aligns names/types but drops metadata; the
+    // parquet writer only stamps ids it finds in the df schema)
+    val batch = ss.table(source).to(m.schema).select(m.schema.fields.map(f =>
+      org.apache.spark.sql.functions.col(f.name).as(f.name, f.metadata)).toSeq: _*)
+    val t0 = new GraftTable(table, dir, pinnedVersion = None)
+    val staging = dir.resolve("data").resolve(
+      s"c-${java.util.UUID.randomUUID().toString.take(12)}")
+    bucketLayout match {
+      case None =>
+        batch.write.options(t0.bloomWriteOptions).parquet(staging.toString)
+      case Some(bl) =>
+        // ONE pass: hive-partition the staged write by the row's
+        // bucket id (the catalog's own murmur mixer, resolved as the
+        // v2 `bucket` function) — each file lands bucket-pure under a
+        // __gb=<id> dir, id recovered below; NULL keys ride bucket 0
+        // like every other write path
+        batch.withColumn("__gb", org.apache.spark.sql.functions.coalesce(
+            org.apache.spark.sql.functions.expr(
+              s"`${cat.name()}`.bucket(${bl.numBuckets}, `${bl.column}`)"),
+            org.apache.spark.sql.functions.lit(0)))
+          .write.options(t0.bloomWriteOptions).partitionBy("__gb")
+          .parquet(staging.toString)
+    }
+    val w = java.nio.file.Files.walk(staging)
+    val abs = try {
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala.filter(p => java.nio.file.Files.isRegularFile(p) &&
+        p.getFileName.toString.endsWith(".parquet")).toSeq
+    } finally w.close()
+    val conf = ss.sessionState.newHadoopConf()
+    val stats0 = FooterStats.collect(dir, abs, m.schema, conf,
+      requireIdsAs = t0.idRequirement)
+    val stats = bucketLayout match {
+      case None => stats0
+      case Some(_) => stats0.map { case (r, fs) =>
+        val seg = java.nio.file.Paths.get(r).getParent.getFileName.toString
+        val b = "^__gb=(\\d+)$".r.findFirstMatchIn(seg).map(_.group(1).toInt)
+          .getOrElse(throw new IllegalStateException(
+            s"$table: staged eq-upsert file '$r' outside a bucket dir"))
+        r -> fs.copy(bucket = Some(b))
       }
     }
+    val rel = abs.map(p => dir.relativize(p).toString)
+    val inserted = stats.values.map(_.rows).sum
+
+    // keys come from the STAGED files (single source of truth; the
+    // source view may be nondeterministic) — churn-sized read
+    val keyRows = ss.read.parquet(abs.map(_.toString): _*)
+      .select(keyField.name).collect()
+    require(keyRows.forall(!_.isNullAt(0)),
+      s"$table: eq_upsert batch has NULL '$keyName' keys; a null key cannot " +
+        "tombstone earlier rows — filter or fix the source")
+    val keys: Eq.Keys = keyField.dataType match {
+      case LongType => Eq.LongKeys(keyRows.map(_.getLong(0)).distinct.sorted)
+      case _ => Eq.StringKeys(keyRows.map(_.getString(0)).toSet)
+    }
+    require(keys.n == keyRows.length,
+      s"$table: eq_upsert batch has duplicate '$keyName' keys " +
+        s"(${keyRows.length} rows, ${keys.n} distinct); intra-batch order is " +
+        "undefined — dedup the source first (CDC sinks keep the last image)")
+
+    val (version, nKeys) =
+      if (inserted == 0 && keys.n == 0) (t0.currentLatest, 0L)
+      else {
+        val blobRel = s"data/eq-${java.util.UUID.randomUUID().toString.take(12)}.eq"
+        Eq.write(new org.apache.hadoop.fs.Path(dir.resolve(blobRel).toUri), keys, conf)
+        t0.commitVersion("equpsert", t0.currentLatest, rel, replace = false,
+          newStats = stats, eqAdd = Some((blobRel, keyField.name, keys.n)))
+        (t0.currentLatest, keys.n)
+      }
+    Seq(InternalRow(version, inserted, nKeys))
+  }
 }
 
 /** One per-file slice of an [[EqMaskedScan]]: the addressed partition

@@ -6,15 +6,18 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
+import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** A minimal snapshot-versioned, parquet-backed DataSource-v2 catalog:
   * the SQL-syntax surface for the maintenance verbs that VERDICT r11
@@ -334,8 +337,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = tableDir(ident)
     if (!Files.exists(dir.resolve(TableMeta.MetaFile))) throw new NoSuchTableException(ident)
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       val m = TableMeta.read(dir)
       var schema = m.schema
       var props = m.props
@@ -649,10 +651,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.sameElements(Array("system")))
-      Array("expire_versions", "compact", "create_branch", "publish_branch",
-        "drop_branch", "rebase_branch", "restore", "remove_orphans", "history",
-        "tag", "untag", "set_clustering", "create_mv", "refresh_mv", "analyze")
-        .map(Identifier.of(Array("system"), _))
+      GraftProcedure.table.map(p => Identifier.of(Array("system"), p._1)).toArray
     else Array.empty
 
   /** Declares DSv2 column-default support: `CREATE TABLE (… DEFAULT …)`
@@ -666,33 +665,23 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
   override def loadProcedure(ident: Identifier): procedures.UnboundProcedure =
     if (!ident.namespace().sameElements(Array("system")))
       throw new UnsupportedOperationException(s"no procedure ${fullName(ident)}")
-    else ident.name() match {
-      case "expire_versions" => new ExpireVersionsProcedure(this)
-      case "compact" => new CompactProcedure(this)
-      case "create_branch" => new BranchProcedure(this, BranchProcedure.Create)
-      case "publish_branch" => new BranchProcedure(this, BranchProcedure.Publish)
-      case "drop_branch" => new BranchProcedure(this, BranchProcedure.Drop)
-      case "rebase_branch" => new BranchProcedure(this, BranchProcedure.Rebase)
-      case "restore" => new RestoreProcedure(this)
-      case "remove_orphans" => new RemoveOrphansProcedure(this)
-      case "history" => new HistoryProcedure(this)
-      case "tag" => new TagProcedure(this, untag = false)
-      case "untag" => new TagProcedure(this, untag = true)
-      case "set_clustering" => new SetClusteringProcedure(this)
-      case "create_mv" => new CreateMvProcedure(this)
-      case "refresh_mv" => new RefreshMvProcedure(this)
-      case "analyze" => new AnalyzeProcedure(this)
-      case "eq_upsert" => new EqUpsertProcedure(this)
-      case other => throw new UnsupportedOperationException(
-        s"no procedure system.$other (available: expire_versions, compact, " +
-          "create_branch, publish_branch, drop_branch, rebase_branch, restore, " +
-          "remove_orphans, history, tag, untag, set_clustering, create_mv, " +
-          "refresh_mv, analyze, eq_upsert)")
-    }
+    else GraftProcedure.table.collectFirst {
+      case (n, make) if n == ident.name() => make(this)
+    }.getOrElse(throw new UnsupportedOperationException(
+      s"no procedure system.${ident.name()} " +
+        s"(available: ${GraftProcedure.table.map(_._1).mkString(", ")})"))
 
   private[catalog] def tableDirOf(dotted: String): Path = {
     val parts = dotted.split('.')
     tableDir(Identifier.of(parts.dropRight(1), parts.last))
+  }
+
+  /** [[tableDirOf]] for a table that must already exist. */
+  private[catalog] def existingTableDir(dotted: String): Path = {
+    val dir = tableDirOf(dotted)
+    require(Files.exists(dir.resolve(TableMeta.MetaFile)),
+      s"no such table '$dotted' in catalog ${name()}")
+    dir
   }
 
   // ---- FunctionCatalog: the time partition-transform functions ----
@@ -834,7 +823,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
   * serving it under time travel. */
 private[graft] object FieldIds {
   val MetaKey = "parquet.field.id"
-  import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField}
+  import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
 
   private[catalog] def withId(f: StructField, id: Long): StructField =
     f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
@@ -1156,90 +1145,69 @@ private[catalog] class TimeTransformFunction(unit: String)
   * forever); the version chain keeps its numbering, so kept versions
   * stay addressable by the same `VERSION AS OF` they always had.
   * Returns one row: (expired_versions, kept_versions, deleted_files). */
-private[catalog] class ExpireVersionsProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
+private[catalog] class ExpireVersionsProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "expire_versions",
+    "drop table versions older than the newest keep_last; delete unreferenced data files",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("keep_last", IntegerType).build()),
+    StructType(Seq(
+      StructField("expired_versions", IntegerType, nullable = false),
+      StructField("kept_versions", IntegerType, nullable = false),
+      StructField("deleted_files", IntegerType, nullable = false)))) {
 
-  override def name(): String = "expire_versions"
-  override def description(): String =
-    "drop table versions older than the newest keep_last; delete unreferenced data files"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = ExpireVersionsProcedure.this.name()
-      override def description(): String = ExpireVersionsProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("keep_last", IntegerType).build())
-
-      private val outSchema = StructType(Seq(
-        StructField("expired_versions", IntegerType, nullable = false),
-        StructField("kept_versions", IntegerType, nullable = false),
-        StructField("deleted_files", IntegerType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val keepLast = input.getInt(1)
-        require(keepLast >= 1, s"keep_last must be >= 1, got $keepLast")
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        // expire under the table's commit lock: readers of KEPT versions
-        // are unaffected (their manifests and files survive); a racing
-        // writer serializes on the same lock
-        val (nExpired, nKept, nDeleted) =
-          GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-            _ => new Object).synchronized {
-            val m = TableMeta.read(dir)
-            val keepFrom = m.latest - keepLast + 1
-            // TAGGED versions are retention-pinned (Iceberg tag
-            // semantics): a release tag must outlive the rolling window,
-            // or tagging would be decorative
-            val tagged = m.tags.values.toSet
-            val (expired, kept) = m.history.partition(c =>
-              c.version < keepFrom && !tagged.contains(c.version))
-            // files referenced by any WAP branch stay live: an unpublished
-            // staging chain must keep reading its fork-point snapshot.
-            // Deletion-vector and equality-delete blobs are referenced
-            // files like any other (an expired generation's tombstones
-            // are reclaimed with it; live ones are pinned).
-            def refs(c: Commit): Seq[String] =
-              c.files ++ c.dvs.values.map(_.path) ++ c.eqs.map(_.path)
-            val live = kept.flatMap(refs).toSet ++
-              m.branches.values.flatten.flatMap(refs)
-            val dead = expired.flatMap(refs).filterNot(live).distinct
-            TableMeta.write(dir, m.copy(history = kept), expectedLatest = Some(m.latest))
-            dead.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-            // cached change-feed dirs OF expired commits go with them (a
-            // kept commit's cache stays readable even if its parent
-            // expired — it was materialized while the parent lived)
-            val cdfDir = dir.resolve("cdf")
-            if (Files.isDirectory(cdfDir)) {
-              val vPat = "^v(\\d+)-k".r
-              val l = Files.list(cdfDir)
-              val doomed = try l.iterator().asScala.filter { p =>
-                vPat.findFirstMatchIn(p.getFileName.toString)
-                  .exists(_.group(1).toInt < keepFrom)
-              }.toSeq finally l.close()
-              doomed.foreach { d =>
-                val walk = Files.walk(d)
-                try walk.sorted(java.util.Comparator.reverseOrder())
-                  .iterator().asScala.foreach(Files.deleteIfExists(_))
-                finally walk.close()
-              }
-            }
-            (expired.size, kept.size, dead.size)
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val keepLast = input.getInt(1)
+    require(keepLast >= 1, s"keep_last must be >= 1, got $keepLast")
+    val dir = cat.existingTableDir(table)
+    // expire under the table's commit lock: readers of KEPT versions
+    // are unaffected (their manifests and files survive); a racing
+    // writer serializes on the same lock
+    val (nExpired, nKept, nDeleted) =
+      GraftTable.withCommitLock(dir) {
+        val m = TableMeta.read(dir)
+        val keepFrom = m.latest - keepLast + 1
+        // TAGGED versions are retention-pinned (Iceberg tag
+        // semantics): a release tag must outlive the rolling window,
+        // or tagging would be decorative
+        val tagged = m.tags.values.toSet
+        val (expired, kept) = m.history.partition(c =>
+          c.version < keepFrom && !tagged.contains(c.version))
+        // files referenced by any WAP branch stay live: an unpublished
+        // staging chain must keep reading its fork-point snapshot.
+        // Deletion-vector and equality-delete blobs are referenced
+        // files like any other (an expired generation's tombstones
+        // are reclaimed with it; live ones are pinned).
+        def refs(c: Commit): Seq[String] =
+          c.files ++ c.dvs.values.map(_.path) ++ c.eqs.map(_.path)
+        val live = kept.flatMap(refs).toSet ++
+          m.branches.values.flatten.flatMap(refs)
+        val dead = expired.flatMap(refs).filterNot(live).distinct
+        TableMeta.write(dir, m.copy(history = kept), expectedLatest = Some(m.latest))
+        dead.foreach(f => Files.deleteIfExists(dir.resolve(f)))
+        // cached change-feed dirs OF expired commits go with them (a
+        // kept commit's cache stays readable even if its parent
+        // expired — it was materialized while the parent lived)
+        val cdfDir = dir.resolve("cdf")
+        if (Files.isDirectory(cdfDir)) {
+          val vPat = "^v(\\d+)-k".r
+          val l = Files.list(cdfDir)
+          val doomed = try l.iterator().asScala.filter { p =>
+            vPat.findFirstMatchIn(p.getFileName.toString)
+              .exists(_.group(1).toInt < keepFrom)
+          }.toSeq finally l.close()
+          doomed.foreach { d =>
+            val walk = Files.walk(d)
+            try walk.sorted(java.util.Comparator.reverseOrder())
+              .iterator().asScala.foreach(Files.deleteIfExists(_))
+            finally walk.close()
           }
-        val row: InternalRow = InternalRow(nExpired, nKept, nDeleted)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+        }
+        (expired.size, kept.size, dead.size)
       }
-    }
+    Seq(InternalRow(nExpired, nKept, nDeleted))
+  }
 }
 
 /** Per-file data-skipping statistics, collected from parquet FOOTERS at
@@ -1300,236 +1268,216 @@ private[graft] case class FileStats(rows: Long, mins: Map[String, String],
   * continuous-upsert table (`q_stream_mor_upsert`'s shape) thus
   * compacts at churn cost instead of table cost. Mutually exclusive
   * with the clustering rewrites (those touch everything anyway). */
-private[catalog] class CompactProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
+private[catalog] class CompactProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "compact",
+    "bin-pack the live manifest into at most target_files files (a REPLACE commit)",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("target_files", IntegerType).build(),
+      ProcedureParameter.in("sort_by", StringType)
+        .defaultValue("NULL").comment("comma-separated sort columns for a clustering rewrite")
+        .build(),
+      ProcedureParameter.in("zorder_by", StringType)
+        .defaultValue("NULL")
+        .comment(">=2 comma-separated columns for a Morton (z-order) clustering rewrite")
+        .build(),
+      ProcedureParameter.in("min_tombstone_ratio", DoubleType)
+        .defaultValue("NULL")
+        .comment("rewrite ONLY files whose deletion-vector ratio is at or above this; " +
+          "the rest inherit untouched (the MOR self-healing loop)")
+        .build()),
+    StructType(Seq(
+      StructField("files_before", IntegerType, nullable = false),
+      StructField("files_after", IntegerType, nullable = false),
+      StructField("rows", LongType, nullable = false)))) {
 
-  override def name(): String = "compact"
-  override def description(): String =
-    "bin-pack the live manifest into at most target_files files (a REPLACE commit)"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = CompactProcedure.this.name()
-      override def description(): String = CompactProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("target_files", IntegerType).build(),
-        procedures.ProcedureParameter.in("sort_by", StringType)
-          .defaultValue("NULL").comment("comma-separated sort columns for a clustering rewrite")
-          .build(),
-        procedures.ProcedureParameter.in("zorder_by", StringType)
-          .defaultValue("NULL")
-          .comment(">=2 comma-separated columns for a Morton (z-order) clustering rewrite")
-          .build(),
-        procedures.ProcedureParameter.in("min_tombstone_ratio", DoubleType)
-          .defaultValue("NULL")
-          .comment("rewrite ONLY files whose deletion-vector ratio is at or above this; " +
-            "the rest inherit untouched (the MOR self-healing loop)")
-          .build())
-
-      private val outSchema = StructType(Seq(
-        StructField("files_before", IntegerType, nullable = false),
-        StructField("files_after", IntegerType, nullable = false),
-        StructField("rows", LongType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val target = input.getInt(1)
-        val sortBy = if (input.isNullAt(2)) Nil
-          else input.getUTF8String(2).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        val zorderBy = if (input.isNullAt(3)) Nil
-          else input.getUTF8String(3).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        val tombstoneRatio = if (input.isNullAt(4)) None else Some(input.getDouble(4))
-        require(target >= 1, s"target_files must be >= 1, got $target")
-        require(sortBy.isEmpty || zorderBy.isEmpty,
-          "sort_by and zorder_by are mutually exclusive clustering strategies")
-        require(zorderBy.isEmpty || zorderBy.length >= 2,
-          "zorder_by needs >= 2 columns (one column is just sort_by)")
-        tombstoneRatio.foreach { r =>
-          require(r > 0.0 && r <= 1.0, s"min_tombstone_ratio must be in (0, 1], got $r")
-          require(sortBy.isEmpty && zorderBy.isEmpty,
-            "min_tombstone_ratio is a selective materialization — a clustering " +
-              "re-layout rewrites everything anyway; drop one of the two")
-        }
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val spark = SparkSession.active
-        val m = TableMeta.read(dir)
-        (sortBy ++ zorderBy).foreach(c => require(m.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-          s"clustering column '$c' is not in ${m.schema.fieldNames.mkString(", ")}"))
-        zorderBy.foreach { c =>
-          val dt = m.schema(m.schema.fieldNames.find(_.equalsIgnoreCase(c)).get).dataType
-          require(CompactProcedure.zorderable(dt),
-            s"zorder_by column '$c' is $dt; rank bucketing needs a numeric/date/timestamp column")
-        }
-        val mf = m.manifest(m.latest)
-        val rowsFromStats = mf.files.flatMap(mf.stats.get).map(_.rows).sum -
-          mf.dvs.values.map(_.rows).sum
-        val (before, after, rows) = tombstoneRatio match {
-          case Some(r) =>
-            // SELECTIVE materialization (the MOR self-healing loop): only
-            // files whose tombstone ratio crossed the threshold are
-            // rewritten masked; everything else — files with light or no
-            // vectors — inherits verbatim, vectors included. Churn cost,
-            // not table cost: the continuous-upsert table compacts what
-            // actually rotted.
-            // selective rewrites can't see equality tombstones' per-file
-            // applicability windows move — only a FULL compact clears them
-            require(mf.eqs.isEmpty,
-              s"$table has live equality-delete tombstones; selective " +
-                "(min_tombstone_ratio) compaction would re-stamp rewritten files past " +
-                "them — run a full CALL system.compact first")
-            val selectedSet = mf.files.filter(f => mf.dvs.get(f).exists(dv =>
-              mf.stats.get(f).exists(st => st.rows > 0 &&
-                dv.rows.toDouble / st.rows >= r))).toSet
-            val selected = mf.files.filter(selectedSet)
-            if (selected.isEmpty) (mf.files.size, mf.files.size, 0L)
-            else {
-              val staging = dir.resolve("data").resolve(s"c-${UUID.randomUUID().toString.take(12)}")
-              val bloomOpts = new GraftTable(table, dir, pinnedVersion = None).bloomWriteOptions
-              val bucketLayout = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
-              bucketLayout match {
-                case Some(_) =>
-                  // a bucketed MOR table's selective materialization must
-                  // stay bucket-pure: each selected file's replacement is
-                  // written under its own b<id> staging subdir (the same
-                  // bucket channel as the full bucketed compact below)
-                  require(selected.forall(f => mf.stats.get(f).flatMap(_.bucket).isDefined),
-                    s"$table: bucketed manifest has vectored files without bucket ids")
-                  selected.groupBy(f => mf.stats(f).bucket.get).toSeq.sortBy(_._1)
-                    .foreach { case (b, fs) =>
-                      Dv.maskedFrame(spark, dir, m.schema, fs,
-                          mf.dvs.view.filterKeys(fs.toSet).toMap)
-                        .coalesce(math.max(1, math.min(target, fs.size)))
-                        .write.options(bloomOpts)
-                        .parquet(staging.resolve(s"b$b").toString)
-                    }
-                case None =>
-                  Dv.maskedFrame(spark, dir, m.schema, selected,
-                      mf.dvs.view.filterKeys(selectedSet).toMap)
-                    .coalesce(math.min(target, selected.size))
-                    .write.options(bloomOpts).parquet(staging.toString)
-              }
-              val s = Files.walk(staging)
-              val abs = try s.iterator().asScala
-                .filter(p => Files.isRegularFile(p) &&
-                  p.getFileName.toString.endsWith(".parquet")).toSeq
-              finally s.close()
-              val rel = abs.map(p => dir.relativize(p).toString)
-              val t0 = new GraftTable(table, dir, pinnedVersion = None)
-              val stats0 = FooterStats.collect(dir, abs, m.schema,
-                spark.sessionState.newHadoopConf(), requireIdsAs = t0.idRequirement)
-              val stats =
-                if (bucketLayout.isEmpty) stats0
-                else stats0.map { case (r0, fs) =>
-                  val parent = java.nio.file.Paths.get(r0).getParent.getFileName.toString
-                  val b = "^b(\\d+)$".r.findFirstMatchIn(parent).map(_.group(1).toInt)
-                    .getOrElse(throw new IllegalStateException(
-                      s"$table: staged file '$r0' outside a bucket subdir on bucketed compact"))
-                  r0 -> fs.copy(bucket = Some(b))
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val target = input.getInt(1)
+    val sortBy = if (input.isNullAt(2)) Nil
+      else input.getUTF8String(2).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val zorderBy = if (input.isNullAt(3)) Nil
+      else input.getUTF8String(3).toString.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val tombstoneRatio = if (input.isNullAt(4)) None else Some(input.getDouble(4))
+    require(target >= 1, s"target_files must be >= 1, got $target")
+    require(sortBy.isEmpty || zorderBy.isEmpty,
+      "sort_by and zorder_by are mutually exclusive clustering strategies")
+    require(zorderBy.isEmpty || zorderBy.length >= 2,
+      "zorder_by needs >= 2 columns (one column is just sort_by)")
+    tombstoneRatio.foreach { r =>
+      require(r > 0.0 && r <= 1.0, s"min_tombstone_ratio must be in (0, 1], got $r")
+      require(sortBy.isEmpty && zorderBy.isEmpty,
+        "min_tombstone_ratio is a selective materialization — a clustering " +
+          "re-layout rewrites everything anyway; drop one of the two")
+    }
+    val dir = cat.existingTableDir(table)
+    val spark = SparkSession.active
+    val m = TableMeta.read(dir)
+    (sortBy ++ zorderBy).foreach(c => require(m.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+      s"clustering column '$c' is not in ${m.schema.fieldNames.mkString(", ")}"))
+    zorderBy.foreach { c =>
+      val dt = m.schema(m.schema.fieldNames.find(_.equalsIgnoreCase(c)).get).dataType
+      require(CompactProcedure.zorderable(dt),
+        s"zorder_by column '$c' is $dt; rank bucketing needs a numeric/date/timestamp column")
+    }
+    val mf = m.manifest(m.latest)
+    val rowsFromStats = mf.files.flatMap(mf.stats.get).map(_.rows).sum -
+      mf.dvs.values.map(_.rows).sum
+    val (before, after, rows) = tombstoneRatio match {
+      case Some(r) =>
+        // SELECTIVE materialization (the MOR self-healing loop): only
+        // files whose tombstone ratio crossed the threshold are
+        // rewritten masked; everything else — files with light or no
+        // vectors — inherits verbatim, vectors included. Churn cost,
+        // not table cost: the continuous-upsert table compacts what
+        // actually rotted.
+        // selective rewrites can't see equality tombstones' per-file
+        // applicability windows move — only a FULL compact clears them
+        require(mf.eqs.isEmpty,
+          s"$table has live equality-delete tombstones; selective " +
+            "(min_tombstone_ratio) compaction would re-stamp rewritten files past " +
+            "them — run a full CALL system.compact first")
+        val selectedSet = mf.files.filter(f => mf.dvs.get(f).exists(dv =>
+          mf.stats.get(f).exists(st => st.rows > 0 &&
+            dv.rows.toDouble / st.rows >= r))).toSet
+        val selected = mf.files.filter(selectedSet)
+        if (selected.isEmpty) (mf.files.size, mf.files.size, 0L)
+        else {
+          val staging = dir.resolve("data").resolve(s"c-${UUID.randomUUID().toString.take(12)}")
+          val bloomOpts = new GraftTable(table, dir, pinnedVersion = None).bloomWriteOptions
+          val bucketLayout = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
+          bucketLayout match {
+            case Some(_) =>
+              // a bucketed MOR table's selective materialization must
+              // stay bucket-pure: each selected file's replacement is
+              // written under its own b<id> staging subdir (the same
+              // bucket channel as the full bucketed compact below)
+              require(selected.forall(f => mf.stats.get(f).flatMap(_.bucket).isDefined),
+                s"$table: bucketed manifest has vectored files without bucket ids")
+              selected.groupBy(f => mf.stats(f).bucket.get).toSeq.sortBy(_._1)
+                .foreach { case (b, fs) =>
+                  Dv.maskedFrame(spark, dir, m.schema, fs,
+                      mf.dvs.view.filterKeys(fs.toSet).toMap)
+                    .coalesce(math.max(1, math.min(target, fs.size)))
+                    .write.options(bloomOpts)
+                    .parquet(staging.resolve(s"b$b").toString)
                 }
-              t0.commitVersion(
-                "compact", m.latest, rel, replace = true, newStats = stats,
-                dataChange = false, replacedFiles = Some(selected))
-              (mf.files.size, mf.files.size - selected.size + rel.size,
-                stats.values.map(_.rows).sum)
-            }
-          case None =>
-          // a manifest carrying deletion vectors OR equality tombstones
-          // is never a no-op: compaction is how MOR tombstones of either
-          // flavor get MATERIALIZED away
-          if (mf.files.size <= target && sortBy.isEmpty && zorderBy.isEmpty &&
-              mf.dvs.isEmpty && mf.eqs.isEmpty)
-            (mf.files.size, mf.files.size, rowsFromStats)
-          else {
-            val staging = dir.resolve("data").resolve(s"c-${UUID.randomUUID().toString.take(12)}")
-            def shape(df: org.apache.spark.sql.DataFrame, nOut: Int): org.apache.spark.sql.DataFrame =
-              if (zorderBy.nonEmpty) CompactProcedure.zorderLayout(df, zorderBy, nOut)
-              else if (sortBy.isEmpty) df.coalesce(nOut)
-              else {
-                val cols = sortBy.map(org.apache.spark.sql.functions.col)
-                df.repartitionByRange(nOut, cols: _*).sortWithinPartitions(cols: _*)
-              }
-            val bucketLayout = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
-              .filter(_ => mf.files.nonEmpty)
-            val bloomOpts = new GraftTable(table, dir, pinnedVersion = None).bloomWriteOptions
-            bucketLayout match {
-              case Some(_) =>
-                // bucket-pure compaction: each bucket's file group is
-                // shaped and written as its OWN job into a `b<id>`
-                // staging subdir — no cross-bucket mixing by
-                // construction, bucket recovered from the dir name at
-                // commit. Jobs run concurrently (bounded pool); a
-                // same-cluster union write is NOT an option — Spark 4's
-                // partitioning-aware UnionExec zips equal-partitioned
-                // children into shared partitions, interleaving buckets.
-                // Vectored members (MOR × bucket, r15) read MASKED, so
-                // this rewrite also materializes their tombstones away —
-                // masking removes rows, never moves them across buckets.
-                require(mf.files.forall(f => mf.stats.get(f).flatMap(_.bucket).isDefined),
-                  s"$table: bucketed manifest has files without bucket ids; " +
-                    "compacting them would break the storage-partitioned join layout")
-                val groups = mf.files.groupBy(f => mf.stats(f).bucket.get).toSeq.sortBy(_._1)
-                val perGroup = math.max(1, target / groups.size)
-                val pool = java.util.concurrent.Executors.newFixedThreadPool(
-                  math.min(8, groups.size))
-                try {
-                  val futures = groups.map { case (b, fs) =>
-                    pool.submit(new java.util.concurrent.Callable[Unit] {
-                      override def call(): Unit =
-                        shape(Eq.maskedFrame(spark, dir, m.schema, fs,
-                            mf.dvs.view.filterKeys(fs.toSet).toMap, mf), perGroup)
-                          .write.options(bloomOpts)
-                          .parquet(staging.resolve(s"b$b").toString)
-                    })
-                  }
-                  futures.foreach(_.get())
-                } finally pool.shutdown()
-              case None =>
-                // the live snapshot: vectored files read masked and
-                // equality tombstones anti-join away, so the rewrite
-                // writes only surviving rows and the commit's fresh files
-                // carry neither flavor (the manifest replace drops both)
-                shape(Eq.maskedFrame(spark, dir, m.schema, mf.files, mf.dvs, mf), target)
-                  .write.options(bloomOpts).parquet(staging.toString)
-            }
-            val s = Files.walk(staging)
-            val abs = try s.iterator().asScala
-              .filter(p => Files.isRegularFile(p) &&
-                p.getFileName.toString.endsWith(".parquet")).toSeq
-            finally s.close()
-            val rel = abs.map(p => dir.relativize(p).toString)
-            val table0 = new GraftTable(table, dir, pinnedVersion = None)
-            val stats0 = FooterStats.collect(dir, abs, m.schema,
-              spark.sessionState.newHadoopConf(), requireIdsAs = table0.idRequirement)
-            val stats =
-              if (bucketLayout.isEmpty) stats0
-              else stats0.map { case (r, fs) =>
-                val parent = java.nio.file.Paths.get(r).getParent.getFileName.toString
-                val b = "^b(\\d+)$".r.findFirstMatchIn(parent).map(_.group(1).toInt)
-                  .getOrElse(throw new IllegalStateException(
-                    s"$table: staged file '$r' outside a bucket subdir on bucketed compact"))
-                r -> fs.copy(bucket = Some(b))
-              }
-            // dataChange = false: rows are identical, only layout moved —
-            // streaming readers of this table skip the commit entirely
-            table0.commitVersion("compact", m.latest, rel, replace = true,
-              newStats = stats, dataChange = false)
-            (mf.files.size, rel.size, stats.values.map(_.rows).sum)
+            case None =>
+              Dv.maskedFrame(spark, dir, m.schema, selected,
+                  mf.dvs.view.filterKeys(selectedSet).toMap)
+                .coalesce(math.min(target, selected.size))
+                .write.options(bloomOpts).parquet(staging.toString)
           }
+          val s = Files.walk(staging)
+          val abs = try s.iterator().asScala
+            .filter(p => Files.isRegularFile(p) &&
+              p.getFileName.toString.endsWith(".parquet")).toSeq
+          finally s.close()
+          val rel = abs.map(p => dir.relativize(p).toString)
+          val t0 = new GraftTable(table, dir, pinnedVersion = None)
+          val stats0 = FooterStats.collect(dir, abs, m.schema,
+            spark.sessionState.newHadoopConf(), requireIdsAs = t0.idRequirement)
+          val stats =
+            if (bucketLayout.isEmpty) stats0
+            else stats0.map { case (r0, fs) =>
+              val parent = java.nio.file.Paths.get(r0).getParent.getFileName.toString
+              val b = "^b(\\d+)$".r.findFirstMatchIn(parent).map(_.group(1).toInt)
+                .getOrElse(throw new IllegalStateException(
+                  s"$table: staged file '$r0' outside a bucket subdir on bucketed compact"))
+              r0 -> fs.copy(bucket = Some(b))
+            }
+          t0.commitVersion(
+            "compact", m.latest, rel, replace = true, newStats = stats,
+            dataChange = false, replacedFiles = Some(selected))
+          (mf.files.size, mf.files.size - selected.size + rel.size,
+            stats.values.map(_.rows).sum)
         }
-        val row: InternalRow = InternalRow(before, after, rows)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+      case None =>
+      // a manifest carrying deletion vectors OR equality tombstones
+      // is never a no-op: compaction is how MOR tombstones of either
+      // flavor get MATERIALIZED away
+      if (mf.files.size <= target && sortBy.isEmpty && zorderBy.isEmpty &&
+          mf.dvs.isEmpty && mf.eqs.isEmpty)
+        (mf.files.size, mf.files.size, rowsFromStats)
+      else {
+        val staging = dir.resolve("data").resolve(s"c-${UUID.randomUUID().toString.take(12)}")
+        def shape(df: org.apache.spark.sql.DataFrame, nOut: Int): org.apache.spark.sql.DataFrame =
+          if (zorderBy.nonEmpty) CompactProcedure.zorderLayout(df, zorderBy, nOut)
+          else if (sortBy.isEmpty) df.coalesce(nOut)
+          else {
+            val cols = sortBy.map(org.apache.spark.sql.functions.col)
+            df.repartitionByRange(nOut, cols: _*).sortWithinPartitions(cols: _*)
+          }
+        val bucketLayout = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
+          .filter(_ => mf.files.nonEmpty)
+        val bloomOpts = new GraftTable(table, dir, pinnedVersion = None).bloomWriteOptions
+        bucketLayout match {
+          case Some(_) =>
+            // bucket-pure compaction: each bucket's file group is
+            // shaped and written as its OWN job into a `b<id>`
+            // staging subdir — no cross-bucket mixing by
+            // construction, bucket recovered from the dir name at
+            // commit. Jobs run concurrently (bounded pool); a
+            // same-cluster union write is NOT an option — Spark 4's
+            // partitioning-aware UnionExec zips equal-partitioned
+            // children into shared partitions, interleaving buckets.
+            // Vectored members (MOR × bucket, r15) read MASKED, so
+            // this rewrite also materializes their tombstones away —
+            // masking removes rows, never moves them across buckets.
+            require(mf.files.forall(f => mf.stats.get(f).flatMap(_.bucket).isDefined),
+              s"$table: bucketed manifest has files without bucket ids; " +
+                "compacting them would break the storage-partitioned join layout")
+            val groups = mf.files.groupBy(f => mf.stats(f).bucket.get).toSeq.sortBy(_._1)
+            val perGroup = math.max(1, target / groups.size)
+            val pool = java.util.concurrent.Executors.newFixedThreadPool(
+              math.min(8, groups.size))
+            try {
+              val futures = groups.map { case (b, fs) =>
+                pool.submit(new java.util.concurrent.Callable[Unit] {
+                  override def call(): Unit =
+                    shape(Eq.maskedFrame(spark, dir, m.schema, fs,
+                        mf.dvs.view.filterKeys(fs.toSet).toMap, mf), perGroup)
+                      .write.options(bloomOpts)
+                      .parquet(staging.resolve(s"b$b").toString)
+                })
+              }
+              futures.foreach(_.get())
+            } finally pool.shutdown()
+          case None =>
+            // the live snapshot: vectored files read masked and
+            // equality tombstones anti-join away, so the rewrite
+            // writes only surviving rows and the commit's fresh files
+            // carry neither flavor (the manifest replace drops both)
+            shape(Eq.maskedFrame(spark, dir, m.schema, mf.files, mf.dvs, mf), target)
+              .write.options(bloomOpts).parquet(staging.toString)
+        }
+        val s = Files.walk(staging)
+        val abs = try s.iterator().asScala
+          .filter(p => Files.isRegularFile(p) &&
+            p.getFileName.toString.endsWith(".parquet")).toSeq
+        finally s.close()
+        val rel = abs.map(p => dir.relativize(p).toString)
+        val table0 = new GraftTable(table, dir, pinnedVersion = None)
+        val stats0 = FooterStats.collect(dir, abs, m.schema,
+          spark.sessionState.newHadoopConf(), requireIdsAs = table0.idRequirement)
+        val stats =
+          if (bucketLayout.isEmpty) stats0
+          else stats0.map { case (r, fs) =>
+            val parent = java.nio.file.Paths.get(r).getParent.getFileName.toString
+            val b = "^b(\\d+)$".r.findFirstMatchIn(parent).map(_.group(1).toInt)
+              .getOrElse(throw new IllegalStateException(
+                s"$table: staged file '$r' outside a bucket subdir on bucketed compact"))
+            r -> fs.copy(bucket = Some(b))
+          }
+        // dataChange = false: rows are identical, only layout moved —
+        // streaming readers of this table skip the commit entirely
+        table0.commitVersion("compact", m.latest, rel, replace = true,
+          newStats = stats, dataChange = false)
+        (mf.files.size, rel.size, stats.values.map(_.rows).sum)
       }
     }
+    Seq(InternalRow(before, after, rows))
+  }
 }
 
 private[catalog] object CompactProcedure {
@@ -1603,61 +1551,40 @@ private[catalog] object CompactProcedure {
   * dataChange commit instead of a rewritten past. Requires V to still
   * be in history (not expired). Returns (restored_to, new_version,
   * files). */
-private[catalog] class RestoreProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
+private[catalog] class RestoreProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "restore",
+    "roll content back to an earlier version as a NEW commit (history preserved)",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("version", IntegerType).build()),
+    StructType(Seq(
+      StructField("restored_to", IntegerType, nullable = false),
+      StructField("new_version", IntegerType, nullable = false),
+      StructField("files", IntegerType, nullable = false)))) {
 
-  override def name(): String = "restore"
-  override def description(): String =
-    "roll content back to an earlier version as a NEW commit (history preserved)"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = RestoreProcedure.this.name()
-      override def description(): String = RestoreProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("version", IntegerType).build())
-
-      private val outSchema = StructType(Seq(
-        StructField("restored_to", IntegerType, nullable = false),
-        StructField("new_version", IntegerType, nullable = false),
-        StructField("files", IntegerType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val v = input.getInt(1)
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val (newV, nFiles) =
-          GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-            _ => new Object).synchronized {
-            val m = TableMeta.read(dir)
-            val target = m.history.find(_.version == v).getOrElse(
-              throw new IllegalArgumentException(
-                s"cannot restore $table to v$v: not in history " +
-                  s"(${m.history.map(_.version).mkString(",")}) — expired versions are gone"))
-            // CONTENT rolls back; the schema stays current (Delta's
-            // RESTORE semantics) — field ids resolve the old files
-            val next = Commit(m.latest + 1, System.currentTimeMillis(), s"restore(v$v)",
-              target.files, target.stats, dataChange = true, dvs = target.dvs,
-              schemaId = m.currentSchemaId,
-              eqs = target.eqs, fileSeqs = target.fileSeqs)
-            TableMeta.write(dir, m.copy(history = m.history :+ next),
-              expectedLatest = Some(m.latest))
-            (next.version, target.files.size)
-          }
-        val row: InternalRow = InternalRow(v, newV, nFiles)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val v = input.getInt(1)
+    val dir = cat.existingTableDir(table)
+    val (newV, nFiles) =
+      GraftTable.withCommitLock(dir) {
+        val m = TableMeta.read(dir)
+        val target = m.history.find(_.version == v).getOrElse(
+          throw new IllegalArgumentException(
+            s"cannot restore $table to v$v: not in history " +
+              s"(${m.history.map(_.version).mkString(",")}) — expired versions are gone"))
+        // CONTENT rolls back; the schema stays current (Delta's
+        // RESTORE semantics) — field ids resolve the old files
+        val next = Commit(m.latest + 1, System.currentTimeMillis(), s"restore(v$v)",
+          target.files, target.stats, dataChange = true, dvs = target.dvs,
+          schemaId = m.currentSchemaId,
+          eqs = target.eqs, fileSeqs = target.fileSeqs)
+        TableMeta.write(dir, m.copy(history = m.history :+ next),
+          expectedLatest = Some(m.latest))
+        (next.version, target.files.size)
       }
-    }
+    Seq(InternalRow(v, newV, nFiles))
+  }
 }
 
 /** `CALL <cat>.system.remove_orphans(table => 'ns.t' [, older_than_minutes
@@ -1678,82 +1605,61 @@ private[catalog] object RemoveOrphansProcedure {
   val DefaultGuardMinutes: Int = 3 * 24 * 60
 }
 
-private[catalog] class RemoveOrphansProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
+private[catalog] class RemoveOrphansProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "remove_orphans",
+    "delete files under the table dir that no manifest or branch references",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("older_than_minutes", IntegerType)
+        .defaultValue(RemoveOrphansProcedure.DefaultGuardMinutes.toString)
+        .comment("age guard for in-flight staged writes; must exceed the longest write")
+        .build()),
+    StructType(Seq(
+      StructField("scanned", IntegerType, nullable = false),
+      StructField("orphans_deleted", IntegerType, nullable = false)))) {
 
-  override def name(): String = "remove_orphans"
-  override def description(): String =
-    "delete files under the table dir that no manifest or branch references"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = RemoveOrphansProcedure.this.name()
-      override def description(): String = RemoveOrphansProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("older_than_minutes", IntegerType)
-          .defaultValue(RemoveOrphansProcedure.DefaultGuardMinutes.toString)
-          .comment("age guard for in-flight staged writes; must exceed the longest write")
-          .build())
-
-      private val outSchema = StructType(Seq(
-        StructField("scanned", IntegerType, nullable = false),
-        StructField("orphans_deleted", IntegerType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val olderMin = if (input.isNullAt(1)) RemoveOrphansProcedure.DefaultGuardMinutes
-          else input.getInt(1)
-        require(olderMin >= 0, s"older_than_minutes must be >= 0, got $olderMin")
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val (scanned, deleted) =
-          GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-            _ => new Object).synchronized {
-            val m = TableMeta.read(dir)
-            def refs(c: Commit): Seq[String] =
-              c.files ++ c.dvs.values.map(_.path) ++ c.eqs.map(_.path)
-            val referenced = (m.history.flatMap(refs) ++
-              m.branches.values.flatten.flatMap(refs)).toSet
-            val dataDir = dir.resolve("data")
-            val cutoff = System.currentTimeMillis() - olderMin * 60000L
-            // only data files and deletion-vector blobs are candidates:
-            // commit-protocol sidecars (_SUCCESS, .crc) are never in a
-            // manifest, and a live file's checksum sidecar must not be
-            // swept out from under it
-            val s = Files.walk(dataDir)
-            val all = try s.iterator().asScala.filter(p =>
-              Files.isRegularFile(p) && (p.getFileName.toString.endsWith(".parquet") ||
-                p.getFileName.toString.endsWith(".dv") ||
-                p.getFileName.toString.endsWith(".eq"))).toSeq
-              finally s.close()
-            val orphans = all.filter { p =>
-              val rel = dir.relativize(p).toString
-              !referenced.contains(rel) &&
-                Files.getLastModifiedTime(p).toMillis < cutoff
-            }
-            orphans.foreach(Files.deleteIfExists(_))
-            // sweep now-empty staging dirs (cosmetic, best-effort)
-            val d = Files.list(dataDir)
-            try d.iterator().asScala.filter(Files.isDirectory(_)).foreach { sub =>
-              val l = Files.list(sub)
-              val empty = try !l.iterator().hasNext finally l.close()
-              if (empty) Files.deleteIfExists(sub)
-            } finally d.close()
-            (all.size, orphans.size)
-          }
-        val row: InternalRow = InternalRow(scanned, deleted)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val olderMin = if (input.isNullAt(1)) RemoveOrphansProcedure.DefaultGuardMinutes
+      else input.getInt(1)
+    require(olderMin >= 0, s"older_than_minutes must be >= 0, got $olderMin")
+    val dir = cat.existingTableDir(table)
+    val (scanned, deleted) =
+      GraftTable.withCommitLock(dir) {
+        val m = TableMeta.read(dir)
+        def refs(c: Commit): Seq[String] =
+          c.files ++ c.dvs.values.map(_.path) ++ c.eqs.map(_.path)
+        val referenced = (m.history.flatMap(refs) ++
+          m.branches.values.flatten.flatMap(refs)).toSet
+        val dataDir = dir.resolve("data")
+        val cutoff = System.currentTimeMillis() - olderMin * 60000L
+        // only data files and deletion-vector blobs are candidates:
+        // commit-protocol sidecars (_SUCCESS, .crc) are never in a
+        // manifest, and a live file's checksum sidecar must not be
+        // swept out from under it
+        val s = Files.walk(dataDir)
+        val all = try s.iterator().asScala.filter(p =>
+          Files.isRegularFile(p) && (p.getFileName.toString.endsWith(".parquet") ||
+            p.getFileName.toString.endsWith(".dv") ||
+            p.getFileName.toString.endsWith(".eq"))).toSeq
+          finally s.close()
+        val orphans = all.filter { p =>
+          val rel = dir.relativize(p).toString
+          !referenced.contains(rel) &&
+            Files.getLastModifiedTime(p).toMillis < cutoff
+        }
+        orphans.foreach(Files.deleteIfExists(_))
+        // sweep now-empty staging dirs (cosmetic, best-effort)
+        val d = Files.list(dataDir)
+        try d.iterator().asScala.filter(Files.isDirectory(_)).foreach { sub =>
+          val l = Files.list(sub)
+          val empty = try !l.iterator().hasNext finally l.close()
+          if (empty) Files.deleteIfExists(sub)
+        } finally d.close()
+        (all.size, orphans.size)
       }
-    }
+    Seq(InternalRow(scanned, deleted))
+  }
 }
 
 /** `CALL <cat>.system.history(table => 'ns.t' [, branch => 'b'])` —
@@ -1764,65 +1670,41 @@ private[catalog] class RemoveOrphansProcedure(cat: GraftCatalog)
   * version, ts_millis, op, data_change, n_files, n_rows (−1 when any
   * file predates stats collection). Metadata-only: reads one manifest
   * file, never data. */
-private[catalog] class HistoryProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
+private[catalog] class HistoryProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "history",
+    "the table's retained commit log, oldest first (DESCRIBE HISTORY)",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("branch", StringType)
+        .defaultValue("NULL").comment("read a WAP branch's chain instead of main").build()),
+    StructType(Seq(
+      StructField("version", IntegerType, nullable = false),
+      StructField("ts_millis", LongType, nullable = false),
+      StructField("op", StringType, nullable = false),
+      StructField("data_change", BooleanType, nullable = false),
+      StructField("n_files", IntegerType, nullable = false),
+      StructField("n_rows", LongType, nullable = false)))) {
 
-  override def name(): String = "history"
-  override def description(): String =
-    "the table's retained commit log, oldest first (DESCRIBE HISTORY)"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = HistoryProcedure.this.name()
-      override def description(): String = HistoryProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("branch", StringType)
-          .defaultValue("NULL").comment("read a WAP branch's chain instead of main").build())
-
-      private val outSchema = StructType(Seq(
-        StructField("version", IntegerType, nullable = false),
-        StructField("ts_millis", LongType, nullable = false),
-        StructField("op", StringType, nullable = false),
-        StructField("data_change", BooleanType, nullable = false),
-        StructField("n_files", IntegerType, nullable = false),
-        StructField("n_rows", LongType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val branch = if (input.isNullAt(1)) None else Some(input.getUTF8String(1).toString)
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val m = TableMeta.read(dir)
-        val chain = branch match {
-          case Some(b) => m.branches.getOrElse(b, throw new IllegalArgumentException(
-            s"no branch '$b' on $table (have: ${m.branches.keys.toSeq.sorted.mkString(", ")})"))
-          case None => m.history
-        }
-        // NOT named `rows`: inside the LocalScan that name resolves to
-        // the override itself — a tail-recursive self-call scalac turns
-        // into an infinite loop (caught by a thread dump, r13)
-        val logRows = chain.sortBy(_.version).map { c =>
-          val rowCounts = c.files.map(f => c.stats.get(f).map(_.rows))
-          // live rows = physical rows minus deletion-vector tombstones
-          val nRows = if (rowCounts.forall(_.isDefined))
-            rowCounts.flatten.sum - c.dvs.values.map(_.rows).sum
-          else -1L
-          InternalRow(c.version, c.tsMillis, UTF8String.fromString(c.op),
-            c.dataChange, c.files.size, nRows)
-        }.toArray
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = logRows
-          override def readSchema(): StructType = outSchema
-        }).iterator()
-      }
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val branch = if (input.isNullAt(1)) None else Some(input.getUTF8String(1).toString)
+    val dir = cat.existingTableDir(table)
+    val m = TableMeta.read(dir)
+    val chain = branch match {
+      case Some(b) => m.branches.getOrElse(b, throw new IllegalArgumentException(
+        s"no branch '$b' on $table (have: ${m.branches.keys.toSeq.sorted.mkString(", ")})"))
+      case None => m.history
     }
+    chain.sortBy(_.version).map { c =>
+      val rowCounts = c.files.map(f => c.stats.get(f).map(_.rows))
+      // live rows = physical rows minus deletion-vector tombstones
+      val nRows = if (rowCounts.forall(_.isDefined))
+        rowCounts.flatten.sum - c.dvs.values.map(_.rows).sum
+      else -1L
+      InternalRow(c.version, c.tsMillis, UTF8String.fromString(c.op),
+        c.dataChange, c.files.size, nRows)
+    }
+  }
 }
 
 /** `CALL <cat>.system.tag(table => 'ns.t', tag => 'rel-1' [, version =>
@@ -1835,80 +1717,55 @@ private[catalog] class HistoryProcedure(cat: GraftCatalog)
   * names share the `VERSION AS OF` namespace with branches, so
   * collisions (and numeric names, which version-number parsing would
   * shadow) are refused at tag time. Returns (action, tag, version). */
-private[catalog] class TagProcedure(cat: GraftCatalog, untag: Boolean)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  override def name(): String = if (untag) "untag" else "tag"
-  override def description(): String =
+private[catalog] class TagProcedure(cat: GraftCatalog, untag: Boolean) extends GraftProcedure(
+    if (untag) "untag" else "tag",
     if (untag) "remove a named version tag"
-    else "pin a version under an immutable name (retention-proof; VERSION AS OF '<tag>')"
+    else "pin a version under an immutable name (retention-proof; VERSION AS OF '<tag>')",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("tag", StringType).build()) ++
+      (if (untag) Nil
+      else Seq(ProcedureParameter.in("version", IntegerType)
+        .defaultValue("NULL").comment("defaults to the current latest version").build())),
+    StructType(Seq(
+      StructField("action", StringType, nullable = false),
+      StructField("tag", StringType, nullable = false),
+      StructField("version", IntegerType, nullable = false)))) {
 
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = TagProcedure.this.name()
-      override def description(): String = TagProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] =
-        if (untag) Array(
-          procedures.ProcedureParameter.in("table", StringType).build(),
-          procedures.ProcedureParameter.in("tag", StringType).build())
-        else Array(
-          procedures.ProcedureParameter.in("table", StringType).build(),
-          procedures.ProcedureParameter.in("tag", StringType).build(),
-          procedures.ProcedureParameter.in("version", IntegerType)
-            .defaultValue("NULL").comment("defaults to the current latest version").build())
-
-      private val outSchema = StructType(Seq(
-        StructField("action", StringType, nullable = false),
-        StructField("tag", StringType, nullable = false),
-        StructField("version", IntegerType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val tagName = input.getUTF8String(1).toString
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val v = GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-          _ => new Object).synchronized {
-          val m = TableMeta.read(dir)
-          if (untag) {
-            val v = m.tags.getOrElse(tagName, throw new IllegalArgumentException(
-              s"no tag '$tagName' on $table (tags: ${m.tags.keys.toSeq.sorted.mkString(", ")})"))
-            TableMeta.write(dir, m.copy(tags = m.tags - tagName),
-              expectedLatest = Some(m.latest))
-            v
-          } else {
-            require(tagName.nonEmpty && tagName.toIntOption.isEmpty,
-              s"tag name '$tagName' must be non-empty and non-numeric " +
-                "(a numeric name is shadowed by version-number resolution)")
-            require(!m.branches.contains(tagName),
-              s"'$tagName' is already a branch of $table (tags and branches share " +
-                "the VERSION AS OF namespace)")
-            require(!m.tags.contains(tagName),
-              s"tag '$tagName' already exists on $table (tags are immutable; untag first)")
-            val v = if (input.isNullAt(2)) m.latest else input.getInt(2)
-            require(m.history.exists(_.version == v),
-              s"cannot tag $table@v$v: not in history " +
-                s"(${m.history.map(_.version).mkString(",")})")
-            TableMeta.write(dir, m.copy(tags = m.tags + (tagName -> v)),
-              expectedLatest = Some(m.latest))
-            v
-          }
-        }
-        val row: InternalRow = InternalRow(
-          UTF8String.fromString(if (untag) "untagged" else "tagged"),
-          UTF8String.fromString(tagName), v)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val tagName = input.getUTF8String(1).toString
+    val dir = cat.existingTableDir(table)
+    val v = GraftTable.withCommitLock(dir) {
+      val m = TableMeta.read(dir)
+      if (untag) {
+        val v = m.tags.getOrElse(tagName, throw new IllegalArgumentException(
+          s"no tag '$tagName' on $table (tags: ${m.tags.keys.toSeq.sorted.mkString(", ")})"))
+        TableMeta.write(dir, m.copy(tags = m.tags - tagName),
+          expectedLatest = Some(m.latest))
+        v
+      } else {
+        require(tagName.nonEmpty && tagName.toIntOption.isEmpty,
+          s"tag name '$tagName' must be non-empty and non-numeric " +
+            "(a numeric name is shadowed by version-number resolution)")
+        require(!m.branches.contains(tagName),
+          s"'$tagName' is already a branch of $table (tags and branches share " +
+            "the VERSION AS OF namespace)")
+        require(!m.tags.contains(tagName),
+          s"tag '$tagName' already exists on $table (tags are immutable; untag first)")
+        val v = if (input.isNullAt(2)) m.latest else input.getInt(2)
+        require(m.history.exists(_.version == v),
+          s"cannot tag $table@v$v: not in history " +
+            s"(${m.history.map(_.version).mkString(",")})")
+        TableMeta.write(dir, m.copy(tags = m.tags + (tagName -> v)),
+          expectedLatest = Some(m.latest))
+        v
       }
     }
+    Seq(InternalRow(
+      UTF8String.fromString(if (untag) "untagged" else "tagged"),
+      UTF8String.fromString(tagName), v))
+  }
 }
 
 /** `CALL <cat>.system.set_clustering(table => 'ns.t', cluster_by =>
@@ -1923,75 +1780,53 @@ private[catalog] class TagProcedure(cat: GraftCatalog, untag: Boolean)
   * unclustered. Same transform grammar and validation as
   * `PARTITIONED BY` (identity / days / hours; bucket stays rejected).
   * Returns (old_clustering, new_clustering). */
-private[catalog] class SetClusteringProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
+private[catalog] class SetClusteringProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "set_clustering",
+    "change the write-path clustering for FUTURE writes; existing files are untouched",
+    Array(
+      ProcedureParameter.in("table", StringType).build(),
+      ProcedureParameter.in("cluster_by", StringType)
+        .comment("comma-separated identity/days(col)/hours(col) keys; '' = unclustered")
+        .build()),
+    StructType(Seq(
+      StructField("old_clustering", StringType, nullable = false),
+      StructField("new_clustering", StringType, nullable = false)))) {
 
-  override def name(): String = "set_clustering"
-  override def description(): String =
-    "change the write-path clustering for FUTURE writes; existing files are untouched"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = SetClusteringProcedure.this.name()
-      override def description(): String = SetClusteringProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("cluster_by", StringType)
-          .comment("comma-separated identity/days(col)/hours(col) keys; '' = unclustered")
-          .build())
-
-      private val outSchema = StructType(Seq(
-        StructField("old_clustering", StringType, nullable = false),
-        StructField("new_clustering", StringType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val clusterBy = ClusterSpec.splitList(input.getUTF8String(1).toString)
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val old = GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-          _ => new Object).synchronized {
-          val m = TableMeta.read(dir)
-          ClusterSpec.validate(clusterBy, m.schema)
-          // identity/time keys evolve freely (write-path only, existing
-          // files keep their old layout) — but a NEW or CHANGED bucket
-          // spec would leave existing files without valid bucket ids, so
-          // it is only accepted on an empty table; dropping the bucket
-          // spec is always fine (stale ids are simply ignored)
-          val newBucket = clusterBy.flatMap(ClusterSpec.parseBucket).headOption
-          val oldBucket = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
-          if (newBucket.isDefined && newBucket != oldBucket) {
-            // EVERY retained version must be file-free, not just the
-            // latest: a time-travel scan of an old version reads its
-            // files' recorded bucket ids against the CURRENT layout, and
-            // stale mod-n labels would mis-co-locate an SPJ join
-            require(m.history.forall(_.files.isEmpty) && m.branches.isEmpty,
-              s"cannot change the bucket layout of $table: retained versions still " +
-                "reference files whose recorded bucket ids were computed under the " +
-                "old layout; expire them first, or INSERT OVERWRITE into a freshly " +
-                "bucketed table")
-            // MOR + bucket compose since r15 (delta inserts fan out
-            // bucket-pure) — no mode restriction here either
-          }
-          TableMeta.write(dir, m.copy(clusterBy = clusterBy),
-            expectedLatest = Some(m.latest))
-          m.clusterBy
-        }
-        val row: InternalRow = InternalRow(
-          UTF8String.fromString(old.mkString(",")),
-          UTF8String.fromString(clusterBy.mkString(",")))
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val clusterBy = ClusterSpec.splitList(input.getUTF8String(1).toString)
+    val dir = cat.existingTableDir(table)
+    val old = GraftTable.withCommitLock(dir) {
+      val m = TableMeta.read(dir)
+      ClusterSpec.validate(clusterBy, m.schema)
+      // identity/time keys evolve freely (write-path only, existing
+      // files keep their old layout) — but a NEW or CHANGED bucket
+      // spec would leave existing files without valid bucket ids, so
+      // it is only accepted on an empty table; dropping the bucket
+      // spec is always fine (stale ids are simply ignored)
+      val newBucket = clusterBy.flatMap(ClusterSpec.parseBucket).headOption
+      val oldBucket = m.clusterBy.flatMap(ClusterSpec.parseBucket).headOption
+      if (newBucket.isDefined && newBucket != oldBucket) {
+        // EVERY retained version must be file-free, not just the
+        // latest: a time-travel scan of an old version reads its
+        // files' recorded bucket ids against the CURRENT layout, and
+        // stale mod-n labels would mis-co-locate an SPJ join
+        require(m.history.forall(_.files.isEmpty) && m.branches.isEmpty,
+          s"cannot change the bucket layout of $table: retained versions still " +
+            "reference files whose recorded bucket ids were computed under the " +
+            "old layout; expire them first, or INSERT OVERWRITE into a freshly " +
+            "bucketed table")
+        // MOR + bucket compose since r15 (delta inserts fan out
+        // bucket-pure) — no mode restriction here either
       }
+      TableMeta.write(dir, m.copy(clusterBy = clusterBy),
+        expectedLatest = Some(m.latest))
+      m.clusterBy
     }
+    Seq(InternalRow(
+      UTF8String.fromString(old.mkString(",")),
+      UTF8String.fromString(clusterBy.mkString(","))))
+  }
 }
 
 /** WAP (write-audit-publish) branch maintenance:
@@ -2021,88 +1856,68 @@ private[catalog] class SetClusteringProcedure(cat: GraftCatalog)
   * serving the unpublished corpus. Returns one row
   * (action, branch, version, detail). */
 private[catalog] class BranchProcedure(cat: GraftCatalog, mode: BranchProcedure.Mode)
-    extends procedures.UnboundProcedure {
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  override def name(): String = mode.procName
-  override def description(): String = mode.describe
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = BranchProcedure.this.name()
-      override def description(): String = BranchProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", StringType).build(),
-        procedures.ProcedureParameter.in("branch", StringType).build())
-
-      private val outSchema = StructType(Seq(
+    extends GraftProcedure(
+      mode.procName,
+      mode.describe,
+      Array(
+        ProcedureParameter.in("table", StringType).build(),
+        ProcedureParameter.in("branch", StringType).build()),
+      StructType(Seq(
         StructField("action", StringType, nullable = false),
         StructField("branch", StringType, nullable = false),
         StructField("version", IntegerType, nullable = false),
-        StructField("detail", IntegerType, nullable = false)))
+        StructField("detail", IntegerType, nullable = false)))) {
 
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val table = input.getUTF8String(0).toString
-        val b = input.getUTF8String(1).toString
-        require(b.matches("[A-Za-z0-9_]+"),
-          s"branch names are [A-Za-z0-9_]+ (they become the identifier suffix branch_$b), got '$b'")
-        val dir = cat.tableDirOf(table)
-        require(Files.exists(dir.resolve(TableMeta.MetaFile)),
-          s"no such table '$table' in catalog ${cat.name()}")
-        val (version, detail) =
-          GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-            _ => new Object).synchronized {
-            val m = TableMeta.read(dir)
-            mode match {
-              case BranchProcedure.Create =>
-                require(!m.branches.contains(b), s"branch '$b' already exists on $table")
-                TableMeta.write(dir, m.copy(branches = m.branches + (b -> m.history)),
-                  expectedLatest = Some(m.latest))
-                (m.latest, 0)
-              case BranchProcedure.Publish =>
-                val ch = m.branches.getOrElse(b, throw new IllegalArgumentException(
-                  s"no branch '$b' on $table"))
-                if (ch.take(m.history.size) != m.history)
-                  throw new IllegalStateException(
-                    s"cannot publish branch '$b' of $table: main advanced since the fork " +
-                      s"(main at v${m.latest}); re-stage against the current head")
-                TableMeta.write(dir, m.copy(history = ch, branches = m.branches - b),
-                  expectedLatest = Some(m.latest))
-                (ch.map(_.version).max, ch.size - m.history.size)
-              case BranchProcedure.Drop =>
-                val ch = m.branches.getOrElse(b, throw new IllegalArgumentException(
-                  s"no branch '$b' on $table"))
-                def refs(c: Commit): Seq[String] =
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val table = input.getUTF8String(0).toString
+    val b = input.getUTF8String(1).toString
+    require(b.matches("[A-Za-z0-9_]+"),
+      s"branch names are [A-Za-z0-9_]+ (they become the identifier suffix branch_$b), got '$b'")
+    val dir = cat.existingTableDir(table)
+    val (version, detail) =
+      GraftTable.withCommitLock(dir) {
+        val m = TableMeta.read(dir)
+        mode match {
+          case BranchProcedure.Create =>
+            require(!m.branches.contains(b), s"branch '$b' already exists on $table")
+            TableMeta.write(dir, m.copy(branches = m.branches + (b -> m.history)),
+              expectedLatest = Some(m.latest))
+            (m.latest, 0)
+          case BranchProcedure.Publish =>
+            val ch = m.branches.getOrElse(b, throw new IllegalArgumentException(
+              s"no branch '$b' on $table"))
+            if (ch.take(m.history.size) != m.history)
+              throw new IllegalStateException(
+                s"cannot publish branch '$b' of $table: main advanced since the fork " +
+                  s"(main at v${m.latest}); re-stage against the current head")
+            TableMeta.write(dir, m.copy(history = ch, branches = m.branches - b),
+              expectedLatest = Some(m.latest))
+            (ch.map(_.version).max, ch.size - m.history.size)
+          case BranchProcedure.Drop =>
+            val ch = m.branches.getOrElse(b, throw new IllegalArgumentException(
+              s"no branch '$b' on $table"))
+            def refs(c: Commit): Seq[String] =
               c.files ++ c.dvs.values.map(_.path) ++ c.eqs.map(_.path)
-                val retained = (m.history.flatMap(refs) ++
-                  (m.branches - b).values.flatten.flatMap(refs)).toSet
-                val orphans = ch.flatMap(refs).distinct.filterNot(retained)
-                TableMeta.write(dir, m.copy(branches = m.branches - b),
-                  expectedLatest = Some(m.latest))
-                orphans.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-                (m.latest, orphans.size)
-              case BranchProcedure.Rebase =>
-                val ch = m.branches.getOrElse(b, throw new IllegalArgumentException(
-                  s"no branch '$b' on $table"))
-                val rebased = BranchProcedure.rebasedChain(table, m, b)
-                val nStaged = rebased.size - m.history.size
-                TableMeta.write(dir, m.copy(branches = m.branches + (b -> rebased)),
-                  expectedLatest = Some(m.latest))
-                (rebased.map(_.version).max, nStaged)
-            }
-          }
-        val row: InternalRow = InternalRow(UTF8String.fromString(mode.action),
-          UTF8String.fromString(b), version, detail)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+            val retained = (m.history.flatMap(refs) ++
+              (m.branches - b).values.flatten.flatMap(refs)).toSet
+            val orphans = ch.flatMap(refs).distinct.filterNot(retained)
+            TableMeta.write(dir, m.copy(branches = m.branches - b),
+              expectedLatest = Some(m.latest))
+            orphans.foreach(f => Files.deleteIfExists(dir.resolve(f)))
+            (m.latest, orphans.size)
+          case BranchProcedure.Rebase =>
+            val ch = m.branches.getOrElse(b, throw new IllegalArgumentException(
+              s"no branch '$b' on $table"))
+            val rebased = BranchProcedure.rebasedChain(table, m, b)
+            val nStaged = rebased.size - m.history.size
+            TableMeta.write(dir, m.copy(branches = m.branches + (b -> rebased)),
+              expectedLatest = Some(m.latest))
+            (rebased.map(_.version).max, nStaged)
+        }
       }
-    }
+    Seq(InternalRow(UTF8String.fromString(mode.action),
+      UTF8String.fromString(b), version, detail))
+  }
 }
 
 private[catalog] object BranchProcedure {
@@ -2284,8 +2099,7 @@ private[catalog] object TableMeta {
   import org.json4s.jackson.JsonMethods
 
   def write(dir: Path, meta: TableMeta, expectedLatest: Option[Int]): Unit =
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       // optimistic concurrency: the caller computed `meta` against
       // `expectedLatest`; if another writer has since committed, fail the
       // commit instead of overwriting its manifest entry
@@ -2471,8 +2285,7 @@ class GraftTable(tableName: String, dir: Path, pinnedVersion: Option[Int],
     // a commit racing between canDeleteWhere and here either re-proves
     // against ITS manifest or fails this delete's conflict check instead
     // of dropping files a newer version still references
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       val dropped = metadataDeleteSet(predicates).getOrElse(throw new IllegalStateException(
         s"$tableName: metadata delete no longer provable at commit time " +
           "(a concurrent commit changed the manifest); re-run the DELETE"))
@@ -2889,8 +2702,7 @@ class GraftTable(tableName: String, dir: Path, pinnedVersion: Option[Int],
                                       newStats: Map[String, FileStats],
                                       deletes: Map[String, Array[Long]]): Unit = {
     if (newFiles.isEmpty && deletes.isEmpty) return // a no-op verb commits nothing
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       val m = meta
       val mf = chainManifest(m, baseVersion) // throws if base expired meanwhile
       val conf = spark.sessionState.newHadoopConf()
@@ -3048,8 +2860,7 @@ class GraftTable(tableName: String, dir: Path, pinnedVersion: Option[Int],
                                      replacedFiles: Option[Seq[String]] = None,
                                      dvUpdates: Map[String, DvRef] = Map.empty,
                                      eqAdd: Option[(String, String, Long)] = None): Boolean =
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       val m = meta
       val ch = chain(m)
       val replayed = streamEpoch.exists { case (qid, eid) =>
@@ -3156,7 +2967,13 @@ class GraftTable(tableName: String, dir: Path, pinnedVersion: Option[Int],
 private[catalog] object GraftTable {
   /** Per-table commit locks (JVM-wide — all sessions of one SparkContext
     * share the catalog state, like the staged-artifact latches). */
-  val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Runs `body` holding table `dir`'s commit lock. The lock is a
+    * reentrant monitor: [[TableMeta.write]] re-takes it while
+    * `commitVersion`, `commitRowDelta` and the procedures hold it. */
+  def withCommitLock[T](dir: Path)(body: => T): T =
+    commitLocks.computeIfAbsent(dir.toAbsolutePath.toString, _ => new Object).synchronized(body)
 
   /** Table property selecting how MERGE/UPDATE/DELETE commit (Iceberg's
     * `write.delete.mode` family collapsed to one knob): `copy-on-write`

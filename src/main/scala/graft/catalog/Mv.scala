@@ -5,9 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.connector.catalog.{Identifier, procedures}
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.connector.catalog.procedures.ProcedureParameter
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -135,11 +135,8 @@ private[graft] object Mv {
     * so no deadlock is reachable. */
   def refresh(ss: SparkSession, cat: GraftCatalog, view: String,
               forceFull: Boolean): RefreshResult = {
-    val mvDir = cat.tableDirOf(view)
-    require(Files.exists(mvDir.resolve(TableMeta.MetaFile)),
-      s"no such table '$view' in catalog ${cat.name()}")
-    GraftTable.commitLocks.computeIfAbsent(mvDir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    val mvDir = cat.existingTableDir(view)
+    GraftTable.withCommitLock(mvDir) {
       refreshLocked(ss, cat, view, forceFull, mvDir)
     }
   }
@@ -275,8 +272,7 @@ private[graft] object Mv {
   def resetWatermark(ss: SparkSession, mvTable: String, to: Int): Unit = {
     val dir = Manifests.tableDir(ss, mvTable)
     require(to >= 0, s"watermark must be >= 0, got $to")
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       val m = TableMeta.read(dir)
       require(m.props.contains(WatermarkProp), s"'$mvTable' is not a materialized view")
       TableMeta.write(dir, m.copy(props = m.props + (WatermarkProp -> to.toString)),
@@ -291,8 +287,7 @@ private[graft] object Mv {
     * regress a newer one's mark; deliberate rewinds go through
     * [[resetWatermark]]). */
   private def bumpWatermark(mvDir: java.nio.file.Path, to: Int): Unit =
-    GraftTable.commitLocks.computeIfAbsent(mvDir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(mvDir) {
       val m = TableMeta.read(mvDir)
       if (!m.props.get(WatermarkProp).exists(_.toInt >= to))
         TableMeta.write(mvDir, m.copy(props = m.props + (WatermarkProp -> to.toString)),
@@ -356,115 +351,100 @@ private[graft] object MvAgg {
   * CLUSTERED BY the group keys (so the refresh MERGE prunes MV files)
   * whose props carry the definition and the source-version watermark.
   * Returns (view, source_version, rows). */
-private[catalog] class CreateMvProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
+private[catalog] class CreateMvProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "create_mv",
+    "create + initially load an incrementally-maintained materialized view",
+    Array(
+      ProcedureParameter.in("view", StringType).build(),
+      ProcedureParameter.in("source", StringType).build(),
+      ProcedureParameter.in("keys", StringType).build(),
+      ProcedureParameter.in("aggs", StringType)
+        .comment("alias:count | alias:sum(col) | min | max | avg, comma-separated")
+        .build(),
+      ProcedureParameter.in("where", StringType)
+        .defaultValue("NULL")
+        .comment("optional row filter over source columns (deterministic, " +
+          "no subqueries); affected-key recompute re-applies it per refresh")
+        .build()),
+    StructType(Seq(
+      StructField("view", StringType, nullable = false),
+      StructField("source_version", IntegerType, nullable = false),
+      StructField("rows", LongType, nullable = false)))) {
 
-  override def name(): String = "create_mv"
-  override def description(): String =
-    "create + initially load an incrementally-maintained materialized view"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = CreateMvProcedure.this.name()
-      override def description(): String = CreateMvProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("view", StringType).build(),
-        procedures.ProcedureParameter.in("source", StringType).build(),
-        procedures.ProcedureParameter.in("keys", StringType).build(),
-        procedures.ProcedureParameter.in("aggs", StringType)
-          .comment("alias:count | alias:sum(col) | min | max | avg, comma-separated")
-          .build(),
-        procedures.ProcedureParameter.in("where", StringType)
-          .defaultValue("NULL")
-          .comment("optional row filter over source columns (deterministic, " +
-            "no subqueries); affected-key recompute re-applies it per refresh")
-          .build())
-
-      private val outSchema = StructType(Seq(
-        StructField("view", StringType, nullable = false),
-        StructField("source_version", IntegerType, nullable = false),
-        StructField("rows", LongType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val view = input.getUTF8String(0).toString
-        val source = input.getUTF8String(1).toString
-        val keys = input.getUTF8String(2).toString
-          .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        val aggs = MvAgg.parseList(input.getUTF8String(3).toString)
-        val where = if (input.isNullAt(4)) None
-          else Some(input.getUTF8String(4).toString).filter(_.trim.nonEmpty)
-        require(keys.nonEmpty, "keys must name at least one group-by column")
-        // the incremental contract covers exactly ONE source table: a
-        // join would need a watermark PAIR (one change feed per side,
-        // affected keys from either) — refused loudly, not half-built
-        require("\\s".r.findFirstIn(source.trim).isEmpty,
-          s"source must be a single ns.table identifier, got '$source' — an MV over " +
-            "a join is not supported: incremental maintenance tracks ONE source " +
-            "watermark; materialize the join as a table (or stream it) and define " +
-            "the MV over that")
-        val srcDir = cat.tableDirOf(source)
-        require(Files.exists(srcDir.resolve(TableMeta.MetaFile)),
-          s"no such source table '$source' in catalog ${cat.name()}")
-        val srcMeta = TableMeta.read(srcDir)
-        (keys ++ aggs.flatMap(_.column)).foreach(c =>
-          require(srcMeta.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-            s"column '$c' is not in ${source}'s schema " +
-              s"(${srcMeta.schema.fieldNames.mkString(", ")})"))
-        aggs.foreach(a => require(!keys.exists(_.equalsIgnoreCase(a.alias)),
-          s"aggregate alias '${a.alias}' collides with a group key"))
-        val ss = SparkSession.active
-        val v = srcMeta.latest
-        // WHERE validation: analyze the filter against the source NOW
-        // (bad references fail the CALL, not the first refresh), then
-        // refuse subqueries (a second source outside the watermark) and
-        // nondeterminism (refresh idempotence)
-        where.foreach { w =>
-          val analyzed = ss.sql(
-            s"SELECT count(*) FROM ${cat.name()}.$source WHERE $w").queryExecution.analyzed
-          analyzed.foreach { plan =>
-            plan.expressions.foreach(_.foreach {
-              case _: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-                throw new IllegalArgumentException(
-                  s"MV where-clause '$w' contains a subquery: it would reference a " +
-                    "second source the MV's watermark does not track; inline the " +
-                    "values or materialize the other table into the source")
-              case e if !e.deterministic =>
-                throw new IllegalArgumentException(
-                  s"MV where-clause '$w' is nondeterministic ($e): refreshes would " +
-                    "not be idempotent")
-              case _ => ()
-            })
-          }
-        }
-        // MV schema = what the recompute produces (Spark owns the agg
-        // result types; deriving them from an empty frame means the DDL
-        // can never drift from the refresh)
-        val d = Mv.Def(source, keys, aggs, where)
-        val empty = ss.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), srcMeta.schema)
-        val mvSchema = empty.groupBy(keys.map(col): _*)
-          .agg(aggs.head.toColumn, aggs.tail.map(_.toColumn): _*).schema
-        val parts = view.split('.')
-        val ident = Identifier.of(parts.dropRight(1), parts.last)
-        val props = new java.util.HashMap[String, String]()
-        props.put(Mv.SourceProp, source)
-        props.put(Mv.KeysProp, keys.mkString(","))
-        props.put(Mv.AggsProp, MvAgg.canonical(aggs))
-        where.foreach(props.put(Mv.WhereProp, _))
-        props.put(Mv.WatermarkProp, v.toString)
-        cat.createTable(ident, mvSchema,
-          keys.map(k => Expressions.identity(k)).toArray[Transform], props)
-        val mvFq = s"${cat.name()}.$view"
-        ss.sql(s"INSERT INTO $mvFq ${Mv.recomputeSql(d, s"${cat.name()}.$source", v, None)}")
-        val rows = ss.table(mvFq).count()
-        val row: InternalRow = InternalRow(UTF8String.fromString(view), v, rows)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val view = input.getUTF8String(0).toString
+    val source = input.getUTF8String(1).toString
+    val keys = input.getUTF8String(2).toString
+      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val aggs = MvAgg.parseList(input.getUTF8String(3).toString)
+    val where = if (input.isNullAt(4)) None
+      else Some(input.getUTF8String(4).toString).filter(_.trim.nonEmpty)
+    require(keys.nonEmpty, "keys must name at least one group-by column")
+    // the incremental contract covers exactly ONE source table: a
+    // join would need a watermark PAIR (one change feed per side,
+    // affected keys from either) — refused loudly, not half-built
+    require("\\s".r.findFirstIn(source.trim).isEmpty,
+      s"source must be a single ns.table identifier, got '$source' — an MV over " +
+        "a join is not supported: incremental maintenance tracks ONE source " +
+        "watermark; materialize the join as a table (or stream it) and define " +
+        "the MV over that")
+    val srcDir = cat.tableDirOf(source)
+    require(Files.exists(srcDir.resolve(TableMeta.MetaFile)),
+      s"no such source table '$source' in catalog ${cat.name()}")
+    val srcMeta = TableMeta.read(srcDir)
+    (keys ++ aggs.flatMap(_.column)).foreach(c =>
+      require(srcMeta.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+        s"column '$c' is not in ${source}'s schema " +
+          s"(${srcMeta.schema.fieldNames.mkString(", ")})"))
+    aggs.foreach(a => require(!keys.exists(_.equalsIgnoreCase(a.alias)),
+      s"aggregate alias '${a.alias}' collides with a group key"))
+    val ss = SparkSession.active
+    val v = srcMeta.latest
+    // WHERE validation: analyze the filter against the source NOW
+    // (bad references fail the CALL, not the first refresh), then
+    // refuse subqueries (a second source outside the watermark) and
+    // nondeterminism (refresh idempotence)
+    where.foreach { w =>
+      val analyzed = ss.sql(
+        s"SELECT count(*) FROM ${cat.name()}.$source WHERE $w").queryExecution.analyzed
+      analyzed.foreach { plan =>
+        plan.expressions.foreach(_.foreach {
+          case _: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
+            throw new IllegalArgumentException(
+              s"MV where-clause '$w' contains a subquery: it would reference a " +
+                "second source the MV's watermark does not track; inline the " +
+                "values or materialize the other table into the source")
+          case e if !e.deterministic =>
+            throw new IllegalArgumentException(
+              s"MV where-clause '$w' is nondeterministic ($e): refreshes would " +
+                "not be idempotent")
+          case _ => ()
+        })
       }
     }
+    // MV schema = what the recompute produces (Spark owns the agg
+    // result types; deriving them from an empty frame means the DDL
+    // can never drift from the refresh)
+    val d = Mv.Def(source, keys, aggs, where)
+    val empty = ss.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), srcMeta.schema)
+    val mvSchema = empty.groupBy(keys.map(col): _*)
+      .agg(aggs.head.toColumn, aggs.tail.map(_.toColumn): _*).schema
+    val parts = view.split('.')
+    val ident = Identifier.of(parts.dropRight(1), parts.last)
+    val props = new java.util.HashMap[String, String]()
+    props.put(Mv.SourceProp, source)
+    props.put(Mv.KeysProp, keys.mkString(","))
+    props.put(Mv.AggsProp, MvAgg.canonical(aggs))
+    where.foreach(props.put(Mv.WhereProp, _))
+    props.put(Mv.WatermarkProp, v.toString)
+    cat.createTable(ident, mvSchema,
+      keys.map(k => Expressions.identity(k)).toArray[Transform], props)
+    val mvFq = s"${cat.name()}.$view"
+    ss.sql(s"INSERT INTO $mvFq ${Mv.recomputeSql(d, s"${cat.name()}.$source", v, None)}")
+    val rows = ss.table(mvFq).count()
+    Seq(InternalRow(UTF8String.fromString(view), v, rows))
+  }
 }
 
 /** `CALL <cat>.system.refresh_mv(view => 'ns.mv' [, force_full =>
@@ -473,42 +453,27 @@ private[catalog] class CreateMvProcedure(cat: GraftCatalog)
   * vanished_keys); `mode` is `incremental` (affected-key recompute via
   * the change feed), `full_fallback` (feed unreconstructable — a
   * watermark version was expired), `full_forced`, or `noop`. */
-private[catalog] class RefreshMvProcedure(cat: GraftCatalog)
-    extends procedures.UnboundProcedure {
+private[catalog] class RefreshMvProcedure(cat: GraftCatalog) extends GraftProcedure(
+    "refresh_mv",
+    "refresh a materialized view (affected-key recompute driven by the change feed)",
+    Array(
+      ProcedureParameter.in("view", StringType).build(),
+      ProcedureParameter.in("force_full", BooleanType)
+        .defaultValue("false").comment("skip the change feed; recompute everything")
+        .build()),
+    StructType(Seq(
+      StructField("from_version", IntegerType, nullable = false),
+      StructField("to_version", IntegerType, nullable = false),
+      StructField("mode", StringType, nullable = false),
+      StructField("changed_keys", LongType, nullable = false),
+      StructField("live_keys", LongType, nullable = false),
+      StructField("vanished_keys", LongType, nullable = false)))) {
 
-  override def name(): String = "refresh_mv"
-  override def description(): String =
-    "refresh a materialized view (affected-key recompute driven by the change feed)"
-
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = RefreshMvProcedure.this.name()
-      override def description(): String = RefreshMvProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("view", StringType).build(),
-        procedures.ProcedureParameter.in("force_full", BooleanType)
-          .defaultValue("false").comment("skip the change feed; recompute everything")
-          .build())
-
-      private val outSchema = StructType(Seq(
-        StructField("from_version", IntegerType, nullable = false),
-        StructField("to_version", IntegerType, nullable = false),
-        StructField("mode", StringType, nullable = false),
-        StructField("changed_keys", LongType, nullable = false),
-        StructField("live_keys", LongType, nullable = false),
-        StructField("vanished_keys", LongType, nullable = false)))
-
-      override def call(input: InternalRow): java.util.Iterator[Scan] = {
-        val view = input.getUTF8String(0).toString
-        val forceFull = !input.isNullAt(1) && input.getBoolean(1)
-        val r = Mv.refresh(SparkSession.active, cat, view, forceFull)
-        val row: InternalRow = InternalRow(r.fromVersion, r.toVersion,
-          UTF8String.fromString(r.mode), r.changedKeys, r.liveKeys, r.vanishedKeys)
-        java.util.List.of[Scan](new LocalScan {
-          override def rows(): Array[InternalRow] = Array(row)
-          override def readSchema(): StructType = outSchema
-        }).iterator()
-      }
-    }
+  override protected def body(input: InternalRow): Seq[InternalRow] = {
+    val view = input.getUTF8String(0).toString
+    val forceFull = !input.isNullAt(1) && input.getBoolean(1)
+    val r = Mv.refresh(SparkSession.active, cat, view, forceFull)
+    Seq(InternalRow(r.fromVersion, r.toVersion,
+      UTF8String.fromString(r.mode), r.changedKeys, r.liveKeys, r.vanishedKeys))
+  }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
@@ -190,8 +191,7 @@ private[catalog] class StagedGraftTable(
   }
 
   override def commitStagedChanges(): Unit =
-    GraftTable.commitLocks.computeIfAbsent(dir.toAbsolutePath.toString,
-      _ => new Object).synchronized {
+    GraftTable.withCommitLock(dir) {
       // an aborted/empty SELECT still publishes the schema (a legal CTAS)
       val (files, stats) = stagedFiles.getOrElse((Seq.empty[String], Map.empty[String, FileStats]))
       val now = System.currentTimeMillis()
@@ -252,7 +252,7 @@ private[catalog] class StagedGraftTable(
           .iterator().asScala.foreach(p => Files.deleteIfExists(p))
         finally s.close()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 }
 
 private[catalog] object StagedGraftTable {

@@ -142,13 +142,14 @@ class AggPushdownSpec extends AnyFunSuite {
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT, v BIGINT)")
     (0 until 4).foreach(i =>
-      ss.sql(s"INSERT INTO $t SELECT id, id FROM range(${i * 100}, ${i * 100 + 100})"))
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ id, id " +
+        s"FROM range(${i * 100}, ${i * 100 + 100})"))
     SkipRecorder.clear(s"$t#limit")
     val got = ss.sql(s"SELECT * FROM $t LIMIT 5").collect()
     assert(got.length == 5)
-    // each INSERT fans out over the session's shuffle partitions, so the
-    // manifest holds many small files; the prefix must cover 5 rows with
-    // a HANDFUL of them, never the whole listing
+    // each INSERT writes 8 files whatever the host's core count, so the
+    // manifest holds 32 small files; the prefix must cover 5 rows with a
+    // HANDFUL of them, never the whole listing
     val rec = SkipRecorder.lastFor(s"$t#limit")
     assert(rec.exists { case (kept, total) => kept <= 4 && total > 16 },
       s"expected a tiny file prefix of a large manifest, got $rec")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.Identifier
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.GraftCatalog
 
@@ -161,6 +162,26 @@ class MaintenanceProcSpec extends AnyFunSuite {
     }
     ss.sql(s"CALL $c.system.set_clustering(table => 'ns.t', cluster_by => '')")
     assert(ss.sql(s"SELECT count(*) FROM $t").head().getLong(0) == 4000)
+  }
+
+  test("listProcedures, loadProcedure and the unknown-name error name one procedure set") {
+    val (_, c, root) = freshCatalog("mnt_procs")
+    val cat = new GraftCatalog
+    cat.initialize(c, new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("root", root.toString)))
+    val sys = Array("system")
+    val expected = Set("expire_versions", "compact", "create_branch", "publish_branch",
+      "drop_branch", "rebase_branch", "restore", "remove_orphans", "history", "tag",
+      "untag", "set_clustering", "create_mv", "refresh_mv", "analyze", "eq_upsert")
+    val listed = cat.listProcedures(sys).map(_.name()).toSeq
+    assert(listed.distinct == listed && listed.toSet == expected, s"listed: $listed")
+    expected.foreach(n =>
+      assert(cat.loadProcedure(Identifier.of(sys, n)).name() == n, s"loadProcedure($n)"))
+    val e = intercept[UnsupportedOperationException](
+      cat.loadProcedure(Identifier.of(sys, "no_such_proc")))
+    val available = "\\(available: (.*)\\)$".r.findFirstMatchIn(e.getMessage)
+      .map(_.group(1).split(", ").toSeq)
+    assert(available.contains(listed), e.getMessage)
   }
 
   test("zorder OPTIMIZE validates its arguments") {

@@ -282,8 +282,12 @@ class MorSpec extends AnyFunSuite {
     val (ss, c) = freshCatalog("mor_reclaim")
     val t = s"$c.ns.t"
     seedMor(ss, t, rows = 300)
+    val fileOf5 = ss.sql(s"SELECT _file FROM $t WHERE id = 5").head().getString(0)
     ss.sql(s"DELETE FROM $t WHERE id = 5")   // v4: blob A
-    ss.sql(s"DELETE FROM $t WHERE id = 6")   // v5: blob B (superset), A now only in v4
+    // the second delete must hit id 5's own file, so that B replaces A;
+    // the round-robin seed can put any other id in a different file
+    val sameFileId = ss.sql(s"SELECT min(id) FROM $t WHERE _file = '$fileOf5'").head().getLong(0)
+    ss.sql(s"DELETE FROM $t WHERE id = $sameFileId")   // v5: blob B (superset), A now only in v4
     val dir = Manifests.tableDir(ss, t)
     val blobA = dir.resolve(Manifests.dvInfo(ss, t, 4).head._2._1)
     val blobB = dir.resolve(Manifests.dvInfo(ss, t, 5).values
