@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE bare JSON line on stdout (build.sbt sets StdoutOutput so sbt
@@ -92,6 +93,7 @@ object Bench {
   }
 
   private var stateHygieneFailed = false
+  private var residueSweepFailed = false
 
   /** Inter-query isolation (VERDICT r4 #1): release ALL session state,
     * then settle GC debt, between timed units. See the suite-side use
@@ -122,14 +124,14 @@ object Bench {
       try roots.iterator().asScala
         .filter(p => graft.streaming.StreamingOps
           .isSweepableScratch(p.getFileName.toString))
-        .foreach { root =>
-          val walk = Files.walk(root)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-          finally walk.close()
-        }
+        .foreach(Artifacts.deleteTree)
       finally roots.close()
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) =>
+        if (!residueSweepFailed) System.err.println(
+          s"[bench] streaming residue sweep failed: ${e.getClass.getName}: ${e.getMessage}")
+        residueSweepFailed = true
+    }
     System.gc()
     Thread.sleep(200)
   }

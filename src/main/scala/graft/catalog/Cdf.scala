@@ -162,10 +162,7 @@ private[catalog] class GraftCdfMicroBatchStream(table: GraftTable, cdfSchema: St
                _: java.nio.file.DirectoryNotEmptyException |
                _: java.nio.file.AccessDeniedException =>
             // a racing materializer won; ours is a byte-equal duplicate
-            val walk = Files.walk(tmp)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.deleteIfExists(_))
-            finally walk.close()
+            graft.Artifacts.deleteTree(tmp)
         }
         Some(target)
     }

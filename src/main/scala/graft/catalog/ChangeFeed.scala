@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -54,23 +54,11 @@ object ChangeFeed {
   def tableChanges(ss: SparkSession, table: String, fromVersion: Int,
                    toVersion: Int, keyCols: Seq[String] = Nil): DataFrame = {
     val parts = table.split('.')
-    require(parts.length >= 3, s"need a fully qualified catalog.ns.table, got '$table'")
-    // Resolve through the SESSION's catalog conf directly, not through
-    // CatalogManager: the manager's conf lookup reads the THREAD's active
-    // session (SQLConf.get), so a feed requested from a pool thread — the
-    // bench harness, any job-runner — would resolve against the wrong
-    // session unless the catalog instance happened to be cached. The conf
-    // pair below is exactly what CatalogManager would have read.
-    val cls = ss.conf.getOption(s"spark.sql.catalog.${parts.head}").getOrElse(
-      throw new IllegalArgumentException(
-        s"'${parts.head}' is not a configured catalog on this session"))
-    require(cls == classOf[GraftCatalog].getName,
-      s"'${parts.head}' is not a graft catalog (got $cls)")
-    val root = java.nio.file.Paths.get(ss.conf.get(s"spark.sql.catalog.${parts.head}.root"))
     val branch = Option(parts.last).filter(_.startsWith("branch_")).map(_.stripPrefix("branch_"))
     val tableParts = if (branch.isDefined) parts.tail.dropRight(1) else parts.tail
-    val dir = tableParts.foldLeft(root)(_.resolve(_))
-    require(Files.exists(dir.resolve(TableMeta.MetaFile)), s"no such table '$table'")
+    // resolved through the SESSION's catalog conf, not CatalogManager,
+    // so a feed requested from a pool thread sees the right session
+    val dir = Manifests.tableDir(ss, (parts.head +: tableParts).mkString("."))
     val meta = TableMeta.read(dir)
     val chain = branch match {
       case Some(b) => meta.branches.getOrElse(b, throw new IllegalArgumentException(

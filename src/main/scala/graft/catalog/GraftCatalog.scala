@@ -627,10 +627,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
     val dir = tableDir(ident)
     if (!Files.exists(dir)) false
     else {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
+      graft.Artifacts.deleteTree(dir)
       true
     }
   }
@@ -1197,12 +1194,7 @@ private[catalog] class ExpireVersionsProcedure(cat: GraftCatalog) extends GraftP
             vPat.findFirstMatchIn(p.getFileName.toString)
               .exists(_.group(1).toInt < keepFrom)
           }.toSeq finally l.close()
-          doomed.foreach { d =>
-            val walk = Files.walk(d)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.deleteIfExists(_))
-            finally walk.close()
-          }
+          doomed.foreach(graft.Artifacts.deleteTree)
         }
         (expired.size, kept.size, dead.size)
       }
@@ -3426,7 +3418,7 @@ private[catalog] class GraftStreamingWrite(table: GraftTable, info: LogicalWrite
     if (abs.isEmpty) {
       // empty epoch: nothing to publish, no manifest entry to record —
       // a replayed empty epoch re-appends nothing either way
-      deleteStaged(p.commitDir)
+      graft.Artifacts.deleteTree(p.commitDir)
     } else {
       val files = abs.map(f => table.tableDirPath.relativize(f).toString)
       // re-stamped for id-keyed stats, same reason as the batch path
@@ -3442,17 +3434,11 @@ private[catalog] class GraftStreamingWrite(table: GraftTable, info: LogicalWrite
         // replayed epoch — the original commit already published this
         // data; discard the replica (the whole staged dir: parquet,
         // _SUCCESS marker, checksums)
-        deleteStaged(p.commitDir)
+        graft.Artifacts.deleteTree(p.commitDir)
       }
     }
   }
 
-  private def deleteStaged(dir: Path): Unit = {
-    val walk = Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally walk.close()
-  }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val p = pending.getAndSet(null)

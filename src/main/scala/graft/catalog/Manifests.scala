@@ -13,9 +13,12 @@ import org.apache.spark.sql.SparkSession
   * the plan. Metadata-scale only: file NAME lists, never data. */
 object Manifests {
 
-  /** Resolve a fully qualified `catalog.ns.table` (same resolution as
-    * [[ChangeFeed.tableChanges]] — through the session's catalog conf,
-    * not the thread-bound CatalogManager) to its table directory. */
+  /** Resolve a fully qualified `catalog.ns.table` to its table directory
+    * through the session's catalog conf, not the thread-bound
+    * CatalogManager: the manager's conf lookup reads the THREAD's active
+    * session (SQLConf.get), so a lookup from a pool thread — the bench
+    * harness, any job-runner — would resolve against the wrong session.
+    * [[ChangeFeed.tableChanges]] resolves through here too. */
   def tableDir(ss: SparkSession, table: String): Path = {
     val parts = table.split('.')
     require(parts.length >= 3, s"need a fully qualified catalog.ns.table, got '$table'")

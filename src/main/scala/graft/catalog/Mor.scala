@@ -1,7 +1,6 @@
 package graft.catalog
 
 import java.nio.file.{Files, Path}
-import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 

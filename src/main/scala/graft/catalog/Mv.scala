@@ -2,7 +2,7 @@ package graft.catalog
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.connector.catalog.Identifier

@@ -246,12 +246,7 @@ private[catalog] class StagedGraftTable(
 
   override def abortStagedChanges(): Unit =
     try {
-      if (Files.exists(commitDir)) {
-        val s = Files.walk(commitDir)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-        finally s.close()
-      }
+      graft.Artifacts.deleteTree(commitDir)
     } catch { case NonFatal(_) => () }
 }
 

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{Identifier, View, ViewInfo}
+import org.apache.spark.sql.connector.catalog.View
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Persistent SQL VIEWS for the graft catalog.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** Headline analytical queries over the testdata star schema — the bench
   * workload. These exercise the aggregate/join/window machinery the
@@ -1413,7 +1413,7 @@ object Analytics {
     * approximation. `within_5pct` pins estimate quality against the exact
     * count the oracle recomputes. */
   def hllSketchStore(spark: SparkSession, dir: String): DataFrame = {
-    val store = Pipeline.scratch(dir) + "/hll_user_store"
+    val store = Artifacts.scratch(dir) + "/hll_user_store"
     Tables.events(spark, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(hll_sketch_agg(col("user_id")).as("sketch"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** Bucketed-table co-located join — the lay-out-the-data answer to join
   * shuffles at 100 TB (SURVEY §4.2 partition-layout row): both fact
@@ -29,16 +29,16 @@ object Bucketing {
   private[graft] def reset(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val root = java.nio.file.Paths.get(wh, table)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    Artifacts.deleteTree(java.nio.file.Paths.get(wh, table))
   }
 
-  /** Once-per-(session, corpus, table) latch for bucketed-table ingest —
-    * shared by the fact tables here and the bucketed documents corpus
+  /** The corpus-tagged table name for `base` over `dir`. */
+  private[graft] def taggedName(base: String, dir: String): String =
+    s"${base}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+
+  /** Run `write` (a saveAsTable of `name`) once per (session, dir, name),
+    * resetting any orphaned catalog entry/warehouse dir first — shared by
+    * the fact tables here and the bucketed documents corpus
     * ([[Curation.ensureBucketedDocs]]). The whole point of bucketing is
     * paying the layout shuffle ONCE at ingest so every subsequent join is
     * Exchange-free — re-writing the tables inside the query would charge
@@ -46,24 +46,11 @@ object Bucketing {
     * which the join was a fraction). Table names carry the corpus tag so
     * concurrent flows over different sf dirs in one session never clobber
     * each other's layout. */
-  private val stagedTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The corpus-tagged table name for `base` over `dir`. */
-  private[graft] def taggedName(base: String, dir: String): String =
-    s"${base}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-
-  /** Run `write` (a saveAsTable of `name`) once per (session, dir, name),
-    * resetting any orphaned catalog entry/warehouse dir first. */
   private[graft] def ensureStagedTable(spark: SparkSession, dir: String,
                                        name: String)(write: => Unit): String = {
-    val key = spark.sparkContext.applicationId + "|" + dir + "|" + name
-    if (!stagedTables.contains(key)) stagedTables.synchronized {
-      if (!stagedTables.contains(key)) {
-        reset(spark, name)
-        write
-        stagedTables.add(key)
-      }
+    Artifacts.once(spark.sparkContext.applicationId + "|" + dir + "|" + name) {
+      reset(spark, name)
+      write
     }
     name
   }
@@ -110,9 +97,9 @@ object Bucketing {
     * join. The aggregate re-checks against the unpartitioned source. */
   def partitionPrunedEvents(spark: SparkSession, dir: String,
                             keep: String = "click"): DataFrame = {
-    // the shared pid-scoped scratch convention (Pipeline.scratch) — the
+    // the shared pid-scoped scratch convention (Artifacts.scratch) — the
     // path derivation must not fork per call site
-    val base = Pipeline.scratch(dir) + "/events_by_type"
+    val base = Artifacts.scratch(dir) + "/events_by_type"
     Tables.events(spark, dir)
       .write.mode("overwrite").partitionBy("event_type").parquet(base)
     spark.read.parquet(base)
@@ -142,7 +129,7 @@ object Bucketing {
     * scanning everything and scanning the few partitions the dim query
     * selects. */
   def dppJoin(spark: SparkSession, dir: String): DataFrame = {
-    val base = Pipeline.scratch(dir) + "/events_by_type_dpp"
+    val base = Artifacts.scratch(dir) + "/events_by_type_dpp"
     Tables.events(spark, dir)
       .write.mode("overwrite").partitionBy("event_type").parquet(base)
     val facts = spark.read.parquet(base)
@@ -202,7 +189,7 @@ object Bucketing {
   def zorderScan(spark: SparkSession, dir: String, bits: Int = 10,
                  uLo: Long = 2, uHi: Long = 12,
                  hLo: Long = 64, hHi: Long = 959): DataFrame = {
-    val base = Pipeline.scratch(dir) + "/events_zorder"
+    val base = Artifacts.scratch(dir) + "/events_zorder"
     zorderKey(spark, dir, bits)
       .repartitionByRange(8, col("zval"))
       .sortWithinPartitions("zval")
@@ -239,7 +226,7 @@ object Bucketing {
     * costs only the fields a query touches, exactly like top-level column
     * pruning. The oracle recomputes the aggregate from the flat source. */
   def ensureNestedOrders(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"nested-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"nested-${dir.replace('/', '_')}") { tmp =>
       Tables.orders(spark, dir)
         .select(col("o_orderkey"),
           struct(col("o_orderstatus").as("status"),
@@ -268,7 +255,7 @@ object Bucketing {
     * (Bench `range_orders` store_build entry). */
   def ensureRangeOrders(spark: SparkSession, dir: String,
                         files: Int = RangeFiles): String =
-    Dedup.ensureArtifact(s"rangeorders-${dir.replace('/', '_')}-$files") { tmp =>
+    Artifacts.ensure(s"rangeorders-${dir.replace('/', '_')}-$files") { tmp =>
       Tables.orders(spark, dir)
         .repartitionByRange(files, col("o_orderdate"))
         .sortWithinPartitions("o_orderdate")
@@ -401,7 +388,7 @@ object Bucketing {
     * positives are removed by the join itself. */
   def bloomPrunedJoin(spark: SparkSession, dir: String,
                       priority: String = "1-URGENT"): DataFrame = {
-    val out = Pipeline.scratch(dir) + "/bloom_join_out"
+    val out = Artifacts.scratch(dir) + "/bloom_join_out"
     val conf = spark.conf
     val keys = Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled",

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** [EXT] Training-data curation operators over `documents`: deterministic
   * hash sampling and token-budget sequence packing — the two selection/
@@ -285,7 +285,7 @@ object Curation {
     // dedup/curation queries in the process read the parquet — the
     // production flow, where decontamination runs once per benchmark
     // release, not once per consumer.
-    val path = Dedup.ensureArtifact(s"contam-${dir.replace('/', '_')}-p$pct-k$k") {
+    val path = Artifacts.ensure(s"contam-${dir.replace('/', '_')}-p$pct-k$k") {
       tmp => computeContamination(spark, dir, pct, k)
         .write.mode("overwrite").parquet(tmp.resolve("contam").toString)
     }
@@ -420,11 +420,11 @@ object Curation {
     * every downstream use — the same staged-artifact flow as the dedup
     * signature store (a nightly mining job writes the list; scoring and
     * stripping jobs read it instead of re-scanning the corpus). Tiny
-    * (`top` rows), built via the shared per-key [[Dedup.ensureArtifact]]
+    * (`top` rows), built via the shared per-key [[Artifacts.ensure]]
     * latch, atomically moved into place, removed at process exit. */
   private def ensureMinedNgrams(spark: SparkSession, dir: String, k: Int,
                                 minDocs: Int, top: Int): String =
-    Dedup.ensureArtifact(s"ngrams-${dir.replace('/', '_')}-k$k-m$minDocs-t$top") {
+    Artifacts.ensure(s"ngrams-${dir.replace('/', '_')}-k$k-m$minDocs-t$top") {
       tmp => mineCommonNgrams(spark, dir, k, minDocs, top)
         .coalesce(1).write.mode("overwrite").parquet(tmp.resolve("ngrams").toString)
     }.resolve("ngrams").toString
@@ -781,7 +781,7 @@ object Curation {
     * corpus lives once; snapshots are manifests), the profile is one
     * narrow scan + a 2-group aggregate. */
   def ensureSnapshots(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"snapshots-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"snapshots-${dir.replace('/', '_')}") { tmp =>
       def h(id: org.apache.spark.sql.Column, text: org.apache.spark.sql.Column) =
         conv(substring(md5(concat_ws("|", id, text)), 1, 8), 16, 10).cast("long")
       val base = Tables.documents(spark, dir).select("doc_id", "text", "lang", "source")
@@ -933,7 +933,7 @@ object Curation {
       } catch {
         case _: java.nio.file.FileSystemException =>
           // lost the race for this slot — discard the stage and rebase
-          org.apache.commons.io.FileUtils.deleteDirectory(stage.toFile)
+          Artifacts.deleteTree(stage)
       }
     }
     throw new IllegalStateException(s"commit did not land in $maxAttempts attempts")
@@ -957,7 +957,7 @@ object Curation {
     * Manifests are (doc_id, h) — snapshots are metadata, the text lives
     * once ([[ensureSnapshots]]'s principle). */
   def concurrentCommit(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-vstore-")
+    val root = java.nio.file.Files.createTempDirectory(Artifacts.root, "vstore-")
     val base = Tables.documents(spark, dir)
     base.select(col("doc_id"), manifestH(col("doc_id"), col("text")).as("h"))
       .write.mode("overwrite").parquet(root.resolve("v=0").toString)
@@ -1445,7 +1445,7 @@ object Curation {
     * queries below time their selection, not a rescore (Bench pre-builds
     * this as `lm_scores`). */
   private[graft] def ensureLmScores(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"lmscores-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"lmscores-${dir.replace('/', '_')}") { tmp =>
       TextAnalysis.docLogProb(spark, dir)
         .write.mode("overwrite").parquet(tmp.resolve("scores").toString)
     }.resolve("scores").toString
@@ -1976,7 +1976,7 @@ object Curation {
     * [[dvCompaction]]: a 4-file immutable base table plus the positional
     * delete sidecar, built once per process. */
   private def dvStorePath(spark: SparkSession, dir: String): java.nio.file.Path =
-    Dedup.ensureArtifact(s"dvstore-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"dvstore-${dir.replace('/', '_')}") { tmp =>
       val base = tmp.resolve("base").toString
       Tables.documents(spark, dir).repartition(DvBaseFiles)
         .write.mode("overwrite").parquet(base)
@@ -2037,7 +2037,7 @@ object Curation {
     val base = dvBase(spark, path)
     val dv = spark.read.parquet(path.resolve("dv").toString)
     val live = base.join(dv, Seq("f", "p"), "left_anti")
-    val compactedDir = Dedup.ensureArtifact(
+    val compactedDir = Artifacts.ensure(
       s"dvcompact-${dir.replace('/', '_')}") { tmp =>
       live.select("doc_id", "text", "lang", "n_chars")
         .repartition(DvCompactFiles)

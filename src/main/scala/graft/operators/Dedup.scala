@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Sessions, Tables}
+import graft.{Artifacts, Sessions, Tables}
 
 /** X1/X2 — deduplication over `documents`: exact (content-hash groupBy),
   * MinHash+LSH banded near-dup, and SimHash fingerprints.
@@ -261,58 +261,6 @@ object Dedup {
     (spark.read.parquet(s"$storeDir/sig").select("doc_id", "band", "sig"),
       spark.read.parquet(s"$storeDir/profile"))
 
-  /** Per-process signature-store cache root (pid-scoped like the
-    * streaming scratch dirs — concurrent processes never share partial
-    * writes); [[ensureArtifact]] serializes builds per key. A
-    * shutdown hook removes the root so bench/verify/test runs leave
-    * /tmp clean (the leaked-scratch lesson of VERDICT r5 #4); a real
-    * deployment passes a durable path to [[writeSignatureStore]]. */
-  private[graft] lazy val storeRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(
-      s"graft-sigstore-${ProcessHandle.current().pid()}-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
-        finally s.close()
-      } catch { case _: Throwable => () }))
-    p
-  }
-  /** Per-KEY build latches for the staged artifacts. A single global lock
-    * here would mean a watchdog-cancelled build keeps every OTHER
-    * artifact's first consumer waiting while its Spark job winds down —
-    * contaminating exactly the timings the staged-artifact design
-    * protects. With one latch per key, concurrent builders of the SAME
-    * artifact still serialize (second caller finds the parquet and
-    * reads), while builds of different artifacts never block each other.
-    * No deadlock is possible: nested builds only ever go "downstream"
-    * (clusters → pairs → signature store), so the latch order is acyclic. */
-  private val artifactLatches =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Build-once staged-artifact helper shared by the signature stores,
-    * the lexical/semantic pair lists, the cluster list, and the
-    * contamination verdict: `build` writes into a fresh temp dir which is
-    * renamed into place atomically, so a partially written artifact is
-    * never visible and a failed build is simply retried by the next
-    * caller. The Spark write runs under only this key's latch. */
-  private[graft] def ensureArtifact(key: String)
-                                   (build: java.nio.file.Path => Unit): java.nio.file.Path = {
-    val path = storeRoot.resolve(key)
-    val latch = artifactLatches.computeIfAbsent(key, _ => new Object)
-    latch.synchronized {
-      if (!java.nio.file.Files.exists(path)) {
-        val tmp = java.nio.file.Files.createTempDirectory(storeRoot, "build-")
-        build(tmp)
-        java.nio.file.Files.move(tmp, path,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      }
-    }
-    path
-  }
-
   /** Build the signature store for (dir, geometry) once per process and
     * return its path; later calls — every other dedup query in the same
     * bench/verify run — read the existing parquet instead of re-signing
@@ -323,7 +271,7 @@ object Dedup {
   def ensureSignatureStore(spark: SparkSession, dir: String, shingleK: Int = 1,
                            bands: Int = NumBands,
                            rowsPerBand: Int = RowsPerBand): String =
-    ensureArtifact(signatureStoreKey(dir, shingleK, bands, rowsPerBand)) {
+    Artifacts.ensure(signatureStoreKey(dir, shingleK, bands, rowsPerBand)) {
       tmp => writeSignatureStore(spark, dir, tmp.toString, shingleK, bands, rowsPerBand)
     }.toString
 
@@ -494,7 +442,7 @@ object Dedup {
     // parquet instead of re-running band-join + agreement + verify.
     val key = s"pairs-${dir.replace('/', '_')}-t$threshold-mb$minBands" +
       s"-cap$maxBucket-e$estJaccard-k$shingleK-b$bands-r$rowsPerBand"
-    val path = ensureArtifact(key) { tmp =>
+    val path = Artifacts.ensure(key) { tmp =>
       computeNearDupPairs(spark, dir, threshold, minBands, maxBucket,
         estJaccard, shingleK, bands, rowsPerBand)
         .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
@@ -1182,7 +1130,7 @@ object Dedup {
     // re-deriving the identical decisions.
     val key = s"clusters-${dir.replace('/', '_')}-t$threshold-mb$minBands" +
       s"-cap$maxBucket-e$estJaccard-k$shingleK-b$bands-r$rowsPerBand"
-    val path = ensureArtifact(key) { tmp =>
+    val path = Artifacts.ensure(key) { tmp =>
       // Materialize the pair list ONCE — the propagation loop must
       // iterate over the compact LSH output, never re-run the
       // signature pipeline.

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType, StructField, StructType}
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** The reference's whole pipeline as ONE Spark application (SURVEY.md §3.1,
   * reference `dag-knlp.py:85-238,408-447`): raw line-text sources → parsers
@@ -41,36 +41,6 @@ import graft.Tables
   */
 object Pipeline {
 
-  /** Scratch root for raw-text + JSONL staging (the pipeline's "S3") —
-    * PID-scoped like the streaming scratch and the dedup stores, so a
-    * concurrent bench/verify pair on the same sf can never clobber each
-    * other's staged files mid-read (mode("overwrite") deletes the target
-    * first), and swept on JVM exit so runs leave the workspace clean.
-    * Shared by the CSV/ORC round-trips and the partition-pruned layout
-    * ([[graft.operators.Bucketing]]) — ONE path convention, not four. */
-  private[graft] def scratch(dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"$scratchRoot/$tag"
-  }
-
-  private lazy val scratchRoot: String = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
-      "/root/repo/target/pipeline-scratch") +
-      s"/p${ProcessHandle.current().pid()}"
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val p = java.nio.file.Paths.get(root)
-        if (java.nio.file.Files.exists(p)) {
-          val s = java.nio.file.Files.walk(p)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
-          finally s.close()
-        }
-      } catch { case _: Throwable => () }))
-    root
-  }
-
   /** P1+P3 — colon-split with schema-arity coercion to `names.length`
     * fields: first k-1 fields verbatim, overflow tail rejoined with the
     * delimiter into the last (SURVEY Q1); under-arity lines filtered
@@ -103,7 +73,7 @@ object Pipeline {
     * JSONL → load → SQL → checks flow. Bench pre-builds this and reports
     * it in store_build. */
   def ensureRawFixtures(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"rawfix-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"rawfix-${dir.replace('/', '_')}") { tmp =>
       Tables.orders(spark, dir)
         .select(concat_ws(":", col("o_orderpriority"), col("o_orderkey"), col("o_custkey")).as("value"))
         .write.mode("overwrite").text(tmp.resolve("titles_raw").toString)
@@ -122,7 +92,7 @@ object Pipeline {
     * (word_id, korean, japanese, hanjya — all strings, like the JSONL
     * staging the reference loads from). */
   def dimensionPipeline(spark: SparkSession, dir: String): DataFrame =
-    dimensionFromRaw(spark, ensureRawFixtures(spark, dir), scratch(dir))
+    dimensionFromRaw(spark, ensureRawFixtures(spark, dir), Artifacts.scratch(dir))
 
   /** Stages 2–5 over already-staged raw line-text at
     * `rawBase`/{titles_raw,hanja_raw,langlink_raw}, writing all pipeline
@@ -232,7 +202,7 @@ object Pipeline {
     * CSV), so the oracle computes the aggregate straight from the parquet
     * source. Narrow write, narrow schema'd scan, one partial-agg shuffle. */
   def csvRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = scratch(dir) + "/orders_csv"
+    val base = Artifacts.scratch(dir) + "/orders_csv"
     // fanOut: parallel CSV encode + parallel read-back (see orcRoundTrip)
     Tables.fanOut(Tables.orders(spark, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"))
@@ -259,7 +229,7 @@ object Pipeline {
     * scan keeps the columnar virtues parquet has here: column pruning and
     * predicate pushdown both reach the ORC reader. */
   def orcRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = scratch(dir) + "/lineitem_orc"
+    val base = Artifacts.scratch(dir) + "/lineitem_orc"
     // fanOut: parallelizes the ORC encode AND gives the read-back a
     // multi-stripe layout to scan in parallel (the single-row-group
     // parquet source otherwise serializes both sides)
@@ -297,7 +267,7 @@ object Pipeline {
     * load, not the fixture synthesis. Pre-built by Bench as the
     * `dirty_jsonl` store_build entry. */
   def ensureDirtyJsonl(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"dirtyjsonl-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"dirtyjsonl-${dir.replace('/', '_')}") { tmp =>
       Tables.orders(spark, dir)
         .select(
           when(col("o_orderkey") % 10 === 7,
@@ -353,7 +323,7 @@ object Pipeline {
     * the compaction rewrite itself. Pre-built by Bench as `frag_docs`. */
   def ensureFragmentedDocs(spark: SparkSession, dir: String,
                            fragRecords: Int = 10): String =
-    Dedup.ensureArtifact(s"fragdocs-${dir.replace('/', '_')}-r$fragRecords") { tmp =>
+    Artifacts.ensure(s"fragdocs-${dir.replace('/', '_')}-r$fragRecords") { tmp =>
       Tables.documents(spark, dir).select("doc_id", "text")
         .coalesce(1).write.mode("overwrite")
         .option("maxRecordsPerFile", fragRecords).parquet(tmp.resolve("frag").toString)
@@ -361,7 +331,7 @@ object Pipeline {
 
   def compactRewrite(spark: SparkSession, dir: String, fragRecords: Int = 10,
                      targetRecords: Int = 100): DataFrame = {
-    val base = scratch(dir) + "/documents_compact"
+    val base = Artifacts.scratch(dir) + "/documents_compact"
     val frag = spark.read.parquet(ensureFragmentedDocs(spark, dir, fragRecords))
     frag.coalesce(1).write.mode("overwrite")
       .option("maxRecordsPerFile", targetRecords).parquet(s"$base/compact")
@@ -405,7 +375,7 @@ object Pipeline {
     * untouched-files assertion lives in PipelineSpec. */
   def partitionOverwrite(spark: SparkSession, dir: String,
                          hot: String = "click"): DataFrame = {
-    val base = scratch(dir) + "/events_backfill"
+    val base = Artifacts.scratch(dir) + "/events_backfill"
     val ev = Tables.events(spark, dir)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(base)
     ev.filter(col("event_type") === hot)
@@ -439,7 +409,7 @@ object Pipeline {
     * batches are never rewritten; that is the point), staged like
     * [[ensureRawFixtures]]. Pre-built by Bench as `evolving_batches`. */
   def ensureEvolvingBatches(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"evolve-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"evolve-${dir.replace('/', '_')}") { tmp =>
       val orders = Tables.orders(spark, dir)
       orders.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
@@ -480,7 +450,7 @@ object Pipeline {
     * one narrow write + one narrow scan + a 1-row aggregate. */
   def codecRoundTrip(spark: SparkSession, dir: String): DataFrame =
     Seq("snappy", "zstd").map { codec =>
-      val base = scratch(dir) + s"/docs_codec_$codec"
+      val base = Artifacts.scratch(dir) + s"/docs_codec_$codec"
       Tables.documents(spark, dir).select("doc_id", "text")
         .write.mode("overwrite").option("compression", codec).parquet(base)
       spark.read.parquet(base)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** EXACT set-similarity self-join via prefix filtering (the
   * AllPairs/PPJoin family — Bayardo et al. WWW'07, Xiao et al. ICDE'08):
@@ -158,7 +158,7 @@ object PrefixJoin {
     * MinHash signature store. */
   def ensurePrefixIndex(spark: SparkSession, dir: String,
                         threshold: Double = 0.95): String =
-    Dedup.ensureArtifact(prefixIndexKey(dir, threshold)) { tmp =>
+    Artifacts.ensure(prefixIndexKey(dir, threshold)) { tmp =>
       val docs = Tables.fanOut(Tables.documents(spark, dir))
         .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " ", -1))).as("ts"))
         .withColumn("sz", size(col("ts")))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** X3 — similarity search over `embeddings.embedding: array<float>`:
   * brute-force top-k cosine as the exactness baseline, and a
@@ -176,7 +176,7 @@ object Similarity {
     // the semantic-dedup clustering consume it, so the first caller in a
     // process persists (vec_a, vec_b, sim) and the second reads parquet
     // instead of re-bucketing and re-scoring the embedding corpus.
-    val path = Dedup.ensureArtifact(s"epairs-${dir.replace('/', '_')}-t$threshold") {
+    val path = Artifacts.ensure(s"epairs-${dir.replace('/', '_')}-t$threshold") {
       tmp => computeEmbedNearDup(spark, dir, threshold)
         .write.mode("overwrite").parquet(tmp.resolve("epairs").toString)
     }
@@ -260,7 +260,7 @@ object Similarity {
     // caller reads the persisted keeper/loser verdict — the production
     // flow where semantic dedup is a nightly decision, not a per-query
     // recomputation.
-    val path = Dedup.ensureArtifact(
+    val path = Artifacts.ensure(
       s"eclusters-${dir.replace('/', '_')}-t$threshold") { tmp =>
       val pairs = embedNearDup(spark, dir, threshold)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
@@ -1178,7 +1178,7 @@ object Similarity {
     * contract as the MinHash signature store and the ppjoin prefix
     * index. */
   private[graft] def ensureIvfIndex(spark: SparkSession, dir: String): String =
-    Dedup.ensureArtifact(s"ivfidx-${dir.replace('/', '_')}") { tmp =>
+    Artifacts.ensure(s"ivfidx-${dir.replace('/', '_')}") { tmp =>
       val e0 = embDouble(spark, dir)
       val splitFrom = e0.agg(max(col("vec_id"))).head().getLong(0) * 9 / 10
       val old = e0.filter(col("vec_id") < splitFrom)

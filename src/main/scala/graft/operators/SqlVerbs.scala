@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** X-SQL — the SQL-statement surface for the maintenance verbs, served by
@@ -38,21 +38,6 @@ object SqlVerbs {
   /** doc_id modulus of the v3 DELETE — shared with the oracle. */
   val TakedownMod = 97
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val rootBase: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(
-      s"graft-sqlverbs-${ProcessHandle.current().pid()}-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
-        finally s.close()
-      } catch { case _: Throwable => () }))
-    p
-  }
-
   private def catName(dir: String): String =
     Bucketing.taggedName("gcat", dir)
 
@@ -63,8 +48,26 @@ object SqlVerbs {
     ss.conf.set(s"spark.sql.catalog.${catName(dir)}",
       classOf[graft.catalog.GraftCatalog].getName)
     ss.conf.set(s"spark.sql.catalog.${catName(dir)}.root",
-      rootBase.resolve(catName(dir)).toString)
+      Artifacts.root.resolve(catName(dir)).toString)
     ss
+  }
+
+  /** Build catalog fixture `key` once per (process, corpus) — the
+    * staged-artifact pattern, on [[Artifacts.once]]'s per-key latch, so
+    * builds of different fixtures never block each other. `build` runs
+    * in a catalog session of its own: the temp views and conf it sets
+    * (AQE coalescing off for a multi-file layout) never reach the session
+    * the caller reads through. */
+  private def fixture(spark: SparkSession, dir: String, key: String)
+                     (build: SparkSession => Unit): Unit =
+    Artifacts.once(s"${catName(dir)}-$key")(build(catalogSession(spark, dir)))
+
+  /** (min, max) doc_id of the corpus — the anchor of every doc_id window
+    * the fixtures and queries derive (the oracles use the same formulas). */
+  private def docIdBounds(ss: SparkSession, dir: String): (Long, Long) = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val Array(b) = Tables.documents(ss, dir).agg(min(col("doc_id")), max(col("doc_id"))).collect()
+    (b.getLong(0), b.getLong(1))
   }
 
   /** Build the verb chain once per (process, corpus); returns a session
@@ -72,27 +75,23 @@ object SqlVerbs {
   def ensureVerbChain(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs"
-    val ss = catalogSession(spark, dir)
-    if (!built.contains(cat)) built.synchronized {
-      if (!built.contains(cat)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
-        ss.sql(s"""INSERT INTO $t
-                   SELECT doc_id, lang, source, n_chars FROM documents_src
-                   WHERE doc_id % 10 < 8""")
-        ss.sql(s"UPDATE $t SET lang = 'und' WHERE n_chars < $ShortDocChars")
-        ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0")
-        ss.sql(s"""MERGE INTO $t t
-                   USING (SELECT doc_id, lang, source, n_chars FROM documents_src
-                          WHERE doc_id % 10 >= 5) s
-                   ON t.doc_id = s.doc_id
-                   WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
-                   WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
-                     VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
-        built.add(cat)
-      }
+    fixture(spark, dir, "chain") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
+      ss.sql(s"""INSERT INTO $t
+                 SELECT doc_id, lang, source, n_chars FROM documents_src
+                 WHERE doc_id % 10 < 8""")
+      ss.sql(s"UPDATE $t SET lang = 'und' WHERE n_chars < $ShortDocChars")
+      ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0")
+      ss.sql(s"""MERGE INTO $t t
+                 USING (SELECT doc_id, lang, source, n_chars FROM documents_src
+                        WHERE doc_id % 10 >= 5) s
+                 ON t.doc_id = s.doc_id
+                 WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
+                 WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
+                   VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   /** X-SQLa — the post-MERGE table, row for row: the strongest check of
@@ -148,23 +147,19 @@ object SqlVerbs {
   def sqlExpire(spark: SparkSession, dir: String): DataFrame = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_exp"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-expire"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_exp")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_exp WHERE doc_id % 10 < 8")
-        ss.sql(s"INSERT OVERWRITE $t SELECT doc_id, n_chars FROM documents_src_exp WHERE doc_id % 10 >= 8")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_exp " +
-          s"WHERE doc_id % $TakedownMod = 0 AND doc_id % 10 < 8")
-        ss.sql(s"CALL $cat.system.expire_versions(table => 'main.docs_exp', keep_last => 2)")
-        built.add(key)
-      }
+    fixture(spark, dir, "expire") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_exp")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_exp WHERE doc_id % 10 < 8")
+      ss.sql(s"INSERT OVERWRITE $t SELECT doc_id, n_chars FROM documents_src_exp WHERE doc_id % 10 >= 8")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_exp " +
+        s"WHERE doc_id % $TakedownMod = 0 AND doc_id % 10 < 8")
+      ss.sql(s"CALL $cat.system.expire_versions(table => 'main.docs_exp', keep_last => 2)")
     }
+    val ss = catalogSession(spark, dir)
     val expiredReadable =
       try { ss.sql(s"SELECT count(*) FROM $t VERSION AS OF 1").collect(); 1L }
-      catch { case _: Throwable => 0L }
+      catch { case e: Exception if isExpiredVersion(e) => 0L }
     val versions = ss.sql(s"SELECT count(DISTINCT version) FROM " +
       s"(SELECT 2 AS version FROM $t VERSION AS OF 2 LIMIT 1)").head().getLong(0)
     import ss.implicits._
@@ -176,6 +171,14 @@ object SqlVerbs {
       ("kept_v2_probe", versions))
       .toDF("metric", "value")
   }
+
+  /** Is `e`, or an exception it wraps, the catalog's refusal to read an
+    * expired version (`IllegalArgumentException("no version …")`)? */
+  private def isExpiredVersion(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case i: IllegalArgumentException => Option(i.getMessage).exists(_.startsWith("no version "))
+      case _ => false
+    }
 
   def sqlExpireOracleSql: String =
     s"""WITH c1 AS (SELECT count(*) AS n FROM documents WHERE doc_id % 10 >= 8),
@@ -202,23 +205,19 @@ object SqlVerbs {
   def sqlCompact(spark: SparkSession, dir: String): DataFrame = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_cmp"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-compact"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_cmp")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        (0 until 3).foreach { third =>
-          ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_cmp " +
-            s"WHERE doc_id % 3 = $third")
-        }
-        val res = ss.sql(
-          s"CALL $cat.system.compact(table => 'main.docs_cmp', target_files => 1)").head()
-        compactReports.put(key, (res.getInt(0), res.getInt(1), res.getLong(2)))
-        built.add(key)
+    fixture(spark, dir, "compact") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_cmp")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      (0 until 3).foreach { third =>
+        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_cmp " +
+          s"WHERE doc_id % 3 = $third")
       }
+      val res = ss.sql(
+        s"CALL $cat.system.compact(table => 'main.docs_cmp', target_files => 1)").head()
+      compactReports.put(cat, (res.getInt(0), res.getInt(1), res.getLong(2)))
     }
-    val (before, after, rowsReported) = compactReports.get(key)
+    val ss = catalogSession(spark, dir)
+    val (before, after, rowsReported) = compactReports.get(cat)
     val preVersion = 3 // v0 create, v1..v3 inserts, v4 = the compact commit
     val exceptDiff = ss.sql(
       s"""SELECT count(*) FROM (
@@ -262,30 +261,21 @@ object SqlVerbs {
   private[graft] def ensureSkipTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_skip"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-skip"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        val docs = Tables.documents(ss, dir)
-        docs.createOrReplaceTempView("documents_src_skip")
-        val Array(b) = docs.agg(
-          org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-          org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val span = mx - mn + 1
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
-        (0 until SkipBuckets).foreach { i =>
-          val lo = mn + i * span / SkipBuckets
-          val hi = mn + (i + 1) * span / SkipBuckets
-          // one file per bucket commit: the ingest shape the skipping
-          // proof is about (a date/tenant-clustered drop, not confetti)
-          ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ doc_id, lang, n_chars " +
-            s"FROM documents_src_skip WHERE doc_id >= $lo AND doc_id < $hi")
-        }
-        built.add(key)
+    fixture(spark, dir, "skip") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_skip")
+      val (mn, mx) = docIdBounds(ss, dir)
+      val span = mx - mn + 1
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
+      (0 until SkipBuckets).foreach { i =>
+        val lo = mn + i * span / SkipBuckets
+        val hi = mn + (i + 1) * span / SkipBuckets
+        // one file per bucket commit: the ingest shape the skipping
+        // proof is about (a date/tenant-clustered drop, not confetti)
+        ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(1) */ doc_id, lang, n_chars " +
+          s"FROM documents_src_skip WHERE doc_id >= $lo AND doc_id < $hi")
       }
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   /** X-SQLe — manifest data skipping, end-to-end: a quartile doc_id
@@ -297,10 +287,7 @@ object SqlVerbs {
     * select the identical window at every scale factor. */
   def sqlSkipping(spark: SparkSession, dir: String): DataFrame = {
     val (ss, t) = ensureSkipTable(spark, dir)
-    val Array(b) = Tables.documents(ss, dir).agg(
-      org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-      org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
+    val (mn, mx) = docIdBounds(ss, dir)
     val lo = mn + (mx - mn) / 4
     val hi = lo + (mx - mn) / 8
     val agg = ss.sql(
@@ -337,38 +324,27 @@ object SqlVerbs {
   def sqlCluster(spark: SparkSession, dir: String): DataFrame = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_clu"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-cluster"
-    val docs = Tables.documents(ss, dir)
-    val Array(b) = docs.agg(
-      org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-      org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
+    val (mn, mx) = docIdBounds(spark, dir)
     val lo = mn + (mx - mn) / 2
     val hi = lo + (mx - mn) / 8
-    def probe(): (Int, Int) = {
-      ss.sql(s"SELECT count(*) FROM $t WHERE doc_id BETWEEN $lo AND $hi").collect()
-      graft.catalog.SkipRecorder.lastFor(t).getOrElse((-1, -1))
-    }
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        docs.createOrReplaceTempView("documents_src_clu")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        // round-robin REPARTITION scatters each slice across its files,
-        // so every file spans the full doc_id range (nothing prunable —
-        // the layout clustering exists to fix)
-        (0 until 4).foreach { slice =>
-          ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(2) */ doc_id, n_chars " +
-            s"FROM documents_src_clu WHERE doc_id % 4 = $slice")
-        }
-        val (keptPre, totalPre) = probe()
-        ss.sql(s"CALL $cat.system.compact(table => 'main.docs_clu', " +
-          "target_files => 4, sort_by => 'doc_id')")
-        clusterProbes.put(key, (keptPre, totalPre))
-        built.add(key)
+    fixture(spark, dir, "cluster") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_clu")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      // round-robin REPARTITION scatters each slice across its files,
+      // so every file spans the full doc_id range (nothing prunable —
+      // the layout clustering exists to fix)
+      (0 until 4).foreach { slice =>
+        ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(2) */ doc_id, n_chars " +
+          s"FROM documents_src_clu WHERE doc_id % 4 = $slice")
       }
+      ss.sql(s"SELECT count(*) FROM $t WHERE doc_id BETWEEN $lo AND $hi").collect()
+      val pre = graft.catalog.SkipRecorder.lastFor(t).getOrElse((-1, -1))
+      ss.sql(s"CALL $cat.system.compact(table => 'main.docs_clu', " +
+        "target_files => 4, sort_by => 'doc_id')")
+      clusterProbes.put(cat, pre)
     }
-    val (keptPre, totalPre) = clusterProbes.get(key)
+    val ss = catalogSession(spark, dir)
+    val (keptPre, totalPre) = clusterProbes.get(cat)
     val agg = ss.sql(
       s"""SELECT count(*) AS n_docs, sum(n_chars) AS sum_chars
           FROM $t WHERE doc_id BETWEEN $lo AND $hi""").head()
@@ -457,45 +433,40 @@ object SqlVerbs {
     val cat = catName(dir)
     val t = s"$cat.main.docs_wap"
     val bt = s"$t.branch_audit"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-wap"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_wap")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
-        ss.sql(s"""INSERT INTO $t
-                   SELECT doc_id, lang, source, n_chars FROM documents_src_wap
-                   WHERE doc_id % 10 < 8""")
-        val forkCount = ss.sql(s"SELECT count(*) FROM $t").head().getLong(0)
-        ss.sql(s"CALL $cat.system.create_branch(table => 'main.docs_wap', branch => 'audit')")
-        // WRITE: staged curation, on the branch only
-        ss.sql(s"DELETE FROM $bt WHERE n_chars < $ShortDocChars")
-        ss.sql(s"""MERGE INTO $bt t
-                   USING (SELECT doc_id, lang, source, n_chars FROM documents_src_wap
-                          WHERE doc_id % 10 >= 5) s
-                   ON t.doc_id = s.doc_id
-                   WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
-                   WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
-                     VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
-        // AUDIT: the gate that makes WAP worth the ceremony — staged
-        // content is non-empty, main is UNTOUCHED by the staging, and the
-        // reviewable artifact ("what will this publish change?") is the
-        // branch chain's change feed from the fork, materialized here
-        // while the branch is alive (it is dropped by the publish)
-        val stagedCount = ss.sql(s"SELECT count(*) FROM $bt").head().getLong(0)
-        val mainCount = ss.sql(s"SELECT count(*) FROM $t").head().getLong(0)
-        require(stagedCount > 0, "WAP audit failed: staged branch is empty")
-        require(mainCount == forkCount,
-          s"WAP audit failed: main moved during staging ($forkCount -> $mainCount)")
-        graft.catalog.ChangeFeed
-          .tableChanges(ss, bt, fromVersion = 2, toVersion = 3, keyCols = Seq("doc_id"))
-          .write.mode("overwrite").parquet(wapDiffPath(dir))
-        // PUBLISH: atomic fast-forward
-        ss.sql(s"CALL $cat.system.publish_branch(table => 'main.docs_wap', branch => 'audit')")
-        built.add(key)
-      }
+    fixture(spark, dir, "wap") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_wap")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
+      ss.sql(s"""INSERT INTO $t
+                 SELECT doc_id, lang, source, n_chars FROM documents_src_wap
+                 WHERE doc_id % 10 < 8""")
+      val forkCount = ss.sql(s"SELECT count(*) FROM $t").head().getLong(0)
+      ss.sql(s"CALL $cat.system.create_branch(table => 'main.docs_wap', branch => 'audit')")
+      // WRITE: staged curation, on the branch only
+      ss.sql(s"DELETE FROM $bt WHERE n_chars < $ShortDocChars")
+      ss.sql(s"""MERGE INTO $bt t
+                 USING (SELECT doc_id, lang, source, n_chars FROM documents_src_wap
+                        WHERE doc_id % 10 >= 5) s
+                 ON t.doc_id = s.doc_id
+                 WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
+                 WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
+                   VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
+      // AUDIT: the gate that makes WAP worth the ceremony — staged
+      // content is non-empty, main is UNTOUCHED by the staging, and the
+      // reviewable artifact ("what will this publish change?") is the
+      // branch chain's change feed from the fork, materialized here
+      // while the branch is alive (it is dropped by the publish)
+      val stagedCount = ss.sql(s"SELECT count(*) FROM $bt").head().getLong(0)
+      val mainCount = ss.sql(s"SELECT count(*) FROM $t").head().getLong(0)
+      require(stagedCount > 0, "WAP audit failed: staged branch is empty")
+      require(mainCount == forkCount,
+        s"WAP audit failed: main moved during staging ($forkCount -> $mainCount)")
+      graft.catalog.ChangeFeed
+        .tableChanges(ss, bt, fromVersion = 2, toVersion = 3, keyCols = Seq("doc_id"))
+        .write.mode("overwrite").parquet(wapDiffPath(dir))
+      // PUBLISH: atomic fast-forward
+      ss.sql(s"CALL $cat.system.publish_branch(table => 'main.docs_wap', branch => 'audit')")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   /** X-SQLj — clustered-table DDL: `PARTITIONED BY (doc_id)` declares a
@@ -511,10 +482,7 @@ object SqlVerbs {
     * subset. */
   def sqlPartitioned(spark: SparkSession, dir: String): DataFrame = {
     val (ss, t) = ensurePartTable(spark, dir)
-    val Array(b) = Tables.documents(ss, dir).agg(
-      org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-      org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
+    val (mn, mx) = docIdBounds(ss, dir)
     val lo = mn + (mx - mn) / 2
     val hi = lo + (mx - mn) / 8
     val agg = ss.sql(
@@ -539,23 +507,15 @@ object SqlVerbs {
   private[graft] def ensurePartTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_decl"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-decl"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_decl")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT) " +
-          "PARTITIONED BY (doc_id)")
-        val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-        val prior = ss.conf.get(coalesceKey, "true")
-        ss.conf.set(coalesceKey, "false")
-        try ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ doc_id, lang, n_chars " +
-          "FROM documents_src_decl")
-        finally ss.conf.set(coalesceKey, prior)
-        built.add(key)
-      }
+    fixture(spark, dir, "decl") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_decl")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT) " +
+        "PARTITIONED BY (doc_id)")
+      ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ doc_id, lang, n_chars " +
+        "FROM documents_src_decl")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   /** X-SQLl — TIME-TRANSFORM clustering (`PARTITIONED BY (days(ts))`,
@@ -617,23 +577,15 @@ object SqlVerbs {
   private[graft] def ensureDaysTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.events_days"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-days"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.events(ss, dir).createOrReplaceTempView("events_src_days")
-        ss.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-          "value DOUBLE) PARTITIONED BY (days(ts))")
-        val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-        val prior = ss.conf.get(coalesceKey, "true")
-        ss.conf.set(coalesceKey, "false")
-        try ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
-          "FROM events_src_days")
-        finally ss.conf.set(coalesceKey, prior)
-        built.add(key)
-      }
+    fixture(spark, dir, "days") { ss =>
+      Tables.events(ss, dir).createOrReplaceTempView("events_src_days")
+      ss.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+        "value DOUBLE) PARTITIONED BY (days(ts))")
+      ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
+        "FROM events_src_days")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlDaysTableOracleSql: String =
@@ -682,32 +634,19 @@ object SqlVerbs {
   private[graft] def ensureCowTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_cow"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-cow"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        val docs = Tables.documents(ss, dir)
-        docs.createOrReplaceTempView("documents_src_cow")
-        val Array(b) = docs.agg(
-          org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-          org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val lo = mn + (mx - mn) / 4
-        val hi = lo + (mx - mn) / 8
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT) PARTITIONED BY (doc_id)")
-        val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-        val prior = ss.conf.get(coalesceKey, "true")
-        ss.conf.set(coalesceKey, "false")
-        try {
-          ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ doc_id, n_chars " +
-            "FROM documents_src_cow")
-          ss.sql(s"UPDATE $t SET n_chars = n_chars + 1 WHERE doc_id BETWEEN $lo AND $hi")
-          ss.sql(s"DELETE FROM $t WHERE doc_id = $mn")
-        } finally ss.conf.set(coalesceKey, prior)
-        built.add(key)
-      }
+    fixture(spark, dir, "cow") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_cow")
+      val (mn, mx) = docIdBounds(ss, dir)
+      val lo = mn + (mx - mn) / 4
+      val hi = lo + (mx - mn) / 8
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT) PARTITIONED BY (doc_id)")
+      ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ doc_id, n_chars " +
+        "FROM documents_src_cow")
+      ss.sql(s"UPDATE $t SET n_chars = n_chars + 1 WHERE doc_id BETWEEN $lo AND $hi")
+      ss.sql(s"DELETE FROM $t WHERE doc_id = $mn")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlCowSubsetOracleSql: String =
@@ -757,18 +696,14 @@ object SqlVerbs {
   def sqlTruncate(spark: SparkSession, dir: String): DataFrame = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_trunc"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-trunc"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_trunc")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_trunc WHERE doc_id % 10 < 8")
-        ss.sql(s"TRUNCATE TABLE $t")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_trunc WHERE doc_id % 10 >= 8")
-        built.add(key)
-      }
+    fixture(spark, dir, "trunc") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_trunc")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_trunc WHERE doc_id % 10 < 8")
+      ss.sql(s"TRUNCATE TABLE $t")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_trunc WHERE doc_id % 10 >= 8")
     }
+    val ss = catalogSession(spark, dir)
     def rows(q: String): Long = ss.sql(q).head().getLong(0)
     import ss.implicits._
     Seq(
@@ -822,25 +757,17 @@ object SqlVerbs {
   private[graft] def ensureMetaDeleteTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_mdel"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-mdel"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        val docs = Tables.documents(ss, dir)
-        docs.createOrReplaceTempView("documents_src_mdel")
-        val Array(b) = docs.agg(
-          org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-          org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-        val q1 = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 4
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_mdel WHERE doc_id < $q1")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_mdel WHERE doc_id >= $q1")
-        ss.sql(s"DELETE FROM $t WHERE doc_id < $q1")
-        ss.sql(s"DELETE FROM $t WHERE doc_id % 7 = 3")
-        built.add(key)
-      }
+    fixture(spark, dir, "mdel") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_mdel")
+      val (mn, mx) = docIdBounds(ss, dir)
+      val q1 = mn + (mx - mn) / 4
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_mdel WHERE doc_id < $q1")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_mdel WHERE doc_id >= $q1")
+      ss.sql(s"DELETE FROM $t WHERE doc_id < $q1")
+      ss.sql(s"DELETE FROM $t WHERE doc_id % 7 = 3")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   /** X-SQLr — MERGE-ON-READ row-level verbs (`TBLPROPERTIES
@@ -876,29 +803,24 @@ object SqlVerbs {
   private[graft] def ensureMorChain(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_mor"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-mor"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_mor")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT) " +
-          "TBLPROPERTIES ('write.row_level.mode'='merge-on-read')")
-        ss.sql(s"""INSERT INTO $t
-                   SELECT doc_id, lang, source, n_chars FROM documents_src_mor
-                   WHERE doc_id % 10 < 8""")
-        ss.sql(s"UPDATE $t SET lang = 'und' WHERE n_chars < $ShortDocChars")
-        ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0")
-        ss.sql(s"""MERGE INTO $t t
-                   USING (SELECT doc_id, lang, source, n_chars FROM documents_src_mor
-                          WHERE doc_id % 10 >= 5) s
-                   ON t.doc_id = s.doc_id
-                   WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
-                   WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
-                     VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
-        built.add(key)
-      }
+    fixture(spark, dir, "mor") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_mor")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT) " +
+        "TBLPROPERTIES ('write.row_level.mode'='merge-on-read')")
+      ss.sql(s"""INSERT INTO $t
+                 SELECT doc_id, lang, source, n_chars FROM documents_src_mor
+                 WHERE doc_id % 10 < 8""")
+      ss.sql(s"UPDATE $t SET lang = 'und' WHERE n_chars < $ShortDocChars")
+      ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0")
+      ss.sql(s"""MERGE INTO $t t
+                 USING (SELECT doc_id, lang, source, n_chars FROM documents_src_mor
+                        WHERE doc_id % 10 >= 5) s
+                 ON t.doc_id = s.doc_id
+                 WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
+                 WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
+                   VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlMorOracleSql: String =
@@ -924,10 +846,8 @@ object SqlVerbs {
     * the lookup itself is relational. */
   def sqlBloom(spark: SparkSession, dir: String): DataFrame = {
     val (ss, t) = ensureBloomTable(spark, dir)
-    val Array(b) = Tables.documents(ss, dir).agg(
-      org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-      org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-    val mid = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
+    val (mn, mx) = docIdBounds(ss, dir)
+    val mid = mn + (mx - mn) / 2
     val target = ss.sql(
       s"SELECT max(doc_id) FROM documents_src_bloom WHERE doc_id <= $mid").head().getLong(0)
     val hit = ss.sql(s"SELECT doc_id, n_chars FROM $t WHERE doc_id = $target").head()
@@ -943,18 +863,14 @@ object SqlVerbs {
   private[graft] def ensureBloomTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_bloom"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-bloom"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_bloom")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT) " +
-          "TBLPROPERTIES ('write.bloom.columns'='doc_id')")
-        ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(4) */ doc_id, n_chars " +
-          "FROM documents_src_bloom")
-        built.add(key)
-      }
+    fixture(spark, dir, "bloom") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_bloom")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT) " +
+        "TBLPROPERTIES ('write.bloom.columns'='doc_id')")
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(4) */ doc_id, n_chars " +
+        "FROM documents_src_bloom")
     }
+    val ss = catalogSession(spark, dir)
     Tables.documents(ss, dir).createOrReplaceTempView("documents_src_bloom")
     (ss, t)
   }
@@ -1015,25 +931,16 @@ object SqlVerbs {
   private[graft] def ensureZorderTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.events_zorder"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-zorder"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.events(ss, dir).createOrReplaceTempView("events_src_zorder")
-        ss.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE)")
-        val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-        val prior = ss.conf.get(coalesceKey, "true")
-        ss.conf.set(coalesceKey, "false")
-        try {
-          ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
-            "FROM events_src_zorder")
-          ss.sql(s"CALL $cat.system.compact(table => 'main.events_zorder', " +
-            "target_files => 32, zorder_by => 'user_id,ts')")
-        } finally ss.conf.set(coalesceKey, prior)
-        built.add(key)
-      }
+    fixture(spark, dir, "zorder") { ss =>
+      Tables.events(ss, dir).createOrReplaceTempView("events_src_zorder")
+      ss.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE)")
+      ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
+        "FROM events_src_zorder")
+      ss.sql(s"CALL $cat.system.compact(table => 'main.events_zorder', " +
+        "target_files => 32, zorder_by => 'user_id,ts')")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlZorderOracleSql: String =
@@ -1080,21 +987,16 @@ object SqlVerbs {
   private[graft] def ensureTagTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_tag"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-tag"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_tag")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_tag WHERE doc_id % 10 < 8")
-        ss.sql(s"CALL $cat.system.tag(table => 'main.docs_tag', tag => 'baseline')")
-        ss.sql(s"UPDATE $t SET n_chars = n_chars + 1 WHERE doc_id % 3 = 0")
-        ss.sql(s"DELETE FROM $t WHERE doc_id % 5 = 0")
-        ss.sql(s"CALL $cat.system.expire_versions(table => 'main.docs_tag', keep_last => 2)")
-        built.add(key)
-      }
+    fixture(spark, dir, "tag") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_tag")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_tag WHERE doc_id % 10 < 8")
+      ss.sql(s"CALL $cat.system.tag(table => 'main.docs_tag', tag => 'baseline')")
+      ss.sql(s"UPDATE $t SET n_chars = n_chars + 1 WHERE doc_id % 3 = 0")
+      ss.sql(s"DELETE FROM $t WHERE doc_id % 5 = 0")
+      ss.sql(s"CALL $cat.system.expire_versions(table => 'main.docs_tag', keep_last => 2)")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlTagOracleSql: String =
@@ -1137,31 +1039,22 @@ object SqlVerbs {
   private[graft] def ensureEvolveTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.events_evolve"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-evolve"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.events(ss, dir).createOrReplaceTempView("events_src_evolve")
-        ss.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE)")
-        val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-        val prior = ss.conf.get(coalesceKey, "true")
-        ss.conf.set(coalesceKey, "false")
-        try {
-          ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
-            "FROM events_src_evolve")
-          val (loD, hiD) = daysWindow(ss, dir)
-          ss.sql(s"SELECT count(*) FROM $t WHERE ts >= TIMESTAMP'${fmtDay(loD)}' " +
-            s"AND ts < TIMESTAMP'${fmtDay(hiD)}'").collect()
-          evolveProbes.put(cat, graft.catalog.SkipRecorder.lastFor(t).getOrElse((0, 0)))
-          ss.sql(s"CALL $cat.system.set_clustering(table => 'main.events_evolve', " +
-            "cluster_by => 'days(ts)')")
-          ss.sql(s"INSERT OVERWRITE $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
-            "FROM events_src_evolve")
-        } finally ss.conf.set(coalesceKey, prior)
-        built.add(key)
-      }
+    fixture(spark, dir, "evolve") { ss =>
+      Tables.events(ss, dir).createOrReplaceTempView("events_src_evolve")
+      ss.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE)")
+      ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      ss.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
+        "FROM events_src_evolve")
+      val (loD, hiD) = daysWindow(ss, dir)
+      ss.sql(s"SELECT count(*) FROM $t WHERE ts >= TIMESTAMP'${fmtDay(loD)}' " +
+        s"AND ts < TIMESTAMP'${fmtDay(hiD)}'").collect()
+      evolveProbes.put(cat, graft.catalog.SkipRecorder.lastFor(t).getOrElse((0, 0)))
+      ss.sql(s"CALL $cat.system.set_clustering(table => 'main.events_evolve', " +
+        "cluster_by => 'days(ts)')")
+      ss.sql(s"INSERT OVERWRITE $t SELECT /*+ REPARTITION(8) */ event_id, ts, user_id, value " +
+        "FROM events_src_evolve")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlEvolveOracleSql: String =
@@ -1202,19 +1095,15 @@ object SqlVerbs {
   def sqlRestore(spark: SparkSession, dir: String): DataFrame = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_res"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-restore"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_res")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_res WHERE doc_id % 10 < 8")
-        // the bad deploy: overwrites the corpus with the wrong slice
-        ss.sql(s"INSERT OVERWRITE $t SELECT doc_id, n_chars FROM documents_src_res WHERE doc_id % 10 >= 8")
-        ss.sql(s"CALL $cat.system.restore(table => 'main.docs_res', version => 1)")
-        built.add(key)
-      }
+    fixture(spark, dir, "restore") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_res")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars FROM documents_src_res WHERE doc_id % 10 < 8")
+      // the bad deploy: overwrites the corpus with the wrong slice
+      ss.sql(s"INSERT OVERWRITE $t SELECT doc_id, n_chars FROM documents_src_res WHERE doc_id % 10 >= 8")
+      ss.sql(s"CALL $cat.system.restore(table => 'main.docs_res', version => 1)")
     }
+    val ss = catalogSession(spark, dir)
     def rows(q: String): Long = ss.sql(q).head().getLong(0)
     import ss.implicits._
     Seq(
@@ -1236,7 +1125,7 @@ object SqlVerbs {
        ORDER BY metric"""
 
   private def wapDiffPath(dir: String): String =
-    rootBase.resolve(s"${catName(dir)}-wapdiff").toString
+    Artifacts.root.resolve(s"${catName(dir)}-wapdiff").toString
 
   /** X-SQLh — the published table, row for row: every branch decision
     * (takedown, matched re-crawl bump, novel insert, re-insert of a
@@ -1379,72 +1268,67 @@ object SqlVerbs {
     val cat = catName(dir)
     val t = s"$cat.main.docs_mvsrc"
     val mv = s"$cat.main.docs_mv"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-mv"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        val legs = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-        def leg[T](name: String)(work: => T): T = {
-          val t0 = System.nanoTime()
-          val out = work
-          legs += name -> (System.nanoTime() - t0) / 1e9
-          out
-        }
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_mv")
-        leg("src_ingest") {
-          ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, " +
-            "n_chars BIGINT) PARTITIONED BY (lang)")
-          ss.sql(s"""INSERT INTO $t
-                     SELECT doc_id, lang, source, n_chars FROM documents_src_mv
-                     WHERE doc_id % 10 < 8""")
-        }
-        leg("create_mv")(
-          ss.sql(s"CALL $cat.system.create_mv(view => 'main.docs_mv', " +
-            "source => 'main.docs_mvsrc', keys => 'lang', " +
-            "aggs => 'n_docs:count,sum_chars:sum(n_chars),max_chars:max(n_chars)')"))
-        // the FILTERED twin (r13 #4): same source, a row filter — the
-        // affected-key recompute re-applies it per refresh, so churn
-        // moving rows across the threshold is exact
-        leg("create_mvw")(
-          ss.sql(s"CALL $cat.system.create_mv(view => 'main.docs_mvw', " +
-            "source => 'main.docs_mvsrc', keys => 'lang', " +
-            "aggs => 'n_docs:count,sum_chars:sum(n_chars)', " +
-            s"where => 'n_chars >= $ShortDocChars')"))
-        leg("verb_churn") {
-          ss.sql(s"UPDATE $t SET lang = 'und' WHERE n_chars < $ShortDocChars")
-          ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0")
-          ss.sql(s"""MERGE INTO $t t
-                     USING (SELECT doc_id, lang, source, n_chars FROM documents_src_mv
-                            WHERE doc_id % 10 >= 5) s
-                     ON t.doc_id = s.doc_id
-                     WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
-                     WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
-                       VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
-        }
-        val r1 = leg("refresh1_mv")(
-          ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mv')").head())
-        val w1 = leg("refresh1_mvw")(
-          ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mvw')").head())
-        // the targeted commit: one lang (deterministic: the smallest),
-        // half its docs — the second refresh must narrow to that key.
-        // The +10 also pushes near-threshold docs INTO the filtered
-        // twin's set (the enter/leave case the filter must get right).
-        leg("targeted_update") {
-          val minLang = ss.sql(s"SELECT min(lang) FROM $t").head().getString(0)
-          ss.sql(s"UPDATE $t SET n_chars = n_chars + 10 " +
-            s"WHERE lang = '$minLang' AND doc_id % 2 = 0")
-        }
-        val r2 = leg("refresh2_mv")(
-          ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mv')").head())
-        val w2 = leg("refresh2_mvw")(
-          ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mvw')").head())
-        mvRefreshInfo.put(cat, (r1.getString(2), r2.getString(2), r2.getLong(3)))
-        mvRefreshInfo.put(s"$cat#w", (w1.getString(2), w2.getString(2), w2.getLong(3)))
-        mvPhases.put(cat, legs.toSeq)
-        built.add(key)
+    fixture(spark, dir, "mv") { ss =>
+      val legs = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+      def leg[T](name: String)(work: => T): T = {
+        val t0 = System.nanoTime()
+        val out = work
+        legs += name -> (System.nanoTime() - t0) / 1e9
+        out
       }
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_mv")
+      leg("src_ingest") {
+        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, " +
+          "n_chars BIGINT) PARTITIONED BY (lang)")
+        ss.sql(s"""INSERT INTO $t
+                   SELECT doc_id, lang, source, n_chars FROM documents_src_mv
+                   WHERE doc_id % 10 < 8""")
+      }
+      leg("create_mv")(
+        ss.sql(s"CALL $cat.system.create_mv(view => 'main.docs_mv', " +
+          "source => 'main.docs_mvsrc', keys => 'lang', " +
+          "aggs => 'n_docs:count,sum_chars:sum(n_chars),max_chars:max(n_chars)')"))
+      // the FILTERED twin (r13 #4): same source, a row filter — the
+      // affected-key recompute re-applies it per refresh, so churn
+      // moving rows across the threshold is exact
+      leg("create_mvw")(
+        ss.sql(s"CALL $cat.system.create_mv(view => 'main.docs_mvw', " +
+          "source => 'main.docs_mvsrc', keys => 'lang', " +
+          "aggs => 'n_docs:count,sum_chars:sum(n_chars)', " +
+          s"where => 'n_chars >= $ShortDocChars')"))
+      leg("verb_churn") {
+        ss.sql(s"UPDATE $t SET lang = 'und' WHERE n_chars < $ShortDocChars")
+        ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0")
+        ss.sql(s"""MERGE INTO $t t
+                   USING (SELECT doc_id, lang, source, n_chars FROM documents_src_mv
+                          WHERE doc_id % 10 >= 5) s
+                   ON t.doc_id = s.doc_id
+                   WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
+                   WHEN NOT MATCHED THEN INSERT (doc_id, lang, source, n_chars)
+                     VALUES (s.doc_id, s.lang, s.source, s.n_chars)""")
+      }
+      val r1 = leg("refresh1_mv")(
+        ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mv')").head())
+      val w1 = leg("refresh1_mvw")(
+        ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mvw')").head())
+      // the targeted commit: one lang (deterministic: the smallest),
+      // half its docs — the second refresh must narrow to that key.
+      // The +10 also pushes near-threshold docs INTO the filtered
+      // twin's set (the enter/leave case the filter must get right).
+      leg("targeted_update") {
+        val minLang = ss.sql(s"SELECT min(lang) FROM $t").head().getString(0)
+        ss.sql(s"UPDATE $t SET n_chars = n_chars + 10 " +
+          s"WHERE lang = '$minLang' AND doc_id % 2 = 0")
+      }
+      val r2 = leg("refresh2_mv")(
+        ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mv')").head())
+      val w2 = leg("refresh2_mvw")(
+        ss.sql(s"CALL $cat.system.refresh_mv(view => 'main.docs_mvw')").head())
+      mvRefreshInfo.put(cat, (r1.getString(2), r2.getString(2), r2.getLong(3)))
+      mvRefreshInfo.put(s"$cat#w", (w1.getString(2), w2.getString(2), w2.getLong(3)))
+      mvPhases.put(cat, legs.toSeq)
     }
-    (ss, mv)
+    (catalogSession(spark, dir), mv)
   }
 
   /** X-SQLw — persistent SQL VIEWS (`CREATE VIEW` / view-on-view /
@@ -1460,16 +1344,12 @@ object SqlVerbs {
   def sqlView(spark: SparkSession, dir: String): DataFrame = {
     val (ss, t) = ensureVerbChain(spark, dir)
     val cat = catName(dir)
-    val key = s"$cat-views"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        ss.sql(s"CREATE OR REPLACE VIEW $cat.main.docs_long AS " +
-          s"SELECT doc_id, lang, source, n_chars FROM $t WHERE n_chars >= $ShortDocChars")
-        ss.sql(s"CREATE OR REPLACE VIEW $cat.main.docs_summary AS " +
-          s"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars " +
-          s"FROM $cat.main.docs_long GROUP BY lang")
-        built.add(key)
-      }
+    fixture(spark, dir, "views") { vs =>
+      vs.sql(s"CREATE OR REPLACE VIEW $cat.main.docs_long AS " +
+        s"SELECT doc_id, lang, source, n_chars FROM $t WHERE n_chars >= $ShortDocChars")
+      vs.sql(s"CREATE OR REPLACE VIEW $cat.main.docs_summary AS " +
+        s"SELECT lang, count(*) AS n_docs, sum(n_chars) AS sum_chars " +
+        s"FROM $cat.main.docs_long GROUP BY lang")
     }
     // int32 literal to match the DuckDB oracle's integer constant
     val nViews = ss.sql(s"SHOW VIEWS IN $cat.main").count().toInt
@@ -1533,19 +1413,14 @@ object SqlVerbs {
   private[graft] def ensureAnalyzeTable(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_an"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-analyze"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_an")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, lang, n_chars FROM documents_src_an " +
-          "WHERE doc_id % 10 < 8")
-        ss.sql(s"CALL $cat.system.analyze(table => 'main.docs_an')").collect()
-        built.add(key)
-      }
+    fixture(spark, dir, "analyze") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_an")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, lang, n_chars FROM documents_src_an " +
+        "WHERE doc_id % 10 < 8")
+      ss.sql(s"CALL $cat.system.analyze(table => 'main.docs_an')").collect()
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlAnalyzeOracleSql: String =
@@ -1602,23 +1477,18 @@ object SqlVerbs {
     val cat = catName(dir)
     val docsT = s"$cat.main.docs_bkt"
     val statsT = s"$cat.main.stats_bkt"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-spj"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_spj")
-        ss.sql(s"CREATE TABLE $docsT (doc_id BIGINT, lang STRING, n_chars BIGINT) " +
-          "PARTITIONED BY (bucket(16, doc_id))")
-        ss.sql(s"CREATE TABLE $statsT (doc_id BIGINT, fp BIGINT) " +
-          "PARTITIONED BY (bucket(16, doc_id))")
-        ss.sql(s"INSERT INTO $docsT SELECT doc_id, lang, n_chars " +
-          "FROM documents_src_spj WHERE doc_id % 3 > 0")
-        ss.sql(s"INSERT INTO $statsT SELECT doc_id, n_chars % 1000 " +
-          "FROM documents_src_spj WHERE doc_id % 2 = 0")
-        built.add(key)
-      }
+    fixture(spark, dir, "spj") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_spj")
+      ss.sql(s"CREATE TABLE $docsT (doc_id BIGINT, lang STRING, n_chars BIGINT) " +
+        "PARTITIONED BY (bucket(16, doc_id))")
+      ss.sql(s"CREATE TABLE $statsT (doc_id BIGINT, fp BIGINT) " +
+        "PARTITIONED BY (bucket(16, doc_id))")
+      ss.sql(s"INSERT INTO $docsT SELECT doc_id, lang, n_chars " +
+        "FROM documents_src_spj WHERE doc_id % 3 > 0")
+      ss.sql(s"INSERT INTO $statsT SELECT doc_id, n_chars % 1000 " +
+        "FROM documents_src_spj WHERE doc_id % 2 = 0")
     }
-    (ss, docsT, statsT)
+    (catalogSession(spark, dir), docsT, statsT)
   }
 
   /** X-SQLs2 — the bucket layout serving AGGREGATION too: a join +
@@ -1692,34 +1562,29 @@ object SqlVerbs {
     val cat = catName(dir)
     val morT = s"$cat.main.docs_morb"
     val statsT = s"$cat.main.stats_morb"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-morspj"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_morspj")
-        ss.sql(s"CREATE TABLE $morT (doc_id BIGINT, lang STRING, n_chars BIGINT) " +
-          "PARTITIONED BY (bucket(16, doc_id)) " +
-          "TBLPROPERTIES ('write.row_level.mode'='merge-on-read')")
-        ss.sql(s"CREATE TABLE $statsT (doc_id BIGINT, fp BIGINT) " +
-          "PARTITIONED BY (bucket(16, doc_id))")
-        ss.sql(s"INSERT INTO $morT SELECT doc_id, lang, n_chars " +
-          "FROM documents_src_morspj WHERE doc_id % 10 < 8")
-        ss.sql(s"INSERT INTO $statsT SELECT doc_id, n_chars % 1000 " +
-          "FROM documents_src_morspj WHERE doc_id % 2 = 0")
-        // takedown: deletion vectors only, no data file moves
-        ss.sql(s"DELETE FROM $morT WHERE doc_id % $TakedownMod = 0")
-        // re-ingest: updates become vector + bucket-pure reinsert files
-        ss.sql(s"""MERGE INTO $morT t
-                   USING (SELECT doc_id, lang, n_chars FROM documents_src_morspj
-                          WHERE doc_id % 10 >= 5) s
-                   ON t.doc_id = s.doc_id
-                   WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
-                   WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
-                     VALUES (s.doc_id, s.lang, s.n_chars)""")
-        built.add(key)
-      }
+    fixture(spark, dir, "morspj") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_morspj")
+      ss.sql(s"CREATE TABLE $morT (doc_id BIGINT, lang STRING, n_chars BIGINT) " +
+        "PARTITIONED BY (bucket(16, doc_id)) " +
+        "TBLPROPERTIES ('write.row_level.mode'='merge-on-read')")
+      ss.sql(s"CREATE TABLE $statsT (doc_id BIGINT, fp BIGINT) " +
+        "PARTITIONED BY (bucket(16, doc_id))")
+      ss.sql(s"INSERT INTO $morT SELECT doc_id, lang, n_chars " +
+        "FROM documents_src_morspj WHERE doc_id % 10 < 8")
+      ss.sql(s"INSERT INTO $statsT SELECT doc_id, n_chars % 1000 " +
+        "FROM documents_src_morspj WHERE doc_id % 2 = 0")
+      // takedown: deletion vectors only, no data file moves
+      ss.sql(s"DELETE FROM $morT WHERE doc_id % $TakedownMod = 0")
+      // re-ingest: updates become vector + bucket-pure reinsert files
+      ss.sql(s"""MERGE INTO $morT t
+                 USING (SELECT doc_id, lang, n_chars FROM documents_src_morspj
+                        WHERE doc_id % 10 >= 5) s
+                 ON t.doc_id = s.doc_id
+                 WHEN MATCHED THEN UPDATE SET n_chars = s.n_chars + 1
+                 WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
+                   VALUES (s.doc_id, s.lang, s.n_chars)""")
     }
-    (ss, morT, statsT)
+    (catalogSession(spark, dir), morT, statsT)
   }
 
   def sqlMorSpjOracleSql: String =
@@ -1757,10 +1622,7 @@ object SqlVerbs {
     * the same region arithmetic). */
   def sqlDpp(spark: SparkSession, dir: String): DataFrame = {
     val (ss, t) = ensurePartTable(spark, dir) // doc_id-clustered fact
-    val Array(b) = Tables.documents(ss, dir).agg(
-      org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("doc_id")),
-      org.apache.spark.sql.functions.max(org.apache.spark.sql.functions.col("doc_id"))).collect()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
+    val (mn, mx) = docIdBounds(ss, dir)
     // the dim derives from the corpus on THIS session (temp views are
     // session-scoped; leaning on another fixture's view would make the
     // query order-dependent across harnesses)
@@ -1768,8 +1630,14 @@ object SqlVerbs {
     ss.sql(s"SELECT doc_id, ((doc_id - $mn) * 16) DIV (($mx - $mn) + 1) AS region " +
       "FROM documents_src_dpp").createOrReplaceTempView("dim_dpp")
     graft.catalog.SkipRecorder.clear(s"$t#dpp")
+    // BROADCAST(d) pins the DIM as the build side: the fact's size
+    // estimate follows its file count, which follows the shuffle-partition
+    // count at build time — at 4 partitions the fact (4 files, 8.5 KiB)
+    // undercut the dim, was broadcast itself, and DPP degenerated to
+    // dynamicpruningexpression(true) (the sqlDppBucket hazard)
     val agg = ss.sql(
-      s"""SELECT count(*) AS n_docs, CAST(sum(f.n_chars) AS BIGINT) AS sum_chars
+      s"""SELECT /*+ BROADCAST(d) */ count(*) AS n_docs,
+                 CAST(sum(f.n_chars) AS BIGINT) AS sum_chars
           FROM $t f JOIN dim_dpp d ON f.doc_id = d.doc_id
           WHERE d.region = 5""").head()
     val pruned = graft.catalog.SkipRecorder.lastFor(s"$t#dpp")
@@ -1879,7 +1747,7 @@ object SqlVerbs {
     val ids8 = ss.sql("SELECT doc_id FROM documents_src_bdpp WHERE doc_id % 3 > 0 " +
       "ORDER BY doc_id LIMIT 8").collect().map(_.getLong(0))
     val (probe, decoys) = ids8.splitAt(4)
-    val dimPath = Pipeline.scratch(dir) + "/dim_bdpp"
+    val dimPath = Artifacts.scratch(dir) + "/dim_bdpp"
     import ss.implicits._
     (probe.toSeq.map(_ -> 1) ++ decoys.toSeq.map(_ -> 0))
       .toDF("doc_id", "tag").write.mode("overwrite").parquet(dimPath)
@@ -1988,20 +1856,16 @@ object SqlVerbs {
       : (SparkSession, String, Int, Int) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_default"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-default"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_def")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, lang, n_chars " +
-          "FROM documents_src_def WHERE doc_id % 2 = 0")
-        ss.sql(s"ALTER TABLE $t ADD COLUMN quality BIGINT DEFAULT 5")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, lang, n_chars, n_chars % 7 " +
-          "FROM documents_src_def WHERE doc_id % 2 = 1")
-        built.add(key)
-      }
+    fixture(spark, dir, "default") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_def")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, lang, n_chars " +
+        "FROM documents_src_def WHERE doc_id % 2 = 0")
+      ss.sql(s"ALTER TABLE $t ADD COLUMN quality BIGINT DEFAULT 5")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, lang, n_chars, n_chars % 7 " +
+        "FROM documents_src_def WHERE doc_id % 2 = 1")
     }
+    val ss = catalogSession(spark, dir)
     val m = graft.catalog.Manifests
     val latest = m.latestVersion(ss, t)
     // the alter commit is the one whose op is 'alter' (metadata-only)
@@ -2040,23 +1904,19 @@ object SqlVerbs {
       : (SparkSession, String, Int, Seq[Int]) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_nested"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-nested"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_nst")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, " +
-          "meta STRUCT<lang: STRING, n: BIGINT>)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, named_struct('lang', lang, 'n', n_chars) " +
-          "FROM documents_src_nst WHERE doc_id % 2 = 0")
-        ss.sql(s"ALTER TABLE $t ADD COLUMN meta.src STRING")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, " +
-          "named_struct('lang', lang, 'n', n_chars, 'src', source) " +
-          "FROM documents_src_nst WHERE doc_id % 2 = 1")
-        ss.sql(s"ALTER TABLE $t RENAME COLUMN meta.n TO chars")
-        built.add(key)
-      }
+    fixture(spark, dir, "nested") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_nst")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, " +
+        "meta STRUCT<lang: STRING, n: BIGINT>)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, named_struct('lang', lang, 'n', n_chars) " +
+        "FROM documents_src_nst WHERE doc_id % 2 = 0")
+      ss.sql(s"ALTER TABLE $t ADD COLUMN meta.src STRING")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, " +
+        "named_struct('lang', lang, 'n', n_chars, 'src', source) " +
+        "FROM documents_src_nst WHERE doc_id % 2 = 1")
+      ss.sql(s"ALTER TABLE $t RENAME COLUMN meta.n TO chars")
     }
+    val ss = catalogSession(spark, dir)
     val m = graft.catalog.Manifests
     val latest = m.latestVersion(ss, t)
     val alterVs = (1 to latest).filter(v => m.opOf(ss, t, v) == "alter")
@@ -2113,30 +1973,25 @@ object SqlVerbs {
     val cat = catName(dir)
     val t = s"$cat.main.docs_rb"
     val bt = s"$t.branch_audit"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-rebase"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_rb")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
-        ss.sql(s"""INSERT INTO $t
-                   SELECT doc_id, lang, source, n_chars FROM documents_src_rb
-                   WHERE doc_id % 10 < 8""")
-        ss.sql(s"CALL $cat.system.create_branch(table => 'main.docs_rb', branch => 'audit')")
-        ss.sql(s"DELETE FROM $bt WHERE n_chars < $ShortDocChars") // staged takedown
-        ss.sql(s"""INSERT INTO $t
-                   SELECT doc_id, lang, source, n_chars FROM documents_src_rb
-                   WHERE doc_id % 10 = 8""") // concurrent ingest on main
-        // publish must refuse on the diverged main, then rebase + publish
-        val refused = scala.util.Try(ss.sql(
-          s"CALL $cat.system.publish_branch(table => 'main.docs_rb', branch => 'audit')"))
-        require(refused.isFailure, "publish on diverged main must refuse before rebase")
-        ss.sql(s"CALL $cat.system.rebase_branch(table => 'main.docs_rb', branch => 'audit')")
-        ss.sql(s"CALL $cat.system.publish_branch(table => 'main.docs_rb', branch => 'audit')")
-        built.add(key)
-      }
+    fixture(spark, dir, "rebase") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_rb")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
+      ss.sql(s"""INSERT INTO $t
+                 SELECT doc_id, lang, source, n_chars FROM documents_src_rb
+                 WHERE doc_id % 10 < 8""")
+      ss.sql(s"CALL $cat.system.create_branch(table => 'main.docs_rb', branch => 'audit')")
+      ss.sql(s"DELETE FROM $bt WHERE n_chars < $ShortDocChars") // staged takedown
+      ss.sql(s"""INSERT INTO $t
+                 SELECT doc_id, lang, source, n_chars FROM documents_src_rb
+                 WHERE doc_id % 10 = 8""") // concurrent ingest on main
+      // publish must refuse on the diverged main, then rebase + publish
+      val refused = scala.util.Try(ss.sql(
+        s"CALL $cat.system.publish_branch(table => 'main.docs_rb', branch => 'audit')"))
+      require(refused.isFailure, "publish on diverged main must refuse before rebase")
+      ss.sql(s"CALL $cat.system.rebase_branch(table => 'main.docs_rb', branch => 'audit')")
+      ss.sql(s"CALL $cat.system.publish_branch(table => 'main.docs_rb', branch => 'audit')")
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlRebaseOracleSql: String =
@@ -2172,22 +2027,17 @@ object SqlVerbs {
   private[graft] def ensureRenameChain(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_rn"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-rename"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_rn")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, lang, source, n_chars " +
-          "FROM documents_src_rn WHERE doc_id % 2 = 0") // v1: the old-name era
-        ss.sql(s"ALTER TABLE $t RENAME COLUMN lang TO language") // v2: metadata only
-        ss.sql(s"INSERT INTO $t SELECT doc_id, lang, source, n_chars " +
-          "FROM documents_src_rn WHERE doc_id % 2 = 1") // v3: the new-name era
-        ss.sql(s"ALTER TABLE $t DROP COLUMN source") // v4: takedown-by-column
-        built.add(key)
-      }
+    fixture(spark, dir, "rename") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_rn")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, lang, source, n_chars " +
+        "FROM documents_src_rn WHERE doc_id % 2 = 0") // v1: the old-name era
+      ss.sql(s"ALTER TABLE $t RENAME COLUMN lang TO language") // v2: metadata only
+      ss.sql(s"INSERT INTO $t SELECT doc_id, lang, source, n_chars " +
+        "FROM documents_src_rn WHERE doc_id % 2 = 1") // v3: the new-name era
+      ss.sql(s"ALTER TABLE $t DROP COLUMN source") // v4: takedown-by-column
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlRenameOracleSql: String =
@@ -2241,24 +2091,19 @@ object SqlVerbs {
   private[graft] def ensureWidenChain(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_wd"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-widen"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_wd")
-        ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars INT, score FLOAT)")
-        ss.sql(s"INSERT INTO $t SELECT doc_id, CAST(n_chars AS INT), " +
-          "CAST(CAST(n_chars % 1024 AS INT) AS FLOAT) " +
-          "FROM documents_src_wd WHERE doc_id % 2 = 0") // v1: the narrow era
-        ss.sql(s"ALTER TABLE $t ALTER COLUMN n_chars TYPE BIGINT") // v2: metadata only
-        ss.sql(s"ALTER TABLE $t ALTER COLUMN score TYPE DOUBLE")   // v3: metadata only
-        ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars + ${Int.MaxValue.toLong} + 1, " +
-          "CAST(CAST(n_chars % 1024 AS INT) AS DOUBLE) " +
-          "FROM documents_src_wd WHERE doc_id % 2 = 1") // v4: the wide era
-        built.add(key)
-      }
+    fixture(spark, dir, "widen") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_wd")
+      ss.sql(s"CREATE TABLE $t (doc_id BIGINT, n_chars INT, score FLOAT)")
+      ss.sql(s"INSERT INTO $t SELECT doc_id, CAST(n_chars AS INT), " +
+        "CAST(CAST(n_chars % 1024 AS INT) AS FLOAT) " +
+        "FROM documents_src_wd WHERE doc_id % 2 = 0") // v1: the narrow era
+      ss.sql(s"ALTER TABLE $t ALTER COLUMN n_chars TYPE BIGINT") // v2: metadata only
+      ss.sql(s"ALTER TABLE $t ALTER COLUMN score TYPE DOUBLE")   // v3: metadata only
+      ss.sql(s"INSERT INTO $t SELECT doc_id, n_chars + ${Int.MaxValue.toLong} + 1, " +
+        "CAST(CAST(n_chars % 1024 AS INT) AS DOUBLE) " +
+        "FROM documents_src_wd WHERE doc_id % 2 = 1") // v4: the wide era
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlWidenOracleSql: String =
@@ -2299,22 +2144,17 @@ object SqlVerbs {
   private[graft] def ensureRtasChain(spark: SparkSession, dir: String): (SparkSession, String) = {
     val cat = catName(dir)
     val t = s"$cat.main.docs_rt"
-    val ss = catalogSession(spark, dir)
-    val key = s"$cat-rtas"
-    if (!built.contains(key)) built.synchronized {
-      if (!built.contains(key)) {
-        Tables.documents(ss, dir).createOrReplaceTempView("documents_src_rt")
-        ss.sql(s"CREATE TABLE $t AS SELECT doc_id, lang, n_chars " + // v0+v1 (ctas)
-          "FROM documents_src_rt WHERE doc_id % 10 < 8")
-        ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0") // v2
-        ss.sql(s"""REPLACE TABLE $t AS
-                   SELECT lang, count(*) AS n_docs,
-                          CAST(sum(n_chars) AS BIGINT) AS sum_chars
-                   FROM $t GROUP BY lang""") // v3: new generation, new schema era
-        built.add(key)
-      }
+    fixture(spark, dir, "rtas") { ss =>
+      Tables.documents(ss, dir).createOrReplaceTempView("documents_src_rt")
+      ss.sql(s"CREATE TABLE $t AS SELECT doc_id, lang, n_chars " + // v0+v1 (ctas)
+        "FROM documents_src_rt WHERE doc_id % 10 < 8")
+      ss.sql(s"DELETE FROM $t WHERE doc_id % $TakedownMod = 0") // v2
+      ss.sql(s"""REPLACE TABLE $t AS
+                 SELECT lang, count(*) AS n_docs,
+                        CAST(sum(n_chars) AS BIGINT) AS sum_chars
+                 FROM $t GROUP BY lang""") // v3: new generation, new schema era
     }
-    (ss, t)
+    (catalogSession(spark, dir), t)
   }
 
   def sqlRtasOracleSql: String =

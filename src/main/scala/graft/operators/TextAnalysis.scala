@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifacts, Tables}
 
 /** X4 — text analysis over the `documents` table: tokenization, corpus
   * statistics, quality scoring, language-ID heuristics, fingerprinting —
@@ -676,7 +676,7 @@ object TextAnalysis {
     * INDEPENDENT full re-index of the merged corpus — refresh proved
     * lossless, never drifting from the rebuild. */
   def invindexRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val store = graft.operators.Dedup.ensureArtifact(
+    val store = Artifacts.ensure(
       s"invindex-${dir.replace('/', '_')}") { tmp =>
       Tables.fanOut(Tables.documents(spark, dir))
         .select(col("doc_id"), explode(array_distinct(tokens)).as("token"))

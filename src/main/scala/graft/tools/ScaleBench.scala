@@ -91,7 +91,7 @@ object ScaleBench {
     * bounded-subset claim is printed per point, not asserted. */
   def cdcProbe(spark: SparkSession, dir: String): Seq[(String, Double)] = {
     val ss = spark.newSession()
-    val root = java.nio.file.Files.createTempDirectory("graft-scale-cdc-")
+    val root = java.nio.file.Files.createTempDirectory(graft.Artifacts.root, "scale-cdc-")
     val cat = s"scdc${math.abs(dir.hashCode).toString.take(8)}"
     ss.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.GraftCatalog].getName)
     ss.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
@@ -178,10 +178,7 @@ object ScaleBench {
     val dvScan = scanTime(s"SELECT sum(n_chars), count(*) FROM $t")
     val cleanScan = scanTime(
       s"SELECT sum(n_chars), count(*) FROM $t VERSION AS OF ${vMor - 1}")
-    val s = java.nio.file.Files.walk(root)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally s.close()
+    graft.Artifacts.deleteTree(root)
     Seq("cdc_ingest" -> ingest, "cdc_update" -> update, "cdc_feed" -> feed,
       "cdc_files_rewritten" -> rewritten.toDouble, "cdc_files_total" -> total.toDouble,
       "mv_build" -> mvBuild, "mv_refresh" -> mvRefresh,
@@ -206,7 +203,7 @@ object ScaleBench {
     * every point. */
   def spjProbe(spark: SparkSession, dir: String): Seq[(String, Double)] = {
     val ss = spark.newSession()
-    val root = java.nio.file.Files.createTempDirectory("graft-scale-spj-")
+    val root = java.nio.file.Files.createTempDirectory(graft.Artifacts.root, "scale-spj-")
     val cat = s"sspj${math.abs(dir.hashCode).toString.take(8)}"
     ss.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.GraftCatalog].getName)
     ss.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
@@ -254,10 +251,7 @@ object ScaleBench {
     val morEx = "Exchange (hash|range)partitioning".r.findAllIn(morPlan).length
     val morMasked = if (morPlan.contains("dv-masked members")) 1.0 else 0.0
     val morJoin = timed(ss.sql(joinSql).collect())
-    val s = java.nio.file.Files.walk(root)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally s.close()
+    graft.Artifacts.deleteTree(root)
     Seq("spj_build" -> build, "spj_join_on" -> spjOn, "spj_join_off" -> spjOff,
       "spj_exchanges_on" -> exOn.toDouble, "spj_exchanges_off" -> exOff.toDouble,
       "morspj_churn" -> morChurn, "morspj_join_masked" -> morJoin,
@@ -276,7 +270,7 @@ object ScaleBench {
     * repair (`eq_compact`, ∝ corpus by design) are printed alongside. */
   def eqProbe(spark: SparkSession, dir: String): Seq[(String, Double)] = {
     val ss = spark.newSession()
-    val root = java.nio.file.Files.createTempDirectory("graft-scale-eq-")
+    val root = java.nio.file.Files.createTempDirectory(graft.Artifacts.root, "scale-eq-")
     val cat = s"seq${math.abs(dir.hashCode).toString.take(8)}"
     ss.conf.set(s"spark.sql.catalog.$cat", classOf[graft.catalog.GraftCatalog].getName)
     ss.conf.set(s"spark.sql.catalog.$cat.root", root.toString)
@@ -319,10 +313,7 @@ object ScaleBench {
     val compact = timed {
       ss.sql(s"CALL $cat.system.compact(table => 'main.docs', target_files => 8)").collect()
     }
-    val s = java.nio.file.Files.walk(root)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally s.close()
+    graft.Artifacts.deleteTree(root)
     Seq("eq_ingest" -> ingest, "eq_upsert_batch" -> upsert,
       "eq_files_removed" -> upRemoved.toDouble,
       "mor_merge_batch" -> merge,

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.{GraftCatalog, SkipRecorder}
+import graft.catalog.SkipRecorder
+import graft.TestSpark.freshCatalog
 
 /** Aggregate + limit pushdown from manifest stats (VERDICT r15 #1/#8,
   * catalog/AggPush.scala + SkippingScanBuilder):
@@ -18,17 +19,6 @@ import graft.catalog.{GraftCatalog, SkipRecorder}
   *    covering k live rows (net of deletion-vector tombstones).
   */
 class AggPushdownSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-aggpush-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
-
   private def planOf(ss: SparkSession, sql: String): String =
     ss.sql(sql).queryExecution.executedPlan.toString
 

@@ -460,7 +460,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // key; incompressible md5 padding (aggregated below, so pruning
     // cannot drop it) gives the hot partition real (compressed) shuffle
     // bytes.
-    val base = java.nio.file.Files.createTempDirectory("graft-aqe-skew-").toString
+    val base = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-aqe-skew-").toString
     Tables.events(spark, sf)
       .select(when(col("event_id") % 10 < 9, 0L).otherwise(col("event_id") % 10).as("k"),
         col("value"),
@@ -520,7 +520,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val df = (base ++ cur).toDF("event_id", "event_type", "value")
       .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:00")))
       .withColumn("user_id", lit(1L)).withColumn("props", lit("{}"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-drift-").toString
+    val tmp = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-drift-").toString
     df.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val zero = Analytics.distributionDrift(spark, tmp).collect().head
     assert(zero.getAs[Double]("psi") == 0.0 && !zero.getAs[Boolean]("drifted"))

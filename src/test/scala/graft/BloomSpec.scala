@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{GraftCatalog, Manifests}
+import graft.catalog.Manifests
 
 /** Parquet-native bloom filters (`TBLPROPERTIES
   * ('write.bloom.columns'='…')`): declared columns get a per-row-group
@@ -16,15 +16,8 @@ import graft.catalog.{GraftCatalog, Manifests}
 class BloomSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-bloomspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    (ss, name)
-  }
+  private def freshCatalog(name: String): (SparkSession, String) =
+    TestSpark.freshCatalog(name, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   test("declared columns carry blooms in every written file; undeclared don't") {
     val (ss, c) = freshCatalog("bloom_write")

@@ -2,24 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** WAP (write-audit-publish) branches on the versioned catalog: zero-copy
   * fork, write isolation both ways, fast-forward publish, diverged-main
   * refusal, orphan-file cleanup on drop, and retention interplay (expire
   * must not delete files a live branch still reads). */
 class BranchSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String, java.nio.file.Path) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-brspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name, root)
-  }
-
   private def seed(ss: SparkSession, t: String): Unit = {
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING, x DOUBLE)") // v0
     ss.sql(s"INSERT INTO $t VALUES (1,'a',0.5),(2,'b',1.5),(3,'c',2.5),(4,'d',3.5)") // v1
@@ -29,7 +18,7 @@ class BranchSpec extends AnyFunSuite {
     ss.sql(s"SELECT id FROM $t ORDER BY id").collect().map(_.getLong(0)).toSeq
 
   test("create_branch forks a zero-copy view equal to main") {
-    val (ss, c, _) = freshCatalog("br_fork")
+    val (ss, c) = freshCatalog("br_fork")
     val t = s"$c.ns.t"
     seed(ss, t)
     ss.sql(s"CALL $c.system.create_branch(table => 'ns.t', branch => 'wap')")
@@ -41,7 +30,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("branch writes are isolated from main, and main writes from the branch") {
-    val (ss, c, _) = freshCatalog("br_iso")
+    val (ss, c) = freshCatalog("br_iso")
     val t = s"$c.ns.t"
     val bt = s"$t.branch_wap"
     seed(ss, t)
@@ -56,7 +45,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("publish_branch fast-forwards main atomically and removes the branch") {
-    val (ss, c, _) = freshCatalog("br_pub")
+    val (ss, c) = freshCatalog("br_pub")
     val t = s"$c.ns.t"
     val bt = s"$t.branch_wap"
     seed(ss, t)
@@ -76,7 +65,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("publish refuses when main advanced since the fork") {
-    val (ss, c, _) = freshCatalog("br_conflict")
+    val (ss, c) = freshCatalog("br_conflict")
     val t = s"$c.ns.t"
     seed(ss, t)
     ss.sql(s"CALL $c.system.create_branch(table => 'ns.t', branch => 'wap')")
@@ -91,7 +80,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("rebase_branch replays staged commits atop an advanced main; publish then lands") {
-    val (ss, c, _) = freshCatalog("br_rebase")
+    val (ss, c) = freshCatalog("br_rebase")
     val t = s"$c.ns.t"
     seed(ss, t)
     ss.sql(s"CALL $c.system.create_branch(table => 'ns.t', branch => 'wap')")
@@ -111,7 +100,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("rebase refuses when main rewrote a file the staging also touched") {
-    val (ss, c, _) = freshCatalog("br_rebase_conflict")
+    val (ss, c) = freshCatalog("br_rebase_conflict")
     val t = s"$c.ns.t"
     // ONE data file holding every row, so both sides must rewrite it
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING, x DOUBLE)")
@@ -127,7 +116,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("rebase refuses when deletion vectors diverge on a shared file") {
-    val (ss, c, _) = freshCatalog("br_rebase_dv")
+    val (ss, c) = freshCatalog("br_rebase_dv")
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING, x DOUBLE) " +
       "TBLPROPERTIES ('write.row_level.mode'='merge-on-read')")
@@ -144,7 +133,8 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("drop_branch deletes only branch-private files; main keeps reading") {
-    val (ss, c, root) = freshCatalog("br_drop")
+    val (ss, c) = freshCatalog("br_drop")
+    val root = TestSpark.catalogRoot(ss, c)
     val t = s"$c.ns.t"
     seed(ss, t)
     def dataFiles(): Long = {
@@ -164,7 +154,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("expire_versions keeps files a live branch still reads") {
-    val (ss, c, _) = freshCatalog("br_expire")
+    val (ss, c) = freshCatalog("br_expire")
     val t = s"$c.ns.t"
     seed(ss, t)
     ss.sql(s"CALL $c.system.create_branch(table => 'ns.t', branch => 'wap')")
@@ -178,7 +168,7 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("VERSION AS OF 'branch' reads the branch head (Iceberg's branch-read idiom)") {
-    val (ss, c, _) = freshCatalog("br_vasof")
+    val (ss, c) = freshCatalog("br_vasof")
     val t = s"$c.ns.t"
     seed(ss, t)
     ss.sql(s"CALL $c.system.create_branch(table => 'ns.t', branch => 'wap')")
@@ -191,14 +181,14 @@ class BranchSpec extends AnyFunSuite {
   }
 
   test("a branch view refuses streaming reads and unknown branches refuse loudly") {
-    val (ss, c, _) = freshCatalog("br_stream")
+    val (ss, c) = freshCatalog("br_stream")
     val t = s"$c.ns.t"
     seed(ss, t)
     ss.sql(s"CALL $c.system.create_branch(table => 'ns.t', branch => 'wap')")
     val e = intercept[Exception] {
       val q = ss.readStream.table(s"$t.branch_wap").writeStream
         .format("noop").option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("br-ck").toString)
+          java.nio.file.Files.createTempDirectory(Artifacts.root, "br-ck").toString)
         .start()
       try q.processAllAvailable() finally q.stop()
     }

@@ -128,7 +128,7 @@ class BucketingSpec extends AnyFunSuite {
     val sf01 = "/root/testdata/sf0.01"
     val z = Bucketing.zorderKey(spark, sf01, bits = 7)
       .select("event_id", "ub", "hb", "zval")
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder-").toString
+    val base = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-zorder-").toString
     try {
       def layout(sub: String, sortCol: String): Unit =
         z.repartition(1).sortWithinPartitions(sortCol)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** The snapshot-versioned DSv2 catalog: SQL verbs, copy-on-write
   * semantics, time-travel immutability, commit atomicity/conflicts, and
@@ -10,19 +10,6 @@ import graft.catalog.GraftCatalog
   * filter pushdown, which would silently drop copy-over rows — the bug
   * the smoke run caught). */
 class CatalogSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  /** Fresh catalog + session per test — catalog state is on disk, so each
-    * test gets its own root. */
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-catspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
-
   private def seed(ss: SparkSession, t: String): Unit = {
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING, x DOUBLE)")
     ss.sql(s"INSERT INTO $t VALUES (1,'a',0.5),(2,'b',1.5),(3,'c',2.5),(4,'d',3.5)")
@@ -313,7 +300,7 @@ class CatalogSpec extends AnyFunSuite {
     val (ss, c) = freshCatalog("cat_stream")
     val t = s"$c.ns.sink"
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
-    val out = java.nio.file.Files.createTempDirectory("graft-catspec-streamsink-")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-catspec-streamsink-")
     out.toFile.deleteOnExit()
     ss.range(0, 40).selectExpr("id", "concat('v', id) AS v")
       .repartition(4).write.parquet(s"$out/in")
@@ -386,7 +373,7 @@ class CatalogSpec extends AnyFunSuite {
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
     ss.sql(s"INSERT INTO $t SELECT id, concat('a', id) FROM range(0, 10)")
     ss.sql(s"INSERT INTO $t SELECT id, concat('b', id) FROM range(10, 20)")
-    val out = java.nio.file.Files.createTempDirectory("graft-catspec-streamsrc-")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-catspec-streamsrc-")
     out.toFile.deleteOnExit()
     def drain(ckpt: String): Long = {
       val q = ss.readStream.table(t)
@@ -429,7 +416,7 @@ class CatalogSpec extends AnyFunSuite {
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT)")
     ss.sql(s"INSERT INTO $t SELECT id FROM range(0, 5)")
-    val out = java.nio.file.Files.createTempDirectory("graft-catspec-admission-")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-catspec-admission-")
     out.toFile.deleteOnExit()
     def drain(maxV: Option[Int]): Seq[Long] = {
       val reader = ss.readStream

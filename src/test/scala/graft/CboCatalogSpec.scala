@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** CBO over CATALOG tables (the v2 twin of CboSpec): manifest-exact row
   * counts and footer-derived column bounds are free; `CALL system.analyze`
@@ -13,15 +13,6 @@ import graft.catalog.GraftCatalog
   * dimension-first plan. */
 class CboCatalogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-cbocat-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
 
   private def cboOn(ss: SparkSession): Unit = {
     ss.conf.set("spark.sql.cbo.enabled", "true")

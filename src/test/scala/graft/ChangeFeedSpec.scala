@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.{ChangeFeed, GraftCatalog}
+import graft.catalog.ChangeFeed
+import graft.TestSpark.freshCatalog
 
 /** Change-data-feed reconstruction from the COW manifests: per-commit
   * classification (insert / delete / update pre+post), no-op silence,
@@ -11,17 +12,6 @@ import graft.catalog.{ChangeFeed, GraftCatalog}
   * snapshot reproduces the ending snapshot, which is the property that
   * makes a CDC feed trustworthy for downstream incremental consumers. */
 class ChangeFeedSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-cdfspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
-
   private def seed(ss: SparkSession, t: String): Unit = {
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING, x DOUBLE)") // v0
     ss.sql(s"INSERT INTO $t VALUES (1,'a',0.5),(2,'b',1.5),(3,'c',2.5),(4,'d',3.5)") // v1
@@ -168,7 +158,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     ss.sql(s"UPDATE $t SET x = x + 10 WHERE id <= 2") // v2: COW rewrite
     ss.sql(s"CALL $c.system.compact(table => 'ns.t', target_files => 1)") // v3: layout only
     ss.sql(s"DELETE FROM $t WHERE id = 4") // v4
-    val out = java.nio.file.Files.createTempDirectory("graft-cdfspec-stream-").toString
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-cdfspec-stream-").toString
     drainChanges(ss, t, out, Map("starting_version" -> "0",
       "max_versions_per_trigger" -> "1"))
     val streamed = ss.read.parquet(s"$out/result")
@@ -183,7 +173,7 @@ class ChangeFeedSpec extends AnyFunSuite {
     val (ss, c) = freshCatalog("cdf_resume")
     val t = s"$c.ns.t"
     seed(ss, t)
-    val out = java.nio.file.Files.createTempDirectory("graft-cdfspec-resume-").toString
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-cdfspec-resume-").toString
     drainChanges(ss, t, out, Map("starting_version" -> "0"))
     val first = ss.read.parquet(s"$out/result").count()
     assert(first == 4) // v1's four inserts
@@ -195,7 +185,7 @@ class ChangeFeedSpec extends AnyFunSuite {
       Set((1L, "a", 0.5, "update_preimage", 2), (1L, "a", 0.0, "update_postimage", 2)))
     // default starting point for a FRESH stream is the current latest:
     // nothing to emit until the next commit
-    val out2 = java.nio.file.Files.createTempDirectory("graft-cdfspec-fresh-").toString
+    val out2 = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-cdfspec-fresh-").toString
     drainChanges(ss, t, out2)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out2/result")) ||
       ss.read.parquet(s"$out2/result").isEmpty)

@@ -13,16 +13,9 @@ import graft.catalog.GraftCatalog
 class ClusteredTableSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-cluspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    // keep the tiny test shuffle wide so clustering yields >1 file
-    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    (ss, name)
-  }
+  // keep the tiny test shuffle wide so clustering yields >1 file
+  private def freshCatalog(name: String): (SparkSession, String) =
+    TestSpark.freshCatalog(name, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   private def seedWide(ss: SparkSession, t: String): Unit = {
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING) PARTITIONED BY (id)")
@@ -74,13 +67,13 @@ class ClusteredTableSpec extends AnyFunSuite {
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING) PARTITIONED BY (id)")
-    val src = java.nio.file.Files.createTempDirectory("cluspec-src")
+    val src = java.nio.file.Files.createTempDirectory(Artifacts.root, "cluspec-src")
     ss.range(0, 1000).selectExpr("id", "CAST(id AS STRING) AS v")
       .repartition(8) // scattered input files
       .write.mode("overwrite").parquet(src.toString)
     val q = ss.readStream.schema("id BIGINT, v STRING").parquet(src.toString)
       .writeStream.option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cluspec-ck").toString)
+        java.nio.file.Files.createTempDirectory(Artifacts.root, "cluspec-ck").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .toTable(t)
     q.awaitTermination()

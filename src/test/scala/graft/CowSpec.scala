@@ -15,16 +15,9 @@ import graft.catalog.{GraftCatalog, Manifests}
 class CowSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-cowspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    // keep the tiny test shuffles wide so clustering yields >1 file
-    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    (ss, name)
-  }
+  // keep the tiny test shuffles wide so clustering yields >1 file
+  private def freshCatalog(name: String): (SparkSession, String) =
+    TestSpark.freshCatalog(name, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   /** Clustered table, 4 disjoint-range appends -> >=4 files with disjoint
     * id bounds (the takedown-friendly layout the COW granularity is for). */
@@ -181,7 +174,7 @@ class CowSpec extends AnyFunSuite {
 
   test("a row group with omitted large-binary stats POISONS the column's file bounds") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cowspec-bigbin-")
+    val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-cowspec-bigbin-")
     dir.toFile.deleteOnExit()
     val ss = spark.newSession()
     // force multiple SMALL row groups per file, size-checked every record,
@@ -348,7 +341,7 @@ class CowSpec extends AnyFunSuite {
     val (ss, c) = freshCatalog("cow_epoch")
     val t = s"$c.ns.sink"
     ss.sql(s"CREATE TABLE $t (id BIGINT, v STRING)")
-    val out = java.nio.file.Files.createTempDirectory("graft-cowspec-epoch-")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-cowspec-epoch-")
     out.toFile.deleteOnExit()
     ss.range(0, 40).selectExpr("id", "concat('v', id) AS v")
       .repartition(4).write.parquet(s"$out/in")

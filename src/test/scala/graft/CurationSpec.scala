@@ -100,7 +100,7 @@ class CurationSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (0L until 300L)
       .map(i => (i, s"document body $i with tokens", "en", 20L))
-    val dirA = java.nio.file.Files.createTempDirectory("graft-fp-").toString
+    val dirA = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-fp-").toString
     try {
       def fp(rows: Seq[(Long, String, String, Long)], shuffledSeed: Int): (Long, Long, Long) = {
         val ordered = if (shuffledSeed == 0) rows
@@ -680,7 +680,7 @@ class CurationSpec extends AnyFunSuite {
     // the reference's monthly INSERT-SELECT re-executed concurrently:
     // both writers apply the SAME delta; the loser rebases onto the
     // winner's result and must land a version with IDENTICAL content
-    val root = java.nio.file.Files.createTempDirectory("graft-rerun-")
+    val root = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-rerun-")
     val base = Tables.documents(spark, sf)
       .select(col("doc_id"),
         conv(substring(md5(concat_ws("|", col("doc_id"), col("text"))), 1, 8), 16, 10)
@@ -733,7 +733,7 @@ class CurationSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dupspan-").toString
+    val tmp = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-dupspan-").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val out = Curation.dupSpans(spark, tmp).collect()
@@ -773,7 +773,7 @@ class CurationSpec extends AnyFunSuite {
 
   private def writeDocs(rows: Seq[(Long, String)], prefix: String): String = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    val tmp = java.nio.file.Files.createTempDirectory(Artifacts.root, prefix).toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

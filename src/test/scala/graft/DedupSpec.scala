@@ -46,7 +46,7 @@ class DedupSpec extends AnyFunSuite {
     Dedup.ensureSignatureStore(spark, sf)
     val plan = Dedup.nearDupNewVsCorpus(spark, sf)
       .queryExecution.sparkPlan.toString
-    assert(plan.contains("graft-sigstore"),
+    assert(plan.contains(Artifacts.root.toString),
       s"expected parquet scans of the persisted signature store in:\n$plan")
     assert(!plan.contains("m127"),
       "the 128-wide min aggregate must not be re-planned per query")
@@ -106,7 +106,7 @@ class DedupSpec extends AnyFunSuite {
     // drop (VERDICT r6 #4).
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-capfixture").toString
+    val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-capfixture").toString
     val boiler = (1L to 6L).map(i => (i, "common boilerplate banner text repeated verbatim"))
     val dup = Seq((10L, "alpha beta gamma delta"), (11L, "alpha beta gamma delta"))
     (boiler ++ dup).toDF("doc_id", "text")
@@ -194,7 +194,7 @@ class DedupSpec extends AnyFunSuite {
     val bothRunning = new CountDownLatch(2)
     def build(key: String): Thread = {
       val t = new Thread(() => {
-        Dedup.ensureArtifact(s"latchtest-$nonce-$key") { tmp =>
+        Artifacts.ensure(s"latchtest-$nonce-$key") { tmp =>
           builds.incrementAndGet()
           bothRunning.countDown()
           // hold the build open until BOTH keys are inside their builds —
@@ -213,7 +213,7 @@ class DedupSpec extends AnyFunSuite {
     val again = new AtomicInteger(0)
     val racers = (1 to 4).map { _ =>
       val t = new Thread(() => {
-        Dedup.ensureArtifact(s"latchtest-$nonce-c") { tmp =>
+        Artifacts.ensure(s"latchtest-$nonce-c") { tmp =>
           again.incrementAndGet()
           java.nio.file.Files.writeString(tmp.resolve("x"), "c")
         }
@@ -256,7 +256,7 @@ class DedupSpec extends AnyFunSuite {
         else s"unique document body number $i with entirely distinct words w${i}a w${i}b w${i}c w${i}d"
       (i, text, "en", text.length.toLong)
     }.toDF("doc_id", "text", "lang", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew-").toString
+    val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-skew-").toString
     try {
       docs.coalesce(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
       // candidate stage: all 1225 hot pairs survive (bucket 50 < cap 4096)

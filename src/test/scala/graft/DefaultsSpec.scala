@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.{GraftCatalog, Manifests}
+import graft.catalog.Manifests
+import graft.TestSpark.freshCatalog
 
 /** `ADD COLUMN … DEFAULT` as metadata (VERDICT r15 #5): no backfill —
   * the folded constant lands in EXISTS_DEFAULT field metadata and files
@@ -10,17 +10,6 @@ import graft.catalog.{GraftCatalog, Manifests}
   * INSERTs that omit the column. SET DEFAULT changes future inserts
   * only (the existence default stays frozen — SQL standard). */
 class DefaultsSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-defspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
-
   test("old files serve the default with zero backfill; inserts fill CURRENT_DEFAULT") {
     val (ss, c) = freshCatalog("def_basic")
     val t = s"$c.ns.t"

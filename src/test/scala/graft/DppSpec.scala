@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.GraftCatalog
 
 /** Runtime (DPP-style) file skipping on catalog scans
   * (RuntimeSkip.scala): a star probe with NO static predicate on the
@@ -12,16 +11,9 @@ import graft.catalog.GraftCatalog
 class DppSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-dppspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    // keep the clustered layout multi-file at test scale
-    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    (ss, name)
-  }
+  // keep the clustered layout multi-file at test scale
+  private def freshCatalog(name: String): (SparkSession, String) =
+    TestSpark.freshCatalog(name, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   test("a selective dim filter prunes fact FILES at runtime; content exact") {
     val (ss, c) = freshCatalog("dpp_star")
@@ -76,7 +68,7 @@ class DppSpec extends AnyFunSuite {
     // would preempt the runtime path under test), routed through
     // parquet so the selective filter survives optimization (a local
     // relation's filter folds away and the DPP rule sees none)
-    val dimPath = java.nio.file.Files.createTempDirectory("graft-dpp-dim-").toString
+    val dimPath = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-dpp-dim-").toString
     ss.sql("SELECT k, tag FROM VALUES (3L, 1), (257L, 1), (1000L, 0), (2000L, 0) " +
       "AS t(k, tag)").write.mode("overwrite").parquet(dimPath)
     ss.read.parquet(dimPath).createOrReplaceTempView("dim_probe")

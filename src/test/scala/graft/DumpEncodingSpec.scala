@@ -32,7 +32,7 @@ class DumpEncodingSpec extends AnyFunSuite {
 
   test("verify-style dump of scd2 history writes no INT96 and the 9999-12-31 sentinel round-trips") {
     val df = Verify.canonicalize(graft.operators.Analytics.scd2History(spark, sf))
-    val out = java.nio.file.Files.createTempDirectory("graft-dump-enc").toFile
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-dump-enc").toFile
     out.deleteOnExit()
     // mirror Verify.main's dump shape: total-order sort, single file
     val sorted = df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toSeq: _*)

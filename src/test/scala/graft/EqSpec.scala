@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.{GraftCatalog, Manifests, SkipRecorder}
+import graft.catalog.{Manifests, SkipRecorder}
+import graft.TestSpark.freshCatalog
 
 /** EQUALITY DELETES (catalog/Eq.scala, VERDICT r15 #2): keyed upsert as
   * insert files + one key-valued tombstone blob — zero fact-file reads
@@ -10,17 +10,6 @@ import graft.catalog.{GraftCatalog, Manifests, SkipRecorder}
   * sequence rule; `CALL system.compact` materializes tombstones away.
   * Everything that cannot see them refuses loudly. */
 class EqSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-eqspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
-
   test("upsert replaces older rows by key, zero scans of the target during the write") {
     val (ss, c) = freshCatalog("eq_basic")
     val t = s"$c.ns.t"
@@ -166,7 +155,7 @@ class EqSpec extends AnyFunSuite {
       ss.readStream.table(t).writeStream
         .format("noop")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("eqg-ckpt").toString)
+          java.nio.file.Files.createTempDirectory(Artifacts.root, "eqg-ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start().awaitTermination())
     assert(eStream.getMessage != null, "streaming read must refuse")
@@ -196,8 +185,8 @@ class EqSpec extends AnyFunSuite {
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT, v BIGINT)")
     ss.sql(s"INSERT INTO $t SELECT id, id FROM range(0, 20)")
-    val out = java.nio.file.Files.createTempDirectory("eqstream-out")
-    val ckpt = java.nio.file.Files.createTempDirectory("eqstream-ckpt")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "eqstream-out")
+    val ckpt = java.nio.file.Files.createTempDirectory(Artifacts.root, "eqstream-ckpt")
     def drain(): Unit = {
       val q = ss.readStream.table(t).writeStream
         .format("parquet").option("path", out.toString)

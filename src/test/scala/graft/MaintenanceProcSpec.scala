@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** The storage-maintenance procedure pair added on top of expire/compact:
   * RESTORE (rollback as a new commit, history preserved) and
@@ -12,17 +12,8 @@ import graft.catalog.GraftCatalog
 class MaintenanceProcSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String, java.nio.file.Path) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-mntspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name, root)
-  }
-
   test("restore rolls content back as a NEW commit; history stays addressable") {
-    val (ss, c, _) = freshCatalog("mnt_restore")
+    val (ss, c) = freshCatalog("mnt_restore")
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT)")
     ss.sql(s"INSERT INTO $t SELECT id FROM range(0, 100)")      // v1
@@ -41,7 +32,8 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("remove_orphans reclaims unreferenced files but respects the age guard") {
-    val (ss, c, root) = freshCatalog("mnt_orphan")
+    val (ss, c) = freshCatalog("mnt_orphan")
+    val root = TestSpark.catalogRoot(ss, c)
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT)")
     ss.sql(s"INSERT INTO $t SELECT id FROM range(0, 10)")
@@ -65,7 +57,7 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("remove_orphans keeps branch-only files (they ARE referenced)") {
-    val (ss, c, _) = freshCatalog("mnt_orphan_br")
+    val (ss, c) = freshCatalog("mnt_orphan_br")
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT)")
     ss.sql(s"INSERT INTO $t SELECT id FROM range(0, 10)")
@@ -78,7 +70,7 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("zorder OPTIMIZE: lossless layout-only rewrite, both dims prune the file list") {
-    val (ss, c, _) = freshCatalog("mnt_zorder")
+    val (ss, c) = freshCatalog("mnt_zorder")
     val t = s"$c.ns.ev"
     ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     ss.sql(s"CREATE TABLE $t (id BIGINT, u BIGINT, ts TIMESTAMP)")
@@ -103,7 +95,7 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("tags pin versions through expire; untag releases them; names are guarded") {
-    val (ss, c, _) = freshCatalog("mnt_tag")
+    val (ss, c) = freshCatalog("mnt_tag")
     val t = s"$c.ns.t"
     ss.sql(s"CREATE TABLE $t (id BIGINT)")
     ss.sql(s"INSERT INTO $t SELECT id FROM range(0, 100)")              // v1
@@ -136,7 +128,7 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("set_clustering evolves the write layout without touching existing files") {
-    val (ss, c, _) = freshCatalog("mnt_evolve")
+    val (ss, c) = freshCatalog("mnt_evolve")
     val t = s"$c.ns.t"
     ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     ss.sql(s"CREATE TABLE $t (id BIGINT, v BIGINT)")
@@ -165,7 +157,8 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("listProcedures, loadProcedure and the unknown-name error name one procedure set") {
-    val (_, c, root) = freshCatalog("mnt_procs")
+    val (ss, c) = freshCatalog("mnt_procs")
+    val root = TestSpark.catalogRoot(ss, c)
     val cat = new GraftCatalog
     cat.initialize(c, new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("root", root.toString)))
@@ -185,7 +178,7 @@ class MaintenanceProcSpec extends AnyFunSuite {
   }
 
   test("zorder OPTIMIZE validates its arguments") {
-    val (ss, c, _) = freshCatalog("mnt_zorder_ddl")
+    val (ss, c) = freshCatalog("mnt_zorder_ddl")
     val t = s"$c.ns.ev"
     ss.sql(s"CREATE TABLE $t (id BIGINT, s STRING)")
     ss.sql(s"INSERT INTO $t VALUES (1, 'a')")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.expressions.filter.{Predicate => VPred}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{FileStats, GraftCatalog, Manifests, SkipEval, V2Preds}
+import graft.catalog.{FileStats, Manifests, SkipEval, V2Preds}
 
 /** METADATA-ONLY DELETE (SupportsDeleteV2): the three-way contract —
   * provable predicates drop whole files in one manifest swap (zero files
@@ -19,15 +19,8 @@ import graft.catalog.{FileStats, GraftCatalog, Manifests, SkipEval, V2Preds}
 class MetaDeleteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-mdelspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    (ss, name)
-  }
+  private def freshCatalog(name: String): (SparkSession, String) =
+    TestSpark.freshCatalog(name, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   test("aligned range DELETE is metadata-only: drops whole files, writes none") {
     val (ss, c) = freshCatalog("mdel_aligned")

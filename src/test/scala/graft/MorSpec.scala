@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{ChangeFeed, GraftCatalog, Manifests}
+import graft.catalog.{ChangeFeed, Manifests}
 
 /** MERGE-ON-READ deletion vectors (`TBLPROPERTIES
   * ('write.row_level.mode'='merge-on-read')`): row-level verbs commit
@@ -19,15 +19,8 @@ import graft.catalog.{ChangeFeed, GraftCatalog, Manifests}
 class MorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-morspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    ss.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    (ss, name)
-  }
+  private def freshCatalog(name: String): (SparkSession, String) =
+    TestSpark.freshCatalog(name, "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   private def seedMor(ss: SparkSession, t: String, rows: Int = 3000): Unit = {
     ss.sql(s"CREATE TABLE $t (id BIGINT, v BIGINT) " +
@@ -234,7 +227,7 @@ class MorSpec extends AnyFunSuite {
     seedMor(ss, t, rows = 300)
     ss.sql(s"DELETE FROM $t WHERE id < 30")
     // a stream born AFTER the delta opens with the masked snapshot
-    val out = java.nio.file.Files.createTempDirectory("mor_stream_out")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "mor_stream_out")
     val q = ss.readStream.table(t).writeStream
       .format("parquet").option("path", s"$out/data")
       .option("checkpointLocation", s"$out/chk")
@@ -243,7 +236,7 @@ class MorSpec extends AnyFunSuite {
     val got = ss.read.parquet(s"$out/data").count()
     assert(got == 270, s"opening snapshot must mask tombstones; got $got")
     // a stream holding an offset BEFORE a rowdelta commit fails loudly
-    val out2 = java.nio.file.Files.createTempDirectory("mor_stream_fail")
+    val out2 = java.nio.file.Files.createTempDirectory(Artifacts.root, "mor_stream_fail")
     val q2 = ss.readStream.table(t).writeStream
       .format("parquet").option("path", s"$out2/data")
       .option("checkpointLocation", s"$out2/chk")
@@ -313,7 +306,7 @@ class MorSpec extends AnyFunSuite {
     seedMor(ss, t, rows = 300)
     ss.sql(s"DELETE FROM $t WHERE id = 7")
     ss.sql(s"UPDATE $t SET v = 1 WHERE id >= 20 AND id < 25")
-    val out = java.nio.file.Files.createTempDirectory("mor_cdf_stream")
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "mor_cdf_stream")
     val q = ss.readStream
       .option("starting_version", "0")
       .option("key_cols", "id")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** Incrementally-maintained materialized views (`CALL system.create_mv`
   * / `refresh_mv`): affected-key recompute driven by the change feed.
@@ -12,15 +12,6 @@ import graft.catalog.GraftCatalog
   * the answer. */
 class MvSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-mvspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
 
   /** MV content == full recompute, compared exactly both directions. */
   private def assertMatchesRecompute(ss: SparkSession, mv: String, recomputeSql: String): Unit = {

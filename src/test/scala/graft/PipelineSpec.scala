@@ -27,7 +27,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("JSONL staging is chunked (K2) and schema'd read-back sees all rows (S2/S3)") {
     Pipeline.dimensionPipeline(spark, sf) // ensure staging exists
-    val dir = new java.io.File(s"${Pipeline.scratch(sf)}/korean_jsonl")
+    val dir = new java.io.File(s"${Artifacts.scratch(sf)}/korean_jsonl")
     val parts = dir.listFiles().count(_.getName.startsWith("part-"))
     assert(parts == 4, s"expected 4 JSONL chunks, got $parts")
     val back = spark.read.json(dir.getAbsolutePath)
@@ -42,7 +42,7 @@ class PipelineSpec extends AnyFunSuite {
     // ("broken"), and the 1-line→N-rows tuple explode (P2) — end-to-end
     // through parse → JSONL staging → schema'd load → dimension SQL →
     // D1/D2 checks, not just at the expression level.
-    val base = Pipeline.scratch("hangul-e2e")
+    val base = Artifacts.scratch("hangul-e2e")
     val dim = Pipeline.dimensionFromRawLines(spark, base,
       titles = Seq("1:100:한국어", "2:101:드라마", "3:102:영화", "4:103:시:조", "broken"),
       hanja = Seq("한국어:韓國語:보기", "드라마:드라마:예:문"),
@@ -148,7 +148,7 @@ class PipelineSpec extends AnyFunSuite {
     // The cluster-scale variant: multiple writer tasks, same file-size
     // governor. The per-file record cap is the contract (exact counts are
     // per-task); the rewrite must still strictly shrink and be lossless.
-    val base = Pipeline.scratch(sf) + "/documents_compact"
+    val base = Artifacts.scratch(sf) + "/documents_compact"
     val frag = spark.read.parquet(Pipeline.ensureFragmentedDocs(spark, sf))
     frag.repartition(2).write.mode("overwrite")
       .option("maxRecordsPerFile", 100).parquet(s"$base/compact_mt")
@@ -183,7 +183,7 @@ class PipelineSpec extends AnyFunSuite {
         d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
           .map(f => (f.getName, f.length())).toSet
       }.toMap
-    val base = new java.io.File(Pipeline.scratch(sf) + "/events_backfill_spec")
+    val base = new java.io.File(Artifacts.scratch(sf) + "/events_backfill_spec")
     val ev = Tables.events(spark, sf)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(base.toString)
     val before = listing(base)
@@ -219,7 +219,7 @@ class PipelineSpec extends AnyFunSuite {
     // the layouts really carry their codec (parquet part files are named
     // with it) — otherwise this test could silently compare snappy twice
     Seq("snappy", "zstd").foreach { codec =>
-      val dir = new java.io.File(Pipeline.scratch(sf) + s"/docs_codec_$codec")
+      val dir = new java.io.File(Artifacts.scratch(sf) + s"/docs_codec_$codec")
       val parts = dir.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
       assert(parts.nonEmpty && parts.forall(_.contains(s".$codec.")),
         s"$codec layout: ${parts.mkString(",")}")

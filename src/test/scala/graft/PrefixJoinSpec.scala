@@ -61,7 +61,7 @@ class PrefixJoinSpec extends AnyFunSuite {
     // below the theorem's requirement. A is the first 253 of B's 460
     // distinct tokens, so J = 253/460 = 0.55 exactly (rational).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ppjoin-boundary-").toString
+    val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, "ppjoin-boundary-").toString
     try {
       val bToks = (1 to 460).map(i => f"t$i%04d")
       val aToks = bToks.take(253)
@@ -92,7 +92,7 @@ class PrefixJoinSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     for (tau <- Seq(0.5, 0.7, 0.85)) {
-      val dir = java.nio.file.Files.createTempDirectory(s"ppjoin-prop-").toString
+      val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, s"ppjoin-prop-").toString
       try {
         val vocab = (1 to 12).map(i => s"w$i")
         val docs = (0 until 60).map { id =>

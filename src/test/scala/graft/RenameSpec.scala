@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.{GraftCatalog, Manifests}
+import graft.catalog.Manifests
+import graft.TestSpark.freshCatalog
 
 /** Column RENAME/DROP as metadata-only commits over parquet FIELD IDS
   * (FieldIds in GraftCatalog.scala): every catalog column carries a
@@ -13,15 +13,6 @@ import graft.catalog.{GraftCatalog, Manifests}
   * the schema it was committed with. */
 class RenameSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-renamespec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
 
   test("rename re-reads old files through the new name; time travel keeps the old one") {
     val (ss, c) = freshCatalog("rn_basic")

@@ -58,7 +58,7 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val bad = Seq((1L, Array.fill(64)(0.5f)), (2L, Array.fill(32)(0.5f)))
       .toDF("vec_id", "embedding")
-    val dirPath = java.nio.file.Files.createTempDirectory("graft-bademb")
+    val dirPath = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-bademb")
     try {
       bad.write.mode("overwrite").parquet(s"$dirPath/embeddings.parquet")
       val ex = intercept[Exception] {

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** Storage-partitioned joins over catalog `bucket(n, col)` tables
   * (Spj.scala): the write path produces bucket-pure files with recorded
@@ -13,15 +12,6 @@ import graft.catalog.GraftCatalog
   * a row. */
 class SpjSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-spjspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
 
   private def exchanges(plan: String): Int =
     "Exchange (hash|range)partitioning".r.findAllIn(plan).length
@@ -278,7 +268,7 @@ class SpjSpec extends AnyFunSuite {
     // DELETE adds vectors, and the join still plans Exchange-free with
     // masked bucket groups.
     val (ss, c) = freshCatalog("spj_stream")
-    val out = java.nio.file.Files.createTempDirectory("graft-spjstream-").toString
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-spjstream-").toString
     ss.range(0, 500).selectExpr("id", "id * 2 AS v").repartition(4)
       .write.mode("overwrite").parquet(s"$out/in")
     ss.sql(s"CREATE TABLE $c.ns.m (id BIGINT, v BIGINT) PARTITIONED BY (bucket(4, id)) " +

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.catalog.{GraftCatalog, Manifests}
+import graft.catalog.Manifests
+import graft.TestSpark.freshCatalog
 
 /** ATOMIC CTAS / RTAS (catalog/Staging.scala, r15): CREATE/REPLACE TABLE
   * AS SELECT stage their data into a commit subdir and publish with ONE
@@ -12,15 +12,6 @@ import graft.catalog.{GraftCatalog, Manifests}
   * across the replace. */
 class StagingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-stagingspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
 
   test("CTAS publishes schema + data in one commit; collision refuses") {
     val (ss, c) = freshCatalog("stg_ctas")

@@ -15,18 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * A restart re-analyzes under the new schema and drains the old-era
   * backlog correctly (old files up-cast / resolve by field id). */
 class StreamSchemaEraSpec extends AnyFunSuite {
-  private lazy val spark = graft.TestSpark.spark
-
   private def freshCatalog(name: String): (SparkSession, String, GraftCatalog) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-streamera-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
+    val (ss, c) = graft.TestSpark.freshCatalog(name)
     val cat = new GraftCatalog
     cat.initialize(name, new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-      java.util.Map.of("root", root.toString)))
-    (ss, name, cat)
+      java.util.Map.of("root", graft.TestSpark.catalogRoot(ss, c).toString)))
+    (ss, c, cat)
   }
 
   test("a running stream refuses commits from a newer schema era, loudly") {
@@ -56,7 +50,7 @@ class StreamSchemaEraSpec extends AnyFunSuite {
   test("a restart adopts the new schema and drains the old-era backlog correctly") {
     val (ss, c, _) = freshCatalog("era_restart")
     val t = s"$c.ns.t"
-    val scratch = java.nio.file.Files.createTempDirectory("graft-streamera-out-")
+    val scratch = java.nio.file.Files.createTempDirectory(graft.Artifacts.root, "graft-streamera-out-")
     val out = s"$scratch/sink"
     val ckpt = s"$scratch/ckpt"
     ss.sql(s"CREATE TABLE $t (id BIGINT, n INT)")

@@ -40,7 +40,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[StreamEvent]
     // graft-stream- prefix so the bench/verify scratch sweep collects it
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-update-ckpt").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-stream-update-ckpt").toString
     val seen = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     input.addData(StreamEvent(1L, ts(5), 1L, "click", 1.0))
     val q = StreamingOps.hourlyCountsUpdate(input.toDF(), ckpt) { (batch, _) =>
@@ -167,7 +167,7 @@ class StreamingSpec extends AnyFunSuite {
     // Pins the claim streamEnrich/streamTemporalJoin rely on: the static
     // side of a stream-static join is re-read at every micro-batch, so a
     // dimension refreshed between batches affects later batches only.
-    val out = java.nio.file.Files.createTempDirectory("replantest").toString
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "replantest").toString
     val spark0 = spark
     import spark0.implicits._
     // 3 single-row stream files -> 3 micro-batches (maxFilesPerTrigger=1).
@@ -258,7 +258,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("restart from the same checkpoint reprocesses nothing (exactly-once source tracking)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-restart").toString
+    val out = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-stream-restart").toString
     val watch = java.nio.file.Paths.get(out, "in")
     java.nio.file.Files.createDirectories(watch)
     java.nio.file.Files.createSymbolicLink(

@@ -338,7 +338,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       2L -> "a b c x y", // shares x,y with d4
       3L -> "d e p q",   // p,q shared with d4
       4L -> "x y p q")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tfc-").toString
+    val tmp = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-tfc-").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -365,7 +365,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (10L to 14L).map(i => i -> "san francisco") ++ // 5x captive bigram
       (20L to 24L).map(i => i -> s"x${i - 20} the") ++ // 5 distinct histories
       Seq(1L -> "z the", 2L -> "z francisco")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-kn-").toString
+    val tmp = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-kn-").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.GraftCatalog
+import graft.TestSpark.freshCatalog
 
 /** Persistent SQL views on the graft catalog: CREATE/DROP/SHOW VIEW as
   * plain statements (parser-intercepted — Spark 4.1 refuses v2 view DDL
@@ -12,15 +12,6 @@ import graft.catalog.GraftCatalog
   * a view. */
 class ViewsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def freshCatalog(name: String): (SparkSession, String) = {
-    val root = java.nio.file.Files.createTempDirectory(s"graft-viewspec-$name-")
-    root.toFile.deleteOnExit()
-    val ss = spark.newSession()
-    ss.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    ss.conf.set(s"spark.sql.catalog.$name.root", root.toString)
-    (ss, name)
-  }
 
   test("create / select / show / drop lifecycle") {
     val (ss, c) = freshCatalog("vw_life")
