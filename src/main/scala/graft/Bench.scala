@@ -153,7 +153,8 @@ object Bench {
     // machinery) paid before any per-query measurement
     spark.range(1000000).selectExpr("sum(id) s").collect()
     try Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(
+      s"[bench-rerun] warm-up failed (continuing): ${e.getClass.getName}: ${e.getMessage}") }
     val results = names.map { name =>
       SparkEntry.queries.get(name) match {
         case None =>
@@ -283,8 +284,9 @@ object Bench {
     // the file, used ONLY when the sf matches): any query that regressed
     // >2x round-over-round joins the rerun trend guard, so a suite-noise
     // regression is disproven inside the artifact itself (VERDICT r5 #3).
-    val priorQueries: Map[String, Double] = try {
-      val txt = Files.readString(Paths.get("BENCH_LOCAL.json"))
+    val priorPath = Paths.get("BENCH_LOCAL.json")
+    val priorQueries: Map[String, Double] = if (!Files.exists(priorPath)) Map.empty else try {
+      val txt = Files.readString(priorPath)
       if (!txt.contains(s""""sf":"$sfDir"""")) Map.empty
       else {
         // Scan to the MATCHING close brace (not the first '}') and parse
@@ -309,7 +311,10 @@ object Bench {
           .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
           .toMap
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] prior timings unreadable, no trend guard: ${e.getClass.getName}: ${e.getMessage}")
+      Map.empty
+    }
 
     // Warmup: touch codegen, shuffle machinery, and the vectorized parquet
     // reader once before any timed query.
@@ -612,8 +617,9 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"retries":$retries,"rerun":$rerun,"rerun_fork_ok":$forkOk,"regressions":$regr,"warm_regressions":$warmRegr,"rerun_truncated":$truncated,"store_build":$stores,"sf":"$sfDir"}"""
     println(line)
     if (only.isEmpty)
-      try Files.writeString(Paths.get("BENCH_LOCAL.json"), line + "\n")
-      catch { case _: Throwable => () }
+      try Files.writeString(priorPath, line + "\n")
+      catch { case NonFatal(e) => System.err.println(
+        s"[bench] BENCH_LOCAL.json write failed: ${e.getClass.getName}: ${e.getMessage}") }
     // Compact summary as the very LAST stdout line: the full line above is
     // ~4 KB and the driver's tail capture slices it (BENCH r7/r8 both
     // recorded "parsed": null) — this one always survives any tail window.

@@ -53,13 +53,16 @@ object Tables {
     * one of the cores.
     *
     * Scale-adaptive, derived from input size (never a local-only pin): the
-    * round-robin fires only when the optimizer's size estimate is below
+    * spread fires only when the optimizer's size estimate is below
     * `max(spark.sql.shuffle.partitions, defaultParallelism) ×
     * spark.sql.files.maxPartitionBytes`. That cutoff scales with config —
     * it is also the most this exchange can ever move — so below it the
     * added shuffle is cheaper than the serial stage it breaks up; at or
     * above it (any real 100 TB scan plans thousands of row groups) this is
-    * the identity. */
+    * the identity. The exchange itself is [[spread]]: a hash on the whole
+    * row, not round-robin. Callers project before the call — the hash
+    * reads every column, so columns dropped after it are still scanned
+    * and shuffled. */
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // Target width = the session's deliberate shuffle sizing, floored at
@@ -73,8 +76,29 @@ object Tables {
     val cutoff = BigInt(target.toLong) *
       spark.sessionState.conf.filesMaxPartitionBytes
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= cutoff) df
-    else df.repartition(target)
+    else spread(df, target)
   }
+
+  /** Hash-distribute `df` over `n` partitions on ALL of its columns — the
+    * one spreading exchange of [[fanOut]] and the pipeline's chunked
+    * staging writes.
+    *
+    * Retry-safe without a sort: a row's partition is a function of its
+    * content, so a retried map task rebuilds exactly the partitions its
+    * first attempt wrote. Round-robin is not (its assignment follows input
+    * order), which is why Spark sorts every row before a round-robin
+    * exchange (`spark.sql.execution.sortBeforeRepartition`) — a whole-row
+    * hash, a copy and a sort per row. The hash partitioner computes one
+    * hash per row and nothing else; Spark adds that sort to round-robin
+    * exchanges only, and the setting stays on for any round-robin the
+    * program still plans.
+    *
+    * Identical rows land in one partition, so a DISTINCT or partial
+    * aggregate above the spread dedups them locally before its own
+    * exchange. The flip side is that a frame of few distinct rows spreads
+    * over few partitions. */
+  def spread(df: DataFrame, n: Int): DataFrame =
+    df.repartition(n, df.columns.map(c => col(s"`$c`")).toSeq: _*)
 
   /** Stage `df` for the duration of `use`, then release it: the one
     * staging policy of the LLM-data operators (PAPER.md §1.1 — each

@@ -4,7 +4,7 @@ import java.io.{DataInputStream, DataOutputStream, IOException, ObjectInputStrea
 import java.nio.file.Path
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.MetadataColumn

@@ -820,7 +820,7 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog with FunctionCatal
   * serving it under time travel. */
 private[graft] object FieldIds {
   val MetaKey = "parquet.field.id"
-  import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
+  import org.apache.spark.sql.types.MetadataBuilder
 
   private[catalog] def withId(f: StructField, id: Long): StructField =
     f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)

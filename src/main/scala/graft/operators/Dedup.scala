@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Artifacts, Sessions, Tables}
+import graft.{Artifacts, Tables}
 
 /** X1/X2 — deduplication over `documents`: exact (content-hash groupBy),
   * MinHash+LSH banded near-dup, and SimHash fingerprints.
@@ -492,7 +492,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_bands"))
       .filter(col("n_bands") >= minBands)
       .select("doc_a", "doc_b")
-      .repartition(Sessions.cpus.toInt, col("doc_a"), col("doc_b"))
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_a"), col("doc_b"))
   }
 
   private def computeNearDupPairs(spark: SparkSession, dir: String, threshold: Double,
@@ -588,7 +588,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_bands"))
       .filter(col("n_bands") >= minBands)
       .select("new_doc", "corpus_doc")
-      .repartition(Sessions.cpus.toInt, col("new_doc"), col("corpus_doc"))
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("new_doc"), col("corpus_doc"))
     val mh = profile.select("doc_id", "mh")
     val minAgree = minAgreeFor(estJaccard, nHashes)
     val agreed = cand
@@ -1801,6 +1801,9 @@ object Dedup {
     // regressed 1.45/1.33 -> 1.93/1.66 s at sf0.1/32 cores — the same
     // partial-dedup-locality story as approxDistinct (a doc's duplicate
     // (source, shingle) rows dedup best inside one scan task).
+    // Re-measured with the hash spread (sf0.1, 4 cores, 6 warm runs per
+    // arm): 1.47 → 1.29 s median, a gain at 4 cores; left out until it is
+    // measured at the 32-core width where round-robin lost.
     Tables.withStaged(Tables.documents(spark, dir)
         .select(col("source"), explode(shingleSetK(1)).as("shingle"))
         .distinct()) { sh =>

@@ -34,7 +34,8 @@ import graft.{Artifacts, Tables}
   * JSONL write, parallel by input split — the Spark answer to the
   * reference's "hours" of single-threaded pandas appends,
   * `dag-knlp.py:98-99`); the only shuffles are the langlink groupBy used
-  * to synthesize the fixture and the final DISTINCT. Join strategy is
+  * to synthesize the fixture, at most one hash spread per staged input,
+  * and the final DISTINCT. Join strategy is
   * AQE-chosen. Nothing collects to the driver except the two D1/D2 check
   * scalars, mirroring the reference's own result flow (`dag-knlp.py:252,
   * 273`).
@@ -44,15 +45,21 @@ object Pipeline {
   /** P1+P3 — colon-split with schema-arity coercion to `names.length`
     * fields: first k-1 fields verbatim, overflow tail rejoined with the
     * delimiter into the last (SURVEY Q1); under-arity lines filtered
-    * (SURVEY Q2 — the reference would crash, `dag-knlp.py:105`). */
+    * (SURVEY Q2 — the reference would crash, `dag-knlp.py:105`).
+    *
+    * One split with limit k does both: its k-th element is the untouched
+    * tail after the (k-1)-th delimiter, and a line with fewer than k
+    * fields yields fewer than k elements. The delimiter, one
+    * non-alphanumeric character, is passed as the two-character `\X`,
+    * which takes `String.split`'s no-regex fast path (`Pattern.quote`'s
+    * `\Q…\E` compiles a `Pattern` on every row). */
   private[graft] def parseDelimited(raw: DataFrame, names: Seq[String], delim: String = ":"): DataFrame = {
+    require(delim.length == 1 && !delim.head.isLetterOrDigit,
+      s"delimiter must be one non-alphanumeric character, got '$delim'")
     val k = names.length
-    val f = split(col("value"), java.util.regex.Pattern.quote(delim), -1)
-    val fields = names.zipWithIndex.map { case (n, i) =>
-      if (i < k - 1) element_at(f, i + 1).as(n)
-      else array_join(slice(f, k, 1 << 20), delim).as(n)
-    }
-    raw.filter(size(f) >= k).select(fields: _*)
+    val f = split(col("value"), "\\" + delim, k)
+    raw.filter(size(f) === k)
+      .select(names.zipWithIndex.map { case (n, i) => element_at(f, i + 1).as(n) }: _*)
   }
 
   /** P2 — nested-tuple split (ref `dag-knlp.py:173-177`): each line splits
@@ -105,39 +112,30 @@ object Pipeline {
                                       base: String,
                                       viewSuffix: String = ""): DataFrame = {
     // ── Stage 2 (S1 text scan → P1/P2/P3 parse → K1/K2 chunked JSONL) ──
-    // fanOut before the parses: the raw fixtures arrive as one/few text
-    // parts below the scan's open-cost split floor, so the split/rejoin
-    // parse and the JSON encode of every staged file otherwise run in one
-    // task (identity at production input sizes — see Tables.fanOut)
-    val titles = parseDelimited(Tables.fanOut(spark.read.text(s"$rawBase/titles_raw")),
+    // One exchange per staged input at most. Titles and langlink parse in
+    // the scan tasks (the text scan splits a file into byte ranges of
+    // max(open cost, bytes / defaultParallelism)) and pass only through
+    // their K2 spread. Hanja has no K2 exchange, so its fanOut spreads the
+    // parse and the JSON encode (identity at production input sizes — see
+    // Tables.fanOut).
+    val titles = parseDelimited(spark.read.text(s"$rawBase/titles_raw"),
       Seq("edit_id", "word_id", "korean"))
     val hanja = parseDelimited(Tables.fanOut(spark.read.text(s"$rawBase/hanja_raw")),
       Seq("korean", "hanjya", "examples"))
-    val langlink = parseTuples(Tables.fanOut(spark.read.text(s"$rawBase/langlink_raw")),
+    val langlink = parseTuples(spark.read.text(s"$rawBase/langlink_raw"),
       Seq("article_id", "language", "text"))
     // K2: chunked multi-file write (the reference's 10k-row part files,
     // `dag-knlp.py:139-145`) — part count, not row count, is the Spark
-    // unit of chunking; consumers prefix-scan the directory (S3).
+    // unit of chunking; consumers prefix-scan the directory (S3). The
+    // chunks come from a hash spread, which needs no pre-shuffle sort.
     // The three staging writes are INDEPENDENT jobs (guide §2.6: overlap
     // independent jobs so the next job's tasks back-fill executors freed
     // by the current job's tail — here each write's tail would otherwise
-    // leave the cores idle while the next hasn't started). Threads are
-    // created under the caller's job group (InheritableThreadLocal), so
-    // the bench watchdog's cancel still reaches all three.
-    locally {
-      val writes = Seq[() => Unit](
-        () => titles.repartition(4).write.mode("overwrite").json(s"$base/korean_jsonl"),
-        () => hanja.write.mode("overwrite").json(s"$base/korean_hanjya_jsonl"), // K1 single-dir write
-        () => langlink.repartition(4).write.mode("overwrite").json(s"$base/korean_japanese_jsonl"))
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-      val threads = writes.map { w =>
-        val t = new Thread(() =>
-          try w() catch { case e: Throwable => failure.compareAndSet(null, e) })
-        t.start(); t
-      }
-      threads.foreach(_.join())
-      if (failure.get() != null) throw failure.get()
-    }
+    // leave the cores idle while the next hasn't started).
+    runConcurrently(spark, "graft-staging", Seq(
+      () => Tables.spread(titles, 4).write.mode("overwrite").json(s"$base/korean_jsonl"),
+      () => hanja.write.mode("overwrite").json(s"$base/korean_hanjya_jsonl"), // K1 single-dir write
+      () => Tables.spread(langlink, 4).write.mode("overwrite").json(s"$base/korean_japanese_jsonl")))
 
     // ── Stage 3 (S2/S3: schema'd JSONL load + K3 temp views) ──
     def st(names: String*) = StructType(names.map(StructField(_, StringType, nullable = true)))
@@ -173,6 +171,46 @@ object Pipeline {
     require(maxLen <= 13, s"check_data_length failed: max len(word_id)=$maxLen > 13")
 
     dim
+  }
+
+  /** Run `jobs` on daemon threads named `<name>-<i>` and wait for all of
+    * them; the first failure is rethrown once every thread has ended.
+    * The threads inherit the caller's job group and local properties (an
+    * InheritableThreadLocal), so a cancel of the caller's group — the
+    * bench watchdog's — reaches their jobs, and each also tags its jobs
+    * with one per-call tag. If the caller is interrupted while it waits,
+    * every job under that tag is cancelled until no thread is left, and
+    * the InterruptedException is rethrown with the interrupt status
+    * restored. */
+  private def runConcurrently(spark: SparkSession, name: String, jobs: Seq[() => Unit]): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"$name-${java.util.UUID.randomUUID()}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
+    val threads = jobs.zipWithIndex.map { case (job, i) =>
+      val t = new Thread(() =>
+        try { sc.addJobTag(tag); job() } catch {
+          case e: Throwable =>
+            // keep an interrupt visible on this thread, then report it
+            if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
+            failure.compareAndSet(null, e)
+        }, s"$name-$i")
+      t.setDaemon(true)
+      t.start(); t
+    }
+    try threads.foreach(_.join())
+    catch {
+      case ie: InterruptedException =>
+        // a job a thread starts after one cancel is caught by the next
+        threads.foreach { t =>
+          while (t.isAlive) {
+            sc.cancelJobsWithTag(tag)
+            try t.join(100) catch { case _: InterruptedException => () }
+          }
+        }
+        Thread.currentThread().interrupt()
+        throw ie
+    }
+    if (failure.get() != null) throw failure.get()
   }
 
   /** The reference's ACTUAL payload — Hangul word titles (A2), Hanja

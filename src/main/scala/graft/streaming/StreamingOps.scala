@@ -926,7 +926,7 @@ object StreamingOps {
     // (measured ~2s of the query at sf0.1) for a single consumer pass.
     // fanOut (r16): the per-batch tokenization of the corpus side ran in
     // the single-row-group scan's ONE task inside the micro-batch; the
-    // round-robin (identity at production corpus sizes) spreads it.
+    // spread (identity at production corpus sizes) parallelizes it.
     val corpusSets = graft.Tables.fanOut(graft.Tables.documents(ss, dir))
       .filter(col("doc_id") < splitFrom)
       .select(col("doc_id").as("corpus_doc"),

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-headroom harness (VERDICT r11 #2): every 100 TB claim in

@@ -173,7 +173,6 @@ class CowSpec extends AnyFunSuite {
   // ---- footer-stats soundness the COW pruning rides on (ADVICE r12) ----
 
   test("a row group with omitted large-binary stats POISONS the column's file bounds") {
-    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-cowspec-bigbin-")
     dir.toFile.deleteOnExit()
     val ss = spark.newSession()

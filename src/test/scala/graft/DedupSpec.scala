@@ -259,8 +259,14 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory(Artifacts.root, "graft-skew-").toString
     try {
       docs.coalesce(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      // candidate stage: all 1225 hot pairs survive (bucket 50 < cap 4096)
-      val cand = Dedup.candidatePairs(spark, dir).localCheckpoint()
+      // candidate stage: all 1225 hot pairs survive (bucket 50 < cap 4096).
+      // It runs at 32 shuffle partitions whatever the host's core count
+      // (at 4, a share of 0.25 is perfect balance), with AQE coalescing
+      // off so the 32 stay 32.
+      val wide = spark.newSession()
+      wide.conf.set("spark.sql.shuffle.partitions", "32")
+      wide.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val cand = Dedup.candidatePairs(wide, dir).localCheckpoint()
       val hotPairs = cand.filter(col("doc_a") % 10 === 0 && col("doc_b") % 10 === 0)
       assert(hotPairs.count() == 1225L, "hot-bucket pairs must survive under the cap")
       // distribution contract: after the explicit (doc_a, doc_b)
@@ -277,14 +283,7 @@ class DedupSpec extends AnyFunSuite {
       // Jaccard 1.0 for every hot pair
       val pairs = Dedup.nearDupPairs(spark, dir)
       assert(pairs.filter(col("jaccard") === 1.0).count() >= 1225L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(dir)
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q))
-      finally s.close()
-    }
+    } finally Artifacts.deleteTree(java.nio.file.Paths.get(dir))
   }
 
   test("connected components: 10k-node path converges in O(log d) rounds, labels exact") {

@@ -49,6 +49,21 @@ class ParserSpec extends AnyFunSuite {
       Seq(("a", "b", "c")))
   }
 
+  test("one limit-k split gives the old split/slice/rejoin rows on golden lines") {
+    val lines = Seq("a:b:c", "a:b:c:d:e", "a:b:c:", "::x", "a:b", "감:感:감정:감각")
+    // the formula the limit-k split replaced: split on the quoted
+    // delimiter without a limit, keep k-1 fields, rejoin the rest
+    val f = split(col("value"), java.util.regex.Pattern.quote(":"), -1)
+    val old = lines.toDF("value").filter(size(f) >= 3)
+      .select(element_at(f, 1), element_at(f, 2), array_join(slice(f, 3, 1 << 20), ":"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    val got = rows(parse(lines, Seq("x", "y", "z")))
+    assert(got == Seq(("a", "b", "c"), ("a", "b", "c:d:e"), ("a", "b", "c:"),
+      ("", "", "x"), ("감", "感", "감정:감각")))
+    assert(got == rows(old))
+  }
+
   test("tuple parse fans one line out to N rows (P2, Generator shape)") {
     val line = "5,'en','Jimmy Carter'),(5,'ja','J C'),(9,'en','Mathematics'"
     val rows = Pipeline.parseTuples(Seq(line).toDF("value"),

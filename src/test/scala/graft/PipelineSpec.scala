@@ -71,6 +71,44 @@ class PipelineSpec extends AnyFunSuite {
       "staged JSONL must be raw UTF-8, not ASCII-escaped")
   }
 
+  test("an interrupt mid-staging cancels the writers' jobs and leaves no writer thread") {
+    import scala.jdk.CollectionConverters._
+    val base = Artifacts.scratch("staging-interrupt")
+    // raw inputs large enough that staging outlasts the interrupt
+    def raw(n: Long, name: String, sep: String, fields: org.apache.spark.sql.Column*) =
+      spark.range(n).select(concat_ws(sep, fields: _*).as("value"))
+        .write.mode("overwrite").text(s"$base/$name")
+    raw(500000, "titles_raw", ":", lit("E"), col("id"), col("id") % 9973)
+    raw(50000, "hanja_raw", ":", col("id"), lit("h"), lit("x"))
+    raw(100000, "langlink_raw", ",", col("id"), lit("ja"), lit("t"))
+    def writers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-staging-") && t.isAlive)
+    val outcome = new java.util.concurrent.atomic.AtomicReference[String]("running")
+    val caller = new Thread(() =>
+      try {
+        Pipeline.dimensionFromRaw(spark, base, base, viewSuffix = "_interrupt")
+        outcome.set("finished")
+      } catch {
+        case _: InterruptedException =>
+          outcome.set(s"interrupted, status ${Thread.currentThread().isInterrupted}")
+      })
+    caller.start()
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (writers.isEmpty && caller.isAlive && System.nanoTime() < deadline) Thread.sleep(2)
+    assert(writers.nonEmpty, s"staging never started its writers (${outcome.get()})")
+    caller.interrupt()
+    caller.join(60000)
+    assert(!caller.isAlive, "the interrupted caller did not return")
+    assert(outcome.get() == "interrupted, status true")
+    assert(writers.isEmpty, s"writer threads still alive: ${writers.map(_.getName)}")
+    // job-end events reach the status store through the async listener bus
+    val tracker = spark.sparkContext.statusTracker
+    val settle = System.nanoTime() + 10L * 1000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < settle) Thread.sleep(20)
+    assert(tracker.getActiveJobIds.isEmpty,
+      s"jobs still active: ${tracker.getActiveJobIds.mkString(",")}")
+  }
+
   test("pipeline quality gates raise on violation (D1/D2 as hard checks)") {
     // the real pipeline passes; simulate a violation via the same require shape
     val ex = intercept[IllegalArgumentException] {

@@ -51,6 +51,24 @@ class PlanShapeSpec extends AnyFunSuite {
       s"sourceOverlapSketch grew a wide aggregate again (agg-expr counts: $wide)")
   }
 
+  test("fanOut spreads through one hash exchange on every column, never round-robin") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val docs = Tables.documents(spark, sf)
+    val parts = new AdaptiveSparkPlanHelper {}
+      .collect(Tables.fanOut(docs).queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+    assert(parts.size == 1, s"expected one exchange below the cutoff, got $parts")
+    assert(!parts.exists(_.isInstanceOf[RoundRobinPartitioning]), parts)
+    parts.head match {
+      case h: HashPartitioning =>
+        assert(h.expressions.flatMap(_.references.map(_.name)).toSet == docs.columns.toSet)
+      case other => fail(s"fanOut exchange is $other, not a hash partitioning")
+    }
+  }
+
   test("registry is 1:1 — every registered query has a DuckDB oracle") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet

@@ -214,15 +214,22 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("hybrid RRF plan: all three rank windows share one hash Exchange") {
-    val plan = graft.operators.Similarity.hybridRrf(spark, sf)
-      .queryExecution.executedPlan.toString
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val executed = graft.operators.Similarity.hybridRrf(spark, sf).queryExecution.executedPlan
+    val plan = executed.toString
     // the dense/lexical/fused windows all partition by query_id, so the
-    // planner must reuse ONE hashpartitioning Exchange (re-sorts between
-    // windows are fine); a second data Exchange means the fusion stage
-    // re-shuffled work it already had co-located
-    val dataExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(dataExchanges == 1,
-      s"expected exactly one hash Exchange for the three windows, got $dataExchanges:\n${plan.take(3000)}")
+    // planner must reuse ONE hash Exchange on query_id (re-sorts between
+    // windows are fine); a second one means the fusion stage re-shuffled
+    // work it already had co-located. The corpus scan's fanOut spread is
+    // a hash Exchange on the document columns, not on query_id.
+    val windowExchanges = new AdaptiveSparkPlanHelper {}.collect(executed) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning
+      if h.expressions.flatMap(_.references.map(_.name)).contains("query_id") => h }
+    assert(windowExchanges.size == 1,
+      s"expected exactly one hash Exchange for the three windows, got ${windowExchanges.size}:\n${plan.take(3000)}")
     assert("BroadcastExchange".r.findAllIn(plan).nonEmpty,
       "query side must broadcast against the corpus scan")
   }
