@@ -60,9 +60,11 @@ object Tables {
     * added shuffle is cheaper than the serial stage it breaks up; at or
     * above it (any real 100 TB scan plans thousands of row groups) this is
     * the identity. The exchange itself is [[spread]]: a hash on the whole
-    * row, not round-robin. Callers project before the call — the hash
-    * reads every column, so columns dropped after it are still scanned
-    * and shuffled. */
+    * row, not round-robin. The hash reads every column, so column pruning
+    * stops at it: callers narrow the frame to the raw columns their stage
+    * reads before the call (keeping the row key, e.g. `doc_id`, so the
+    * rows stay distinct and spread evenly) and compute the heavy
+    * expressions after it. */
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // Target width = the session's deliberate shuffle sizing, floored at

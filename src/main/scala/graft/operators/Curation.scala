@@ -118,7 +118,7 @@ object Curation {
     *
     * Scale shape: one narrow scan, one 1-row partial aggregate. */
   def corpusFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), col("text"),
         conv(substring(md5(concat_ws("|", col("doc_id"), col("text"))), 1, 8), 16, 10)
           .cast("long").as("h"))
@@ -298,7 +298,7 @@ object Curation {
     val isBench =
       conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") % 100 < pct
-    val grams = Tables.fanOut(Tables.documents(spark, dir))
+    val grams = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), isBench.as("is_bench"),
         explode(Dedup.shingleSetK(k)).as("ng"))
     val bench = grams.filter(col("is_bench")).select("ng").distinct()
@@ -342,7 +342,7 @@ object Curation {
     * step is embarrassingly parallel. */
   def curationPipeline(spark: SparkSession, dir: String, samplePct: Int = 50,
                        budget: Long = 512): DataFrame = {
-    val kept = Tables.fanOut(Tables.documents(spark, dir))
+    val kept = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "n_chars"))
       .filter(TextAnalysis.qualityKeepExpr)
       .filter(conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") % 100 < samplePct)
@@ -409,7 +409,7 @@ object Curation {
     * (n_docs DESC, ng ASC) tie-break keeps the cut deterministic. */
   private[graft] def mineCommonNgrams(spark: SparkSession, dir: String, k: Int = 8,
                                       minDocs: Int = 2, top: Int = 20): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(Dedup.shingleSetK(k)).as("ng"))
       .groupBy("ng").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
@@ -488,7 +488,7 @@ object Curation {
     * semi-join flag + single global sum — no corpus shuffle. */
   def vocabOov(spark: SparkSession, dir: String,
                vocabSize: Int = 25): DataFrame = {
-    val toks = Tables.fanOut(Tables.documents(spark, dir))
+    val toks = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(split(col("text"), " ", -1)).as("token"))
     val vocab = toks.groupBy("token").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), asc("token")).limit(vocabSize)
@@ -528,7 +528,7 @@ object Curation {
     // to take their size. Docs with zero grams (shorter than k tokens)
     // never reach the explode; a narrow doc_id-only scan restores them.
     val mined = commonNgrams(spark, dir, k, minDocs, top).select("ng")
-    val perDoc = Tables.fanOut(Tables.documents(spark, dir))
+    val perDoc = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(Dedup.shingleSetK(k)).as("ng"))
       .join(broadcast(mined.withColumn("hit", lit(1L))), Seq("ng"), "left")
       .groupBy("doc_id")
@@ -1364,7 +1364,7 @@ object Curation {
     // materialization, and nothing stays cached on return. A/B at
     // sf0.1/32 cores: staged 1.78 s (suite) vs unstaged 1.78/1.41 s
     // (Scratch warm reps) — same or better, with zero storage footprint.
-    val grams = Tables.fanOut(Tables.documents(spark, dir))
+    val grams = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), split(col("text"), " ", -1).as("words"))
       .select(col("doc_id"), posexplode(expr(
         s"""CASE WHEN size(words) >= $k THEN
@@ -2237,7 +2237,7 @@ object Curation {
     // evaluate per consumer): per-doc totals come straight off the array
     // (no shuffle); only the chunk census — ~1/16 of the token stream —
     // is exploded.
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), chunkArray(w).as("chunks"))) { perRow =>
       val perDoc = perRow.select(col("doc_id"),
         expr("CAST(aggregate(chunks, 0L, (a, c) -> a + c.n_tok) AS BIGINT)")
@@ -2356,7 +2356,7 @@ object Curation {
     // the cross-document census, staged once for its two consumers.
     // stage perRow: the kernel would otherwise evaluate TWICE (once for
     // the exploded census, once for the per-doc sizes)
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), winnowArray(k, ww).as("fps"),
           expr(s"""CAST(greatest(size(split(text, ' ', -1)) - ${k - 1}, 0)
                  AS BIGINT)""").as("n_grams"))
@@ -2395,7 +2395,7 @@ object Curation {
                   maxDf: Int = 50, minShared: Int = 2): DataFrame = {
     // stage perRow once: the kernel feeds the exploded census AND the
     // per-doc sizes (same staging rationale as [[winnowing]])
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), winnowArray(k, ww).as("fps"))
         .where(size(col("fps")) > 0)) { perRow =>
       val exploded = perRow.select(col("doc_id"), explode(col("fps")).as("fp"))
@@ -2500,7 +2500,7 @@ object Curation {
   def dsirWeights(spark: SparkSession, dir: String, buckets: Int = 1024,
                   targetLang: String = "en", k: Int = 100): DataFrame = {
     require(buckets > 0 && k > 0, s"buckets=$buckets k=$k must be positive")
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "lang"))
         .select(col("doc_id"), col("lang"),
           explode(TextAnalysis.gramList(2)).as("bg"))
         .select(col("doc_id"), col("lang"),

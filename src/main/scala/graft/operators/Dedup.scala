@@ -29,7 +29,7 @@ object Dedup {
     * distinct text, with the duplicate count. Generalizes the reference's
     * DISTINCT (`dag-knlp.py:72`) to keyed `dropDuplicates` semantics. */
   def exactDedup(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(md5(col("text")).as("fp"), col("doc_id"))
       .groupBy("fp")
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
@@ -117,7 +117,7 @@ object Dedup {
     // fanOut: the shingle explode + md5 + 128-column min() partial
     // aggregate is the most expensive map stage in the dedup family and
     // otherwise runs in the single-row-group scan's ONE task
-    val sh = Tables.fanOut(Tables.documents(spark, dir))
+    val sh = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(shingle).as("shingle"))
       .select(col("doc_id"),
         conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long").as("h"))
@@ -530,7 +530,7 @@ object Dedup {
                             threshold: Double): DataFrame = {
     // fanOut: the per-doc shingle-set kernel runs once per join side over
     // the single-row-group scan — serial without the spread
-    val sets = Tables.fanOut(Tables.documents(spark, dir))
+    val sets = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), shingleSetK(shingleK).as("sset"))
     val a = sets.select(col("doc_id").as(aCol), col("sset").as("set_a"))
     val b = sets.select(col("doc_id").as(bCol), col("sset").as("set_b"))
@@ -1265,7 +1265,7 @@ object Dedup {
     * the sign of Σ_tokens (±1 on bit i). Hamming-close fingerprints ≈
     * near-duplicate token distributions. Two partial aggregates, linear. */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    val tok = Tables.fanOut(Tables.documents(spark, dir))
+    val tok = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(shingleSet).as("token"))
       .select(col("doc_id"),
         conv(substring(md5(col("token")), 1, 8), 16, 10).cast("long").as("h"))
@@ -1353,7 +1353,7 @@ object Dedup {
     * pairs are enumerated, so cost is corpus-linear regardless of how
     * much the sides overlap. */
   def corpusOverlap(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val flags = graft.Tables.fanOut(graft.Tables.documents(spark, dir))
+    val flags = graft.Tables.fanOut(graft.Tables.documents(spark, dir).select("doc_id", "text"))
       .select((col("doc_id") % 2).as("side"), explode(shingleSetK(k)).as("shingle"))
       .groupBy("shingle")
       .agg(max(when(col("side") === 0, 1).otherwise(0)).as("a"),
@@ -1472,7 +1472,7 @@ object Dedup {
     // aggregate) shuffles and compares 8-byte longs instead of ~6-word
     // text (collision bound vocab²/2⁶⁴ — the same accepted hash regime
     // as the MinHash family and the ppjoin verify sets).
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), explode(shingleSetK(k)).as("s"))
         .select(col("doc_id"), xxhash64(col("s")).as("shingle"))) { sh =>
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))

@@ -132,7 +132,7 @@ object Pipeline {
     // independent jobs so the next job's tasks back-fill executors freed
     // by the current job's tail — here each write's tail would otherwise
     // leave the cores idle while the next hasn't started).
-    runConcurrently(spark, "graft-staging", Seq(
+    stageConcurrently(spark, Seq(
       () => Tables.spread(titles, 4).write.mode("overwrite").json(s"$base/korean_jsonl"),
       () => hanja.write.mode("overwrite").json(s"$base/korean_hanjya_jsonl"), // K1 single-dir write
       () => Tables.spread(langlink, 4).write.mode("overwrite").json(s"$base/korean_japanese_jsonl")))
@@ -173,43 +173,46 @@ object Pipeline {
     dim
   }
 
-  /** Run `jobs` on daemon threads named `<name>-<i>` and wait for all of
-    * them; the first failure is rethrown once every thread has ended.
-    * The threads inherit the caller's job group and local properties (an
-    * InheritableThreadLocal), so a cancel of the caller's group — the
-    * bench watchdog's — reaches their jobs, and each also tags its jobs
-    * with one per-call tag. If the caller is interrupted while it waits,
-    * every job under that tag is cancelled until no thread is left, and
-    * the InterruptedException is rethrown with the interrupt status
-    * restored. */
-  private def runConcurrently(spark: SparkSession, name: String, jobs: Seq[() => Unit]): Unit = {
+  /** Run the staging `writes` on daemon threads named `graft-staging-<i>`
+    * and wait for all of them; the first failure is rethrown once every
+    * thread has ended. A thread starts with a copy of the caller's local
+    * properties, so the caller's job group (the bench watchdog cancels
+    * it) and one per-call job tag, added on the caller before the
+    * threads start, reach every job they run. If the caller is
+    * interrupted while it waits, the tag's jobs are cancelled until no
+    * writer is left, and the InterruptedException is rethrown with the
+    * interrupt status restored. */
+  private def stageConcurrently(spark: SparkSession, writes: Seq[() => Unit]): Unit = {
     val sc = spark.sparkContext
-    val tag = s"$name-${java.util.UUID.randomUUID()}"
+    val tag = s"graft-staging-${java.util.UUID.randomUUID()}"
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-    val threads = jobs.zipWithIndex.map { case (job, i) =>
-      val t = new Thread(() =>
-        try { sc.addJobTag(tag); job() } catch {
-          case e: Throwable =>
-            // keep an interrupt visible on this thread, then report it
-            if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
-            failure.compareAndSet(null, e)
-        }, s"$name-$i")
-      t.setDaemon(true)
-      t.start(); t
-    }
-    try threads.foreach(_.join())
-    catch {
-      case ie: InterruptedException =>
-        // a job a thread starts after one cancel is caught by the next
-        threads.foreach { t =>
-          while (t.isAlive) {
-            sc.cancelJobsWithTag(tag)
-            try t.join(100) catch { case _: InterruptedException => () }
+    sc.addJobTag(tag)
+    try {
+      val threads = writes.zipWithIndex.map { case (w, i) =>
+        val t = new Thread(() =>
+          try w() catch {
+            case e: Throwable =>
+              // keep an interrupt visible on this thread, then report it
+              if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
+              failure.compareAndSet(null, e)
+          }, s"graft-staging-$i")
+        t.setDaemon(true)
+        t.start(); t
+      }
+      try threads.foreach(_.join())
+      catch {
+        case ie: InterruptedException =>
+          // a job a thread starts after one cancel is caught by the next
+          threads.foreach { t =>
+            while (t.isAlive) {
+              sc.cancelJobsWithTag(tag)
+              try t.join(100) catch { case _: InterruptedException => () }
+            }
           }
-        }
-        Thread.currentThread().interrupt()
-        throw ie
-    }
+          Thread.currentThread().interrupt()
+          throw ie
+      }
+    } finally sc.removeJobTag(tag)
     if (failure.get() != null) throw failure.get()
   }
 

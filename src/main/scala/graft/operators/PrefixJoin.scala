@@ -159,7 +159,7 @@ object PrefixJoin {
   def ensurePrefixIndex(spark: SparkSession, dir: String,
                         threshold: Double = 0.95): String =
     Artifacts.ensure(prefixIndexKey(dir, threshold)) { tmp =>
-      val docs = Tables.fanOut(Tables.documents(spark, dir))
+      val docs = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " ", -1))).as("ts"))
         .withColumn("sz", size(col("ts")))
       // the df table is the maintained vocabulary artifact of the store

@@ -861,7 +861,7 @@ object Similarity {
     // fanOut: the nested-loop query×candidate scoring (cosine + token
     // intersect per pair) otherwise inherits the single-row-group scan's
     // ONE partition and runs serial
-    val docs = Tables.fanOut(Tables.documents(spark, dir))
+    val docs = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), array_distinct(split(col("text"), " ", -1)).as("tset"))
     val cand = docs.join(embDouble(spark, dir), col("doc_id") === col("vec_id"))
       .select(col("doc_id"), col("tset"), col("emb"))
@@ -1325,7 +1325,7 @@ object Similarity {
     // Stage the feature table once (it feeds BOTH the candidate side and
     // the broadcast query side — the bigram-set kernel otherwise runs
     // twice), fanned out of the single-row-group scan.
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), Dedup.shingleSetK(2).as("bset"))
         .join(embDouble(spark, dir), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("bset"), col("emb"))) { feat =>

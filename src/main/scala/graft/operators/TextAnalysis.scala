@@ -32,7 +32,7 @@ object TextAnalysis {
   /** Per-document surface statistics — token count (whitespace), char
     * count, type-token ratio, mean token length. */
   def docStats(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "lang"))
       .select(col("doc_id"), col("lang"),
         length(col("text")).as("n_chars_calc"),
         size(tokens).as("n_tokens"),
@@ -42,7 +42,7 @@ object TextAnalysis {
 
   /** Corpus token frequency, top 20 (TakeOrderedAndProject). */
   def tokenFreq(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(tokens).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("token"))
@@ -51,7 +51,7 @@ object TextAnalysis {
   /** Per-language corpus profile (the groupBy-over-metadata shape every
     * training-data pipeline needs for mixture accounting). */
   def langProfile(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "lang", "n_chars"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
@@ -78,7 +78,7 @@ object TextAnalysis {
     val nTok = size(tokens)
     val stopHits = size(expr("filter(split(text, ' ', -1), t -> t IN ('the', 'a', 'of', 'and', 'is'))"))
     val ttr = size(array_distinct(tokens)).cast("double") / nTok
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "n_chars"))
       .select(col("doc_id"),
         nTok.as("n_tokens"),
         round(stopHits.cast("double") / nTok, 6).as("stopword_ratio"),
@@ -101,7 +101,7 @@ object TextAnalysis {
     * by the CMS guarantee. */
   def cmsTokenCounts(spark: SparkSession, dir: String, topK: Int = 5,
                      eps: Double = 0.0001, confidence: Double = 0.99): DataFrame = {
-    val tok = Tables.fanOut(Tables.documents(spark, dir))
+    val tok = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(tokens).as("token"))
     val cms = tok.stat.countMinSketch(col("token"), eps, confidence, 42)
     cmsVerdicts(spark, dir, cms, topK, eps)
@@ -147,7 +147,7 @@ object TextAnalysis {
     * one long→double multiply of identically-derived factors, so the
     * rounded scores agree bit-for-bit. */
   def keywordsTfidf(spark: SparkSession, dir: String, topK: Int = 3): DataFrame = {
-    val tok = Tables.fanOut(Tables.documents(spark, dir))
+    val tok = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(tokens).as("term"))
     val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tok.select("doc_id", "term").distinct()
@@ -200,7 +200,8 @@ object TextAnalysis {
     val nTok = size(tokens)
     val stopHits = size(expr("filter(split(text, ' ', -1), t -> t IN ('the', 'a', 'of', 'and', 'is'))"))
     val ttr = size(array_distinct(tokens)).cast("double") / nTok
-    val perDoc = Tables.fanOut(Tables.documents(spark, dir))
+    val perDoc = Tables.fanOut(
+        Tables.documents(spark, dir).select("doc_id", "text", "source", "n_chars"))
       .select(col("source"),
         round(stopHits.cast("double") / nTok, 6).cast("decimal(10,6)").as("swr"),
         round(ttr, 6).cast("decimal(10,6)").as("ttr"),
@@ -255,7 +256,7 @@ object TextAnalysis {
     val en = hits("the", "a", "of", "and", "is")
     val es = hits("el", "la", "de", "que")
     val fr = hits("le", "la", "et", "les")
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "lang"))
       .select(col("doc_id"), col("lang").as("lang_declared"),
         en.as("en_hits"), es.as("es_hits"), fr.as("fr_hits"))
       .withColumn("lang_pred",
@@ -271,7 +272,7 @@ object TextAnalysis {
     * chars-per-token ratio, per doc. All codegen'd string ops, narrow. */
   def tokenCounts(spark: SparkSession, dir: String): DataFrame = {
     val subword = split(col("text"), "[^a-z0-9]+", -1)
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "n_chars"))
       .select(col("doc_id"),
         size(tokens).as("n_ws_tokens"),
         size(filter(subword, t => length(t) > 0)).as("n_subword_tokens"),
@@ -296,7 +297,7 @@ object TextAnalysis {
     * are codegen'd built-in regexp_replace/length. Narrow scan + one
     * partial-aggregated groupBy over a tiny (lang, script) key space. */
   def scriptProfile(spark: SparkSession, dir: String): DataFrame = {
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text", "lang"))
       .select(col("lang"), expr("script_class(text)").as("script"),
         length(regexp_replace(col("text"), HangulRe, "")).as("hc"),
         length(regexp_replace(col("text"), HanjaRe, "")).as("jc"),
@@ -311,7 +312,7 @@ object TextAnalysis {
   /** Document fingerprinting: full-content MD5 (the exact-dedup key) plus
     * a 64-bit prefix — the compact form a 100 TB dedup would shuffle on. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"),
         md5(col("text")).as("fp"),
         substring(md5(col("text")), 1, 16).as("fp64"))
@@ -333,7 +334,7 @@ object TextAnalysis {
     * order-independent addition — so the result is identical regardless
     * of partitioning; the double division happens once at the end. */
   def docLogProb(spark: SparkSession, dir: String): DataFrame = {
-    val tok = Tables.fanOut(Tables.documents(spark, dir))
+    val tok = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(tokens).as("token"))
     val freq = tok.groupBy("token").agg(count(lit(1)).as("n"))
     val total = freq.agg(sum(col("n")).as("total"))
@@ -391,9 +392,9 @@ object TextAnalysis {
     // counts c(w1·) aggregate from the bigram TYPE counts (Σ_w2 c(w1w2)
     // — vocabulary-sized input, not another corpus pass), and N is the
     // sum of the unigram counts rather than a second token explode.
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), explode(gramList(2)).as("bg"))) { bg =>
-      Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+      Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
           .select(explode(tokens).as("token"))
           .groupBy("token").agg(count(lit(1)).as("cu"))) { cu =>
         val total = cu.agg(sum(col("cu")).as("total"))
@@ -482,7 +483,7 @@ object TextAnalysis {
     def dupRatio(g: Column): Column =
       when(size(g) === 0, lit(0.0))
         .otherwise(round((size(g) - size(array_distinct(g))).cast("double") / size(g), 6))
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), gramList(2).as("bg"), gramList(3).as("tg"))
       .select(col("doc_id"),
         size(col("bg")).as("n_bigrams"),
@@ -541,7 +542,7 @@ object TextAnalysis {
   def bm25(spark: SparkSession, dir: String): DataFrame = {
     val k1 = Bm25K1
     val b  = Bm25B
-    val docs = Tables.fanOut(Tables.documents(spark, dir))
+    val docs = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), tokens.as("toks"))
     val stats = docs.agg(
       count(lit(1)).as("n_docs"),
@@ -600,7 +601,7 @@ object TextAnalysis {
     * the Unicode standard agreeing on every document. Narrow per-row
     * pipeline, no shuffle (Verify adds the canonical dump sort). */
   def unicodeNfc(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"),
         regexp_replace(col("text"), "e", "e" + "\u0301").as("decomposed"))
       .select(col("doc_id"),
@@ -642,7 +643,7 @@ object TextAnalysis {
                     k: Int = 25, p: Int = 5): DataFrame = {
     val smallest = udaf(new graft.functions.SmallestKLongs(p),
       org.apache.spark.sql.Encoders.scalaLong)
-    Tables.fanOut(Tables.documents(spark, dir))
+    Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(array_distinct(tokens)).as("token"))
       .groupBy("token")
       .agg(count(lit(1)).as("df"),
@@ -678,7 +679,7 @@ object TextAnalysis {
   def invindexRefresh(spark: SparkSession, dir: String): DataFrame = {
     val store = Artifacts.ensure(
       s"invindex-${dir.replace('/', '_')}") { tmp =>
-      Tables.fanOut(Tables.documents(spark, dir))
+      Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), explode(array_distinct(tokens)).as("token"))
         .write.mode("overwrite").parquet(tmp.resolve("postings").toString)
     }.toString + "/postings"
@@ -742,7 +743,7 @@ object TextAnalysis {
                       minCount: Int = 5, k: Int = 20): DataFrame = {
     // fanOut: both explode passes (unigram census + bigram census) are
     // per-row-heavy map stages over the single-row-group scan
-    val docs = Tables.fanOut(Tables.documents(spark, dir))
+    val docs = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
     val cu = docs.select(explode(tokens).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cu"))
       .localCheckpoint()
@@ -860,7 +861,7 @@ object TextAnalysis {
     // materialize the vocabulary ONCE (it is tiny — distinct words); both
     // the pair-count arm and the merge-application arm read it, so the
     // corpus scan + word-count shuffle really do happen a single time
-    val wf = Tables.fanOut(Tables.documents(spark, dir))
+    val wf = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(split(col("text"), " ", -1)).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -925,7 +926,7 @@ object TextAnalysis {
     * unrolled CTE blocks in DuckDB. */
   def bpeMerges(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import spark.implicits._
-    var vocab = Tables.fanOut(Tables.documents(spark, dir))
+    var vocab = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(split(col("text"), " ", -1)).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -1117,7 +1118,7 @@ object TextAnalysis {
     // the corpus-bigram stream feeds the type counts AND the final
     // per-doc join; the TYPE table feeds all four KN statistics — stage
     // both once
-    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir))
+    Tables.withStaged(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
         .select(col("doc_id"), explode(gramList(2)).as("bg"))) { bg =>
       Tables.withStaged(bg.groupBy("bg").agg(count(lit(1)).as("cbg"))
           .withColumn("w1", expr("split(bg, ' ')[0]"))
@@ -1201,7 +1202,7 @@ object TextAnalysis {
     * threshold applies to the RAW ratio in both engines. */
   def tfidfCosinePairs(spark: SparkSession, dir: String, maxDf: Int = 50,
                        threshold: Double = 0.5): DataFrame = {
-    val tok = Tables.fanOut(Tables.documents(spark, dir))
+    val tok = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(col("doc_id"), explode(tokens).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
     val dfc = tok.groupBy("token").agg(count(lit(1)).as("df"))
@@ -1279,7 +1280,7 @@ object TextAnalysis {
     * vocab-sized. */
   def zipfFit(spark: SparkSession, dir: String, topN: Int = 100,
               minFreq: Long = 2L): DataFrame = {
-    val freq = Tables.fanOut(Tables.documents(spark, dir))
+    val freq = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(tokens).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minFreq)

@@ -36,7 +36,7 @@ object UnigramLM {
   private def buildModel(spark: SparkSession, dir: String, vocabCap: Int,
                          minFreq: Long): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val words = Tables.fanOut(Tables.documents(spark, dir))
+    val words = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
       .select(explode(split(col("text"), " ", -1)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wfreq"))
     // candidate pieces: every substring of length 1..MaxPieceLen of every

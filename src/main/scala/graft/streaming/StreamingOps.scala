@@ -927,7 +927,7 @@ object StreamingOps {
     // fanOut (r16): the per-batch tokenization of the corpus side ran in
     // the single-row-group scan's ONE task inside the micro-batch; the
     // spread (identity at production corpus sizes) parallelizes it.
-    val corpusSets = graft.Tables.fanOut(graft.Tables.documents(ss, dir))
+    val corpusSets = graft.Tables.fanOut(graft.Tables.documents(ss, dir).select("doc_id", "text"))
       .filter(col("doc_id") < splitFrom)
       .select(col("doc_id").as("corpus_doc"),
         Dedup.shingleSetK(1).as("set_b"))

@@ -222,14 +222,19 @@ class SimilaritySpec extends AnyFunSuite {
     // the dense/lexical/fused windows all partition by query_id, so the
     // planner must reuse ONE hash Exchange on query_id (re-sorts between
     // windows are fine); a second one means the fusion stage re-shuffled
-    // work it already had co-located. The corpus scan's fanOut spread is
-    // a hash Exchange on the document columns, not on query_id.
-    val windowExchanges = new AdaptiveSparkPlanHelper {}.collect(executed) {
-      case e: ShuffleExchangeExec => e.outputPartitioning
-    }.collect { case h: HashPartitioning
-      if h.expressions.flatMap(_.references.map(_.name)).contains("query_id") => h }
-    assert(windowExchanges.size == 1,
-      s"expected exactly one hash Exchange for the three windows, got ${windowExchanges.size}:\n${plan.take(3000)}")
+    // work it already had co-located. The only other hash Exchange allowed
+    // is fanOut's spread of the corpus scan, which hashes every column of
+    // its input; a shuffle join of documents and embeddings (keyed on
+    // doc_id / vec_id alone) is not one and fails the check.
+    val hashExchanges = new AdaptiveSparkPlanHelper {}.collect(executed) {
+      case e: ShuffleExchangeExec => (e.outputPartitioning, e.child.output.map(_.name))
+    }.collect { case (h: HashPartitioning, input) =>
+      (h.expressions.flatMap(_.references.map(_.name)), input) }
+    val (windows, others) = hashExchanges.partition(_._1 == Seq("query_id"))
+    assert(windows.size == 1,
+      s"expected exactly one hash Exchange for the three windows, got ${windows.size}:\n${plan.take(3000)}")
+    assert(others.forall { case (keys, input) => keys == input },
+      s"hash Exchanges other than the windows' and fanOut's spread: $others\n${plan.take(3000)}")
     assert("BroadcastExchange".r.findAllIn(plan).nonEmpty,
       "query side must broadcast against the corpus scan")
   }
