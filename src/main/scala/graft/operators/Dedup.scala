@@ -1802,8 +1802,9 @@ object Dedup {
     // partial-dedup-locality story as approxDistinct (a doc's duplicate
     // (source, shingle) rows dedup best inside one scan task).
     // Re-measured with the hash spread (sf0.1, 4 cores, 6 warm runs per
-    // arm): 1.47 → 1.29 s median, a gain at 4 cores; left out until it is
-    // measured at the 32-core width where round-robin lost.
+    // arm): 1.47 → 1.29 s median, a gain at 4 cores; spread over only
+    // (doc_id, text, source), 1.51 → 1.35 s (9 warm runs per arm). Left
+    // out until it is measured at the 32-core width where round-robin lost.
     Tables.withStaged(Tables.documents(spark, dir)
         .select(col("source"), explode(shingleSetK(1)).as("shingle"))
         .distinct()) { sh =>
