@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.{Artifacts, Tables}
 
 /** X1/X2 — deduplication over `documents`: exact (content-hash groupBy),
@@ -895,36 +896,110 @@ object Dedup {
     sb.toString
   }
 
-  /** Connected components over an undirected pair list via iterative
-    * min-label propagation with POINTER JUMPING: every node starts
-    * labeled with its own id; each round every node takes the minimum
-    * label among itself and its neighbors, then replaces that label by
-    * the label's OWN label (path halving — a label is always a node id,
-    * so it has a row). Plain propagation moves a component's minimum one
-    * hop per round (O(diameter) rounds — measured 11 at sf0.1); the jump
-    * step halves remaining label-chains every round, giving
-    * O(log diameter) convergence, the same reason large-star/small-star
-    * is logarithmic. `maxIters` is a loud upper bound, not a silent
-    * truncation (`require` fails if propagation has not reached
-    * fixpoint).
+  /** Connected components over an undirected pair list. Input: two BIGINT
+    * id columns named `doc_a`/`doc_b`. Output: one row per node —
+    * (cluster_id = min doc_id of the component, doc_id).
     *
-    * Scale shape: the loop runs over the PAIR LIST (LSH output — orders of
-    * magnitude smaller than the corpus), two small equi-joins + one
-    * partial-aggregated groupBy per round, `localCheckpoint` per round so
-    * the lineage stays one-round deep (the Lloyd-loop pattern,
-    * `Similarity.scala` k-means).
+    * One size check (a count of the pair list) picks the path:
     *
-    * Input: two id columns named `doc_a`/`doc_b`. Output: one row per node
-    * — (cluster_id = min doc_id of the component, doc_id). */
+    *  - LOCAL FINISH, when the edge count is at most [[localEdgeBound]]:
+    *    the pairs are collected once and an array-based union-find labels
+    *    every node with its component's minimum id; the rows come back as
+    *    a local frame. Two Spark jobs in all (the count and the collect),
+    *    where the distributed loop spends about ten per round. A local
+    *    finish counts as one round.
+    *  - DISTRIBUTED, above the bound: iterative min-label propagation with
+    *    POINTER JUMPING. Every node starts labeled with its own id; each
+    *    round every node takes the minimum label among itself and its
+    *    neighbors, then replaces that label by the label's OWN label (path
+    *    halving — a label is always a node id, so it has a row). Plain
+    *    propagation moves a component's minimum one hop per round
+    *    (O(diameter) rounds — measured 11 at sf0.1); the jump step halves
+    *    remaining label-chains every round, giving O(log diameter)
+    *    convergence, the same reason large-star/small-star contraction
+    *    (Kiveris et al., SoCC'14) is logarithmic. The loop runs over the
+    *    PAIR LIST (LSH output — orders of magnitude smaller than the
+    *    corpus), two small equi-joins + one partial-aggregated groupBy per
+    *    round, `localCheckpoint` per round so the lineage stays one round
+    *    deep. `maxIters` is a loud upper bound, not a silent truncation
+    *    (`require` fails if propagation has not reached fixpoint).
+    *
+    * The pointer-jumping edge list never shrinks, so a graph over the
+    * bound stays distributed to the end; there is no mid-loop finish. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
     connectedComponentsWithRounds(pairs, maxIters)._1
 
-  /** [[connectedComponents]] plus the number of propagation rounds it
-    * took — the observable DedupSpec's adversarial-graph tests pin the
-    * O(log diameter) claim on (a 10k-node path or star-of-stars must
-    * converge in ~log₂ rounds, not O(diameter)). */
+  /** Driver heap the local finish costs per pair-list edge. Measured as
+    * the driver thread's allocated bytes for the count, collect,
+    * union-find and output rows of a 1M-edge random graph (1.24M nodes,
+    * 4 GB heap, 3 runs): 858–873 bytes per edge, an upper bound on what
+    * is live at once (53–137 bytes per edge stay retained by the
+    * returned frame). Rounded up. */
+  private[graft] val LocalBytesPerEdge = 1024L
+
+  /** The largest pair list the local finish takes:
+    * min(Runtime.maxMemory / 4, spark.driver.maxResultSize) / [[LocalBytesPerEdge]].
+    * A quarter of the heap because local-mode executors share it; a
+    * maxResultSize of 0 (unlimited) leaves the heap term alone. A
+    * collected edge serializes to far fewer bytes than it costs on the
+    * heap, so the result-size term is conservative. */
+  private[graft] def localEdgeBound(spark: SparkSession): Long = {
+    val heap = Runtime.getRuntime.maxMemory / 4
+    val maxResult = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    (if (maxResult > 0) math.min(heap, maxResult) else heap) / LocalBytesPerEdge
+  }
+
+  /** [[connectedComponents]] plus the number of rounds it took — the
+    * observable DedupSpec's adversarial-graph tests pin the O(log
+    * diameter) claim on (a 10k-node path or star-of-stars must converge
+    * in ~log₂ rounds, not O(diameter)). `forceDistributed` skips the
+    * local finish so specs can exercise the loop on small graphs. */
   private[graft] def connectedComponentsWithRounds(pairs: DataFrame,
-                                                   maxIters: Int = 50): (DataFrame, Int) = {
+                                                   maxIters: Int = 50,
+                                                   forceDistributed: Boolean = false): (DataFrame, Int) = {
+    // an RDD count is one job; Dataset.count under AQE runs its partial
+    // aggregate's shuffle as a job of its own
+    val nEdges = pairs.rdd.count()
+    val local = !forceDistributed && nEdges <= localEdgeBound(pairs.sparkSession)
+    val (out, rounds) = if (local) (localComponents(pairs), 1) else pointerJumping(pairs, maxIters)
+    System.err.println(s"[graft] connectedComponents converged in $rounds rounds " +
+      s"(${if (local) "local" else "distributed"}, $nEdges edges)")
+    (out, rounds)
+  }
+
+  /** The local finish: one collect, then union-find over array indices of
+    * the sorted distinct ids. A root is always linked under the smaller
+    * root and path halving only moves a node's parent up its chain, so a
+    * parent index never exceeds its child's and every root is its
+    * component's minimum id. */
+  private def localComponents(pairs: DataFrame): DataFrame = {
+    val edges = pairs.select("doc_a", "doc_b").collect()
+    val ids = edges.flatMap(r => Array(r.getLong(0), r.getLong(1))).sorted
+    var n = 0
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    val up = Array.range(0, n)
+    def find(x: Int): Int = {
+      var v = x
+      while (up(v) != v) { up(v) = up(up(v)); v = up(v) }
+      v
+    }
+    for (r <- edges) {
+      val (a, b) = (find(index(r.getLong(0))), find(index(r.getLong(1))))
+      if (a < b) up(b) = a else if (b < a) up(a) = b
+    }
+    val rows = Array.tabulate(n)(i => Row(ids(find(i)), ids(i)))
+    // the distributed path's schema: min() makes cluster_id nullable,
+    // doc_id keeps the union of the inputs' nullability
+    val f = pairs.schema
+    val schema = StructType(Seq(StructField("cluster_id", LongType),
+      StructField("doc_id", LongType, f("doc_a").nullable || f("doc_b").nullable)))
+    pairs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The distributed path of [[connectedComponents]]: pointer-jumping
+    * min-label propagation, returning the labels and the round count. */
+  private def pointerJumping(pairs: DataFrame, maxIters: Int): (DataFrame, Int) = {
     val parent = pairs.sparkSession
     // The loop runs in its OWN isolated session (shared SparkContext,
     // session-scoped SQL conf): constraint propagation is disabled there
@@ -980,130 +1055,9 @@ object Dedup {
     }
     require(changed == 0,
       s"connected components did not converge within $maxIters label-propagation rounds")
-    System.err.println(s"[graft] connectedComponents converged in $iter rounds")
     val out = labels.select(col("label").as("cluster_id"), col("doc_id"))
     // hand the materialized result back to the caller's session
     (parent.createDataFrame(out.rdd, out.schema), iter)
-  }
-
-  /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR edge
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — the published alternative to
-    * [[connectedComponents]]'s min-label propagation, and the variant
-    * whose per-round work CONTRACTS the edge set instead of streaming
-    * labels over a static edge list:
-    *
-    *  - large-star: every node u links each LARGER neighbor to
-    *    m(u) = min(N(u) ∪ {u}) — long chains fold toward minima;
-    *  - small-star: u links each neighbor ≤ u (and itself) to m(u) —
-    *    local stars flatten onto their minimum.
-    *
-    * Both steps are a groupBy-min + an edge join — NO per-node neighbor
-    * lists are ever collected, so a 10⁶-degree hub costs a shuffle of
-    * its edges, not an array build. Convergence (O(log n) alternations)
-    * is detected by a commutative edge-set digest riding the round's
-    * materialization as an `observe` metric — one driver action per
-    * round, mirroring the propagation loop's fixpoint probe.
-    *
-    * Returns (cluster_id = component min, doc_id), identical to
-    * [[connectedComponents]] — DedupSpec asserts the two algorithms
-    * agree on adversarial graphs, and `q_cc_star` pins the equality
-    * against the same recursive-CTE oracle as `q_dedup_clusters`. */
-  private[graft] def connectedComponentsStarWithRounds(pairs: DataFrame,
-                                                       maxIters: Int = 50): (DataFrame, Int) = {
-    val parent = pairs.sparkSession
-    val loop = parent.newSession()
-    loop.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    val src = pairs.select(col("doc_a").as("u"), col("doc_b").as("v")).localCheckpoint()
-    // Size the loop's shuffle partitions from the EDGE COUNT rather than
-    // the session default (r16, guide §2.2): each alternation runs ~4
-    // shuffles over the edge frame plus an eager materialization, so a
-    // fixed core-count layout pays rounds × stages × partitions of
-    // near-empty task overhead on a small dedup graph, while a production
-    // graph derives more partitions than any pin. ~2M (long,long) edges
-    // (≈32 MB) per partition; floor 8 (the same deliberate small-state
-    // sizing as the streaming harnesses). The count is over the already-
-    // materialized checkpoint — metadata-scale, not a corpus pass.
-    // Floor A/B-measured both rounds (ADVICE r16 asked for the re-measure):
-    // r17 same-session reps at sf0.1/32 cores — floor 8: 3.23/3.72 s,
-    // floor = defaultParallelism(32): 3.74/3.96 s. The ~4 shuffles per
-    // alternation × rounds pay per-partition task overhead on a tiny
-    // graph; 8 stays the better local floor and a production graph
-    // derives its count from the edge term anyway.
-    loop.conf.set("spark.sql.shuffle.partitions",
-      math.max(8L, src.count() / 2000000L).toString)
-    val nodes = loop.createDataFrame(
-      src.select(col("u").as("doc_id")).union(src.select(col("v").as("doc_id")))
-        .distinct().rdd,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-      .localCheckpoint()
-    var edges = loop.createDataFrame(src.rdd, src.schema).localCheckpoint()
-    def bothDirs(e: DataFrame): DataFrame =
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-    def minTarget(e2: DataFrame): DataFrame =
-      e2.groupBy("u").agg(least(min(col("v")), first(col("u"))).as("m"))
-    var digest: (Long, Long, Long) = (-1L, -1L, -1L)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      // large-star: (v, m(u)) for v ∈ N(u), v > u
-      val e2a = bothDirs(edges)
-      val ma = minTarget(e2a)
-      val large = e2a.join(ma, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // small-star over the large-star output: (v, m(u)) for v ≤ u, + (u, m(u))
-      val e2b = bothDirs(large)
-      val mb = minTarget(e2b)
-      val small = e2b.join(mb, "u").filter(col("v") <= col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mb.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-      // commutative digest in two 31-bit-masked halves: ANSI-safe Long
-      // sums up to ~4·10⁹ edges per partition-set, far past any round's
-      // edge count, while two independent halves keep the collision
-      // probability of a false fixpoint negligible
-      val obs = new org.apache.spark.sql.Observation()
-      val next = small
-        .observe(obs,
-          coalesce(sum(expr("xxhash64(u, v) & 2147483647")), lit(0L)).as("dg_lo"),
-          coalesce(sum(expr("(xxhash64(u, v) >> 33) & 2147483647")), lit(0L)).as("dg_hi"),
-          count(lit(1)).as("ne"))
-        .localCheckpoint()
-      val d = (obs.get("dg_lo").asInstanceOf[Long],
-        obs.get("dg_hi").asInstanceOf[Long], obs.get("ne").asInstanceOf[Long])
-      converged = d == digest
-      digest = d
-      edges = next
-      iter += 1
-    }
-    require(converged,
-      s"star-contraction did not converge within $maxIters alternations")
-    System.err.println(s"[graft] connectedComponentsStar converged in $iter alternations")
-    // at the fixpoint every edge points a node at its component minimum;
-    // nodes with no outgoing edge are their component's minimum (or singletons)
-    val out = nodes
-      .join(edges.select(col("u").as("doc_id"), col("v").as("root")), Seq("doc_id"), "left")
-      .groupBy("doc_id").agg(coalesce(min(col("root")), first(col("doc_id"))).as("cluster_id"))
-      .select(col("cluster_id"), col("doc_id"))
-    (parent.createDataFrame(out.rdd, out.schema), iter)
-  }
-
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 50): DataFrame =
-    connectedComponentsStarWithRounds(pairs, maxIters)._1
-
-  /** [[nearDupClusters]] computed by star contraction instead of label
-    * propagation — same pair artifact, same output contract, same
-    * oracle. Green next to `q_dedup_clusters` proves two independent
-    * published CC algorithms agree on the dedup graph. */
-  def nearDupClustersStar(spark: SparkSession, dir: String,
-                          threshold: Double = 0.95): DataFrame = {
-    val pairs = nearDupPairs(spark, dir, threshold)
-      .select("doc_a", "doc_b").localCheckpoint()
-    connectedComponentsStar(pairs)
-      .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
   }
 
   /** X2e — the END of the dedup story: near-dup PAIRS → transitive
@@ -1131,18 +1085,17 @@ object Dedup {
     val key = s"clusters-${dir.replace('/', '_')}-t$threshold-mb$minBands" +
       s"-cap$maxBucket-e$estJaccard-k$shingleK-b$bands-r$rowsPerBand"
     val path = Artifacts.ensure(key) { tmp =>
-      // Materialize the pair list ONCE — the propagation loop must
-      // iterate over the compact LSH output, never re-run the
-      // signature pipeline.
       val pairs = nearDupPairs(spark, dir, threshold, minBands, maxBucket,
         estJaccard, shingleK, bands, rowsPerBand)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b")
       connectedComponents(pairs)
         .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
         .write.mode("overwrite").parquet(tmp.resolve("clusters").toString)
     }
-    spark.read.parquet(path.resolve("clusters").toString)
-      .select("cluster_id", "doc_id", "is_keeper")
+    // the artifact's schema is known, so the read skips Spark's
+    // footer-inference job
+    spark.read.schema("cluster_id BIGINT, doc_id BIGINT, is_keeper BOOLEAN")
+      .parquet(path.resolve("clusters").toString)
   }
 
   /** The pruned corpus — the dedup story's FINAL artifact: every document

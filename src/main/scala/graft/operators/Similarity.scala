@@ -137,21 +137,18 @@ object Similarity {
     }
   }
 
-  /** Corpus size and embedding dimension, read once up front (metadata-
-    * scale actions: parquet-footer count + one top-1 row). The dimension is
+  /** Corpus size and embedding dimension, read once up front in one
+    * aggregate (a count plus a `min_by` over vec_id). The dimension is
     * DERIVED, and every row is checked against it inside the bucket
     * expression — a mismatched vector fails loudly via raise_error instead
     * of silently landing in bucket 0 through null-padded zip_with.
     * The probe row is the LOWEST vec_id, not scan-order head() (ADVICE r11):
     * on a mixed-dim corpus — exactly what the quality gate exists to catch —
     * a scan-order probe would make the reference dim partition-order
-    * dependent and diverge from the oracle's ORDER BY vec_id LIMIT 1.
-    * orderBy+head compiles to TakeOrderedAndProject (top-1 per partition,
-    * driver merges one row per partition), still metadata-scale. */
+    * dependent and diverge from the oracle's ORDER BY vec_id LIMIT 1. */
   private def corpusShape(e: DataFrame): (Long, Int) = {
-    val n = e.count()
-    val dim = e.orderBy(col("vec_id")).select(size(col("emb"))).head().getInt(0)
-    (n, dim)
+    val r = e.agg(count(lit(1)), min_by(size(col("emb")), col("vec_id"))).head()
+    (r.getLong(0), r.getInt(1))
   }
 
   private def bucketCol(bits: Int, dim: Int): Column = {
@@ -250,13 +247,15 @@ object Similarity {
     * textually different" documents — translations, paraphrases,
     * templated rewrites — never collide in MinHash space; their
     * embeddings do. The pair graph comes from the LSH-bucketed candidate
-    * join (never all-pairs) and the clustering is the same O(log
-    * diameter) pointer-jumping loop the text dedup uses, so the whole
-    * flow scales exactly like [[Dedup.nearDupClusters]]. */
+    * join (never all-pairs) and the clustering is the same
+    * [[Dedup.connectedComponents]] kernel the text dedup uses (a driver
+    * union-find when the pair list fits the driver, the distributed loop
+    * above that), so the whole flow scales exactly like
+    * [[Dedup.nearDupClusters]]. */
   def semanticDedupClusters(spark: SparkSession, dir: String,
                             threshold: Double = 0.3): DataFrame = {
     // Staged like its lexical twin [[Dedup.nearDupClusters]]: the CC
-    // propagation loop runs once per (corpus, threshold) and every later
+    // kernel runs once per (corpus, threshold) and every later
     // caller reads the persisted keeper/loser verdict — the production
     // flow where semantic dedup is a nightly decision, not a per-query
     // recomputation.
@@ -264,14 +263,13 @@ object Similarity {
       s"eclusters-${dir.replace('/', '_')}-t$threshold") { tmp =>
       val pairs = embedNearDup(spark, dir, threshold)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-        .localCheckpoint()
       Dedup.connectedComponents(pairs)
         .select(col("cluster_id"), col("doc_id").as("vec_id"),
           (col("doc_id") === col("cluster_id")).as("is_keeper"))
         .write.mode("overwrite").parquet(tmp.resolve("eclusters").toString)
     }
-    spark.read.parquet(path.resolve("eclusters").toString)
-      .select("cluster_id", "vec_id", "is_keeper")
+    spark.read.schema("cluster_id BIGINT, vec_id BIGINT, is_keeper BOOLEAN")
+      .parquet(path.resolve("eclusters").toString)
   }
 
   /** DuckDB oracle for [[semanticDedupClusters]]: the shared pair CTEs +

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 
 /** X1/X2 dedup semantics: exact keeper selection, LSH candidate soundness
   * (banded join finds exactly the high-Jaccard pairs it claims), simhash
@@ -296,7 +297,7 @@ class DedupSpec extends AnyFunSuite {
     val n = 10000L
     val pairs = spark.range(n - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val (cc, rounds) = Dedup.connectedComponentsWithRounds(pairs)
+    val (cc, rounds) = Dedup.connectedComponentsWithRounds(pairs, forceDistributed = true)
     assert(rounds <= 28, s"diameter-${n - 1} path took $rounds rounds (O(log d) expected)")
     assert(cc.count() == n)
     assert(cc.filter(col("cluster_id") =!= 0L).isEmpty)
@@ -313,35 +314,48 @@ class DedupSpec extends AnyFunSuite {
     val rootEdges = hubs.map(h => (root, h))
     val leafEdges = (0L until 9900L).map(i => (9900L + i % 99, i))
     val pairs = (rootEdges ++ leafEdges).toDF("doc_a", "doc_b")
-    val (cc, rounds) = Dedup.connectedComponentsWithRounds(pairs)
+    val (cc, rounds) = Dedup.connectedComponentsWithRounds(pairs, forceDistributed = true)
     assert(rounds <= 8, s"diameter-4 star-of-stars took $rounds rounds")
     assert(cc.count() == 10000L)
     assert(cc.filter(col("cluster_id") =!= 0L).isEmpty)
   }
 
-  test("star contraction agrees with label propagation on the adversarial graphs") {
+  test("connected components: local finish equals the distributed loop on the text and semantic pair graphs") {
+    val graphs = Seq(
+      "text" -> Dedup.nearDupPairs(spark, sf, 0.95).select("doc_a", "doc_b"),
+      "semantic" -> Similarity.embedNearDup(spark, sf, 0.3)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+    for ((name, pairs) <- graphs) {
+      val (local, rounds) = Dedup.connectedComponentsWithRounds(pairs)
+      val (dist, _) = Dedup.connectedComponentsWithRounds(pairs, forceDistributed = true)
+      assert(rounds == 1, s"$name: the local finish reported $rounds rounds")
+      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"$name: the small graph did not take the local finish")
+      assert(local.schema == dist.schema, s"$name: ${local.schema} vs ${dist.schema}")
+      assert(dist.count() > 0, s"$name: empty pair graph")
+      assert(local.exceptAll(dist).isEmpty && dist.exceptAll(local).isEmpty, s"$name: rows differ")
+    }
+  }
+
+  test("connected components: a small checkpointed pair frame costs at most 2 Spark jobs") {
     import spark.implicits._
-    // 10k-node path, min at one end (diameter 9999)
-    val n = 10000L
-    val path = spark.range(n - 1)
-      .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val (ccP, altP) = Dedup.connectedComponentsStarWithRounds(path)
-    assert(altP <= 28, s"path took $altP alternations (O(log n) expected)")
-    assert(ccP.count() == n && ccP.filter(col("cluster_id") =!= 0L).isEmpty)
-    // star-of-stars, min at a leaf (diameter 4)
-    val root = 9999L
-    val pairs2 = ((9900L until 9999L).map(h => (root, h)) ++
-      (0L until 9900L).map(i => (9900L + i % 99, i))).toDF("doc_a", "doc_b")
-    val (ccS, altS) = Dedup.connectedComponentsStarWithRounds(pairs2)
-    assert(altS <= 8, s"star-of-stars took $altS alternations")
-    assert(ccS.count() == 10000L && ccS.filter(col("cluster_id") =!= 0L).isEmpty)
-    // and on the real dedup graph: identical clustering to min-label CC
-    val real = Dedup.nearDupPairs(spark, sf, 0.95).select("doc_a", "doc_b")
-    val a = Dedup.connectedComponents(real).collect()
-      .map(r => (r.getLong(1), r.getLong(0))).toMap
-    val b = Dedup.connectedComponentsStar(real).collect()
-      .map(r => (r.getLong(1), r.getLong(0))).toMap
-    assert(a == b, "the two published CC algorithms disagree on the dedup graph")
+    val pairs = Seq((2L, 3L), (1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b").localCheckpoint()
+    val sc = spark.sparkContext
+    val group = s"cc-jobs-${System.nanoTime()}"
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    inGroup(group)(Dedup.connectedComponents(pairs))
+    // the status store fills from one ordered listener queue: once a
+    // later sentinel job shows up there, every job of the group has too
+    inGroup(s"$group-sentinel")(spark.range(1).rdd.count())
+    val tracker = sc.statusTracker
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while (tracker.getJobIdsForGroup(s"$group-sentinel").isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    val jobs = tracker.getJobIdsForGroup(group)
+    assert(jobs.nonEmpty && jobs.length <= 2, s"${jobs.length} Spark jobs for a 3-edge graph")
   }
 
   test("near-dup clusters: consistent with the pair list, keeper is the min member") {

@@ -102,9 +102,12 @@ class RoundTripPropertySpec extends AnyFunSuite {
       byRoot.toSeq.flatMap { case (_, ns) => ns.map(_ -> ns.min) }.toMap
     }
     samples(graphGen, 12).foreach { edges =>
-      val got = graft.operators.Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => (r.getLong(1), r.getLong(0))).toMap
-      assert(got == unionFind(edges), s"edges: $edges")
+      for (distributed <- Seq(false, true)) {
+        val got = graft.operators.Dedup.connectedComponentsWithRounds(
+            edges.toDF("doc_a", "doc_b"), forceDistributed = distributed)._1
+          .collect().map(r => (r.getLong(1), r.getLong(0))).toMap
+        assert(got == unionFind(edges), s"distributed=$distributed, edges: $edges")
+      }
     }
   }
 
