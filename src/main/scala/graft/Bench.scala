@@ -459,17 +459,6 @@ object Bench {
         else s"[bench] artifact build $name failed or timed out (continuing)")
       name -> sec
     } ++ {
-      // Per-phase breakdown of the two signature-store builds (flat
-      // "store:phase" keys so any store_build parser keeps working) —
-      // a build-time outlier now names its phase in the artifact itself
-      // (VERDICT r8 #3: the 52 s vs 4.9 s bigram_32x4 swing).
-      Seq("unigram_8x16" -> operators.Dedup.signatureStoreKey(sfDir, 1, 8, 16),
-          "bigram_32x4" -> operators.Dedup.signatureStoreKey(sfDir, 2, 32, 4))
-        .flatMap { case (store, key) =>
-          Option(operators.Dedup.storePhaseTimings.get(key)).toSeq.flatten
-            .map { case (phase, sec) => s"$store:$phase" -> sec }
-        }
-    } ++ {
       // Per-leg breakdown of the MV chain (VERDICT r14 #7: sql_mv_chain
       // doubled when the where-filtered MV landed in it — the artifact
       // itself now says which leg grew instead of needing a bisect).

@@ -51,7 +51,7 @@ object Sessions {
       .withExtensions { ext =>
         Seq[SessionFunction](CosineSimilarity, ScriptClass, ArrayAgreeCount,
             ArrayIntersectCount, SortedIntersectCount, LevenshteinWithin,
-            UnicodeNormalize, CharEntropy)
+            UnicodeNormalize, CharEntropy, MinHashBands)
           .foreach(f => ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
         // graft-catalog SQL views: DDL intercepted at parse time (Spark
         // 4.1's ResolveSessionCatalog refuses v2 view DDL before custom

@@ -45,8 +45,8 @@ object Dedup {
   /** k-gram shingle set: k consecutive whitespace tokens joined by one
     * space, deduplicated; k=1 degenerates to [[shingleSet]]. Guarded so a
     * doc with fewer than k tokens yields an EMPTY set (it then simply has
-    * no signature — explode drops it — matching the oracle's empty
-    * unnest), never a descending `sequence`. */
+    * no signature — [[withNarrowSignatures]] drops it — matching the
+    * oracle's empty unnest), never a descending `sequence`. */
   private[graft] def shingleSetK(k: Int): Column = {
     require(k >= 1, s"shingle size must be >= 1, got $k")
     if (k == 1) shingleSet
@@ -60,6 +60,26 @@ object Dedup {
 
   private[graft] val NumBands = 8
   private[graft] val RowsPerBand = 16 // 128 minhashes total (MinHash-128)
+
+  /** Modulus of the affine MinHash family: 2^31 − 1 (prime). Keeping
+    * every operand ≤ 31 bits bounds a·h + b < 2^62 — exact in signed
+    * 64-bit arithmetic in BOTH engines, no overflow, no floating point. */
+  private[graft] val HashMod = 2147483647L
+
+  /** Deterministic coefficients of the affine rehash family
+    * hash_i(x) = (a_i·h(x) + b_i) mod [[HashMod]]: a_i is a 30-bit odd
+    * multiplier, b_i < HashMod, both derived from md5 of a fixed seed
+    * string — reproducible across JVMs and engines, no RNG. Read by the
+    * [[graft.functions.MinHashBands]] kernel and inlined as literals in
+    * the generated DuckDB oracle. */
+  private[graft] def affineCoeffs(n: Int): IndexedSeq[(Long, Long)] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def h32(s: String): Long = {
+      val d = md.digest(s.getBytes("UTF-8"))
+      ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+    }
+    (0 until n).map(i => ((h32(s"a:$i") % (1L << 30)) | 1L, h32(s"b:$i") % HashMod))
+  }
 
   /** X2a — per-document banded MinHash signature: 128 independent
     * minhashes (minhash_i = min over shingles of the affine rehash
@@ -75,192 +95,64 @@ object Dedup {
     * became candidates); r=16 cuts that to ~2M while keeping ~99% recall
     * at the 0.95 output threshold.
     *
-    * One narrow pass + one partial-aggregated explode; output is
-    * (doc_id, band, sig) — the compact table a 100 TB run would persist. */
-  /** Modulus of the affine MinHash family: 2^31 − 1 (prime). Keeping
-    * every operand ≤ 31 bits bounds a·h + b < 2^62 — exact in signed
-    * 64-bit arithmetic in BOTH engines, no overflow, no floating point. */
-  private val HashMod = 2147483647L
-
-  /** Deterministic coefficients of the affine rehash family
-    * hash_i(x) = (a_i·h(x) + b_i) mod [[HashMod]]: a_i is a 30-bit odd
-    * multiplier, b_i < HashMod, both derived from md5 of a fixed seed
-    * string — reproducible across JVMs and engines, no RNG. Inlined as
-    * literals in the Spark plan AND the generated DuckDB oracle. */
-  private[graft] def affineCoeffs(n: Int): IndexedSeq[(Long, Long)] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h32(s: String): Long = {
-      val d = md.digest(s.getBytes("UTF-8"))
-      ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    }
-    (0 until n).map(i => ((h32(s"a:$i") % (1L << 30)) | 1L, h32(s"b:$i") % HashMod))
-  }
-
-  /** The expensive kernel: one wide aggregate (128 min-columns) over the
-    * exploded shingles — (doc_id, m0..m127). The alternative long-and-thin
-    * shape (explode shingle × hash-index, groupBy twice) was measured 5×
-    * slower end-to-end: both join branches degrade to per-row aggregates
-    * over n_shingles × 128 rows — a cost that grows with the corpus.
-    *
-    * Two layers of optimization vs the naive 128-md5-per-shingle form:
-    *  - ONE md5 per shingle: h(x) = the 32-bit hex-prefix of md5(x); the
-    *    128 independent hashes are affine rehashes (a_i·h + b_i) mod p of
-    *    that single digest — the standard universal-hashing MinHash
-    *    construction. At 100 TB this removes 127/128 of the corpus-sized
-    *    hashing work (md5 dominates the multiply-add by orders of
-    *    magnitude);
-    *  - LONG minhashes (VERDICT r4 #2): `min(LONG)` runs in HashAggregate
-    *    with primitive comparisons, where min(STRING) forced a
-    *    SortAggregate over 128 UTF8String columns AND a ~4× larger
-    *    generated method (the r4 bench's Janino compile storm). */
-  private def wideMinhash(spark: SparkSession, dir: String,
-                          shingle: Column, nHashes: Int): DataFrame = {
-    // fanOut: the shingle explode + md5 + 128-column min() partial
-    // aggregate is the most expensive map stage in the dedup family and
-    // otherwise runs in the single-row-group scan's ONE task
-    val sh = Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text"))
-      .select(col("doc_id"), explode(shingle).as("shingle"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long").as("h"))
-    val mins = affineCoeffs(nHashes).zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("h") + lit(b)) % HashMod).as(s"m$i")
-    }
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
-  /** (doc_id, band, sig) from the wide minhash columns: a band's signature
-    * is the md5 of its `rowsPerBand` concatenated row-minhashes (longs
-    * rendered as decimal strings — both engines print longs identically),
-    * unpivoted via stack. */
-  private def bandSignatures(wide: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandSigs = (0 until bands).map { b =>
-      val rows = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}").cast("string"))
-      md5(concat_ws("|", rows: _*)).as(s"b$b")
-    }
-    val sigWide = wide.select(col("doc_id") +: bandSigs: _*)
-    val stackArgs = (0 until bands).map(b => s"$b, b$b").mkString(", ")
-    sigWide.select(col("doc_id"),
-      expr(s"stack($bands, $stackArgs)").as(Seq("band", "sig")))
-  }
-
+    * Output is (doc_id, band, sig): the kernel's `sig_arr`, posexploded. */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    bandSignatures(wideMinhash(spark, dir, shingleSet, NumBands * RowsPerBand),
-      NumBands, RowsPerBand)
+    signatureProfile(spark, dir, 1, NumBands, RowsPerBand)
+      .select(col("doc_id"), posexplode(col("sig_arr")).as(Seq("band", "sig")))
 
-  /** PER-ROW (narrow) minhash signatures — the STREAMING form of the
-    * kernel: ONE `aggregate` folds over the row's hashed shingles with a
-    * `nHashes`-wide running-min state (per shingle: one md5, then 128
-    * multiply-add-mins via `zip_with` against the inlined coefficient
-    * array), and the finish lambda emits the minhash array plus its md5
-    * band signatures in the same pass. A row in, (mh, sig_arr) out: no
-    * explode, no aggregation operator, no shuffle — exactly what a
-    * document STREAM needs (a streaming aggregation would force
-    * watermark semantics onto an operation that is logically
-    * per-document). Values are bit-identical to
-    * [[wideMinhash]]+[[bandSignatures]] — same md5 prefix, same affine
-    * family, same modulus, same band geometry.
-    *
-    * Everything lives in ONE expression on purpose: Catalyst's
-    * CollapseProject inlines a multiply-referenced alias into each
-    * reference (measured: a separate `hs_arr` projection was inlined
-    * into all 128 minhash expressions, re-hashing every shingle 128×);
-    * inside the aggregate, `acc`/`h` are bound lambda variables, so each
-    * shingle is hashed exactly once. Docs with NO shingles keep the
-    * Long.MaxValue init state — callers must filter empty shingle sets
-    * (the batch kernel drops them via explode) before joining. */
+  /** The rows of `df` whose `text` has at least one shingle, plus their
+    * (mh, sig_arr) signature from the [[graft.functions.MinHashBands]]
+    * kernel: per row — no explode, no aggregation, no shuffle, so it
+    * serves batch and document STREAMS alike (a streaming aggregation
+    * would force watermark semantics onto a per-document operation).
+    * The rows are filtered on the shingle set, not on the kernel's null:
+    * Catalyst pushes a filter below a spread, so a filter on the kernel's
+    * output would run the kernel twice, once in the unspread scan. */
   private[graft] def withNarrowSignatures(df: DataFrame, shingleK: Int,
-                                          bands: Int, rowsPerBand: Int): DataFrame = {
-    val nHashes = bands * rowsPerBand
-    val coeffs = affineCoeffs(nHashes)
-      .map { case (a, b) => s"named_struct('a', ${a}L, 'b', ${b}L)" }
-      .mkString("array(", ", ", ")")
-    val kernel =
-      s"""aggregate(
-            transform(${shingleSetKSql(shingleK)},
-              s -> cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)),
-            array_repeat(${Long.MaxValue}L, $nHashes),
-            (acc, h) -> zip_with(acc, $coeffs,
-              (m, c) -> least(m, (c.a * h + c.b) % $HashMod)),
-            acc -> named_struct(
-              'mh', acc,
-              'sig', transform(sequence(0, ${bands - 1}),
-                b -> md5(array_join(
-                  transform(slice(acc, b * $rowsPerBand + 1, $rowsPerBand),
-                    m -> cast(m as string)), '|')))))"""
-    df.withColumn("msig", expr(kernel))
-      .withColumn("mh", col("msig.mh"))
-      .withColumn("sig_arr", col("msig.sig"))
-      .drop("msig")
-  }
+                                          bands: Int, rowsPerBand: Int): DataFrame =
+    df.filter(size(shingleSetK(shingleK)) > 0).withColumn("msig",
+        call_function("minhash_bands", shingleSetK(shingleK), lit(bands), lit(rowsPerBand)))
+      .select("*", "msig.*").drop("msig")
 
-  /** The per-document signature PROFILE derived from the wide minhash
-    * columns: (doc_id, mh: array<long>, sig_arr: array<string>) — the
-    * compact row the per-pair agreement filters read. */
-  private def profileFrom(wide: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val nHashes = bands * rowsPerBand
-    val sigArr = (0 until bands).map { b =>
-      val rows = (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}").cast("string"))
-      md5(concat_ws("|", rows: _*))
-    }
-    wide.select(col("doc_id"),
-      array((0 until nHashes).map(i => col(s"m$i")): _*).as("mh"),
-      array(sigArr: _*).as("sig_arr"))
-  }
+  /** The signature store's one table: (doc_id, mh, sig_arr) for every
+    * document with at least one shingle. The documents spread first
+    * ([[Tables.fanOut]]): the kernel is the dedup family's costliest
+    * per-row work and would otherwise run in the single-row-group scan's
+    * one task. */
+  private[graft] def signatureProfile(spark: SparkSession, dir: String, shingleK: Int,
+                                      bands: Int, rowsPerBand: Int): DataFrame =
+    withNarrowSignatures(Tables.fanOut(Tables.documents(spark, dir).select("doc_id", "text")),
+        shingleK, bands, rowsPerBand)
+      .select("doc_id", "mh", "sig_arr")
 
   /** Write the SIGNATURE STORE — the staged artifact a production dedup
     * service persists per corpus (the reference's own pattern: every
     * stage writes a prefix the next stage reads, `dag-knlp.py:109-111,
-    * 139-152`): `sig/` holds (doc_id, band, sig) bucket rows partitioned
-    * by band for the LSH equi-join, `profile/` holds the (doc_id, mh,
-    * sig_arr) rows the per-pair agreement filters read. One wide-minhash
-    * pass feeds both tables (checkpointed so the expensive 128-min
-    * aggregate runs once, not once per table). Incremental and streaming
-    * dedup jobs then READ this store instead of re-signing the corpus —
-    * at 100 TB the store is the only corpus-sized artifact the daily
-    * flow touches, and it is orders of magnitude smaller than the text. */
+    * 139-152`). It is one table, `profile/`, holding [[signatureProfile]]
+    * rows, written by one query: the fanOut spread, the no-shingle
+    * filter, the kernel and the parquet write — no aggregate, no
+    * checkpoint.
+    * The (doc_id, band, sig) bucket rows of the LSH equi-join are the
+    * table's `sig_arr` posexploded on read ([[readSignatureStore]]).
+    * Incremental and streaming dedup jobs READ this store instead of
+    * re-signing the corpus — at 100 TB the store is the only corpus-sized
+    * artifact the daily flow touches, and it is orders of magnitude
+    * smaller than the text. */
   def writeSignatureStore(spark: SparkSession, dir: String, storeDir: String,
                           shingleK: Int = 1, bands: Int = NumBands,
-                          rowsPerBand: Int = RowsPerBand): Unit = {
-    // Per-phase wall clock, published via [[storePhaseTimings]] so the
-    // bench's store_build report self-documents WHICH phase stalled when
-    // a build time is an outlier (VERDICT r8 #3: a one-off 52 s
-    // `bigram_32x4` driver-run build vs 4.9 s steady state had to be
-    // explained out-of-band). `localCheckpoint` is eager, so the first
-    // phase covers the whole shingle→minhash compute; the two writes
-    // then only re-shape checkpointed rows.
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (wide, tMinhash) = timed(
-      wideMinhash(spark, dir, shingleSetK(shingleK), bands * rowsPerBand)
-        .localCheckpoint())
-    val (_, tSig) = timed(bandSignatures(wide, bands, rowsPerBand)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$storeDir/sig"))
-    val (_, tProfile) = timed(profileFrom(wide, bands, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$storeDir/profile"))
-    storePhaseTimings.put(signatureStoreKey(dir, shingleK, bands, rowsPerBand),
-      Seq("minhash" -> tMinhash, "sig_write" -> tSig, "profile_write" -> tProfile))
+                          rowsPerBand: Int = RowsPerBand): Unit =
+    signatureProfile(spark, dir, shingleK, bands, rowsPerBand)
+      .write.mode("overwrite").parquet(s"$storeDir/profile")
+
+  /** Read a persisted signature store back as (sig, profile): `profile`
+    * with its declared schema (no footer-inference job), and `sig` =
+    * (doc_id, band, sig) derived from it, in the column order of
+    * [[minhashSignatures]]. */
+  def readSignatureStore(spark: SparkSession, storeDir: String): (DataFrame, DataFrame) = {
+    val profile = spark.read.schema("doc_id BIGINT, mh ARRAY<BIGINT>, sig_arr ARRAY<STRING>")
+      .parquet(s"$storeDir/profile")
+    (profile.select(col("doc_id"), posexplode(col("sig_arr")).as(Seq("band", "sig"))), profile)
   }
-
-  /** Last-build per-phase wall-clock (seconds) per signature-store key —
-    * read by Bench into the store_build report. */
-  val storePhaseTimings =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Double)]]()
-
-  /** The staged-artifact key for a (corpus, geometry) signature store —
-    * shared by [[ensureSignatureStore]] and Bench's phase lookup. */
-  def signatureStoreKey(dir: String, shingleK: Int, bands: Int,
-                        rowsPerBand: Int): String =
-    s"${dir.replace('/', '_')}-k$shingleK-b$bands-r$rowsPerBand"
-
-  /** Read a persisted signature store back as (sig, profile). The band
-    * partition column is restored to its scan-order position so the
-    * frames are drop-in equal to freshly computed ones. */
-  def readSignatureStore(spark: SparkSession, storeDir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$storeDir/sig").select("doc_id", "band", "sig"),
-      spark.read.parquet(s"$storeDir/profile"))
 
   /** Build the signature store for (dir, geometry) once per process and
     * return its path; later calls — every other dedup query in the same
@@ -272,7 +164,7 @@ object Dedup {
   def ensureSignatureStore(spark: SparkSession, dir: String, shingleK: Int = 1,
                            bands: Int = NumBands,
                            rowsPerBand: Int = RowsPerBand): String =
-    Artifacts.ensure(signatureStoreKey(dir, shingleK, bands, rowsPerBand)) {
+    Artifacts.ensure(s"${dir.replace('/', '_')}-k$shingleK-b$bands-r$rowsPerBand") {
       tmp => writeSignatureStore(spark, dir, tmp.toString, shingleK, bands, rowsPerBand)
     }.toString
 
@@ -284,17 +176,6 @@ object Dedup {
       : (DataFrame, DataFrame) =
     readSignatureStore(spark,
       ensureSignatureStore(spark, dir, shingleK, bands, rowsPerBand))
-
-  /** [[shingleSetK]] as a SQL text fragment (for nesting inside
-    * higher-order transform lambdas). */
-  private def shingleSetKSql(k: Int): String =
-    if (k == 1) "array_distinct(split(text, ' ', -1))"
-    else
-      s"""CASE WHEN size(split(text, ' ', -1)) >= $k THEN
-            array_distinct(transform(
-              sequence(0, size(split(text, ' ', -1)) - $k),
-              i -> array_join(slice(split(text, ' ', -1), i + 1, $k), ' ')))
-          ELSE array() END"""
 
   /** Default LSH bucket-size cap: a (band, sig) bucket of b members emits
     * b(b-1)/2 candidate pairs, so one boilerplate-heavy bucket (cookie
@@ -413,11 +294,11 @@ object Dedup {
     * Scale posture (VERDICT r3 items 3/4/7, r6 #1):
     *  - the signature tables are READ from the persisted parquet store
     *    ([[ensureSignatureStore]], built once per process) — without
-    *    that materialization Catalyst would plan the expensive
-    *    128×min(LONG) HashAggregate subtree twice, re-shingling and
-    *    re-hashing the whole corpus (plan-verified in r3); with it,
-    *    every dedup query in a run shares ONE corpus signing, the
-    *    staged-artifact flow a 100 TB deployment runs;
+    *    that materialization Catalyst would plan the signing subtree
+    *    once per consumer, re-shingling and re-hashing the whole corpus
+    *    (plan-verified in r3); with it, every dedup query in a run shares
+    *    ONE corpus signing, the staged-artifact flow a 100 TB deployment
+    *    runs;
     *  - (band, sig) buckets over `maxBucket` are dropped and logged —
     *    Σ bucket² is the real cost bound and AQE skew-join splits
     *    partitions, not the quadratic pair count itself;
@@ -448,8 +329,10 @@ object Dedup {
         estJaccard, shingleK, bands, rowsPerBand)
         .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
     }
-    spark.read.parquet(path.resolve("pairs").toString)
-      .select("doc_a", "doc_b", "jaccard")
+    // the artifact's schema is known, so the read skips Spark's
+    // footer-inference job
+    spark.read.schema("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE")
+      .parquet(path.resolve("pairs").toString)
   }
 
   /** The banded-LSH CANDIDATE stage of [[nearDupPairs]] — capped bucket
@@ -467,7 +350,7 @@ object Dedup {
     // Signatures come from the persisted per-process store (built on the
     // first dedup query of the run): every downstream consumer — both
     // self-join sides, both agreement probes — reads the parquet store
-    // instead of re-running the expensive 128-min aggregate.
+    // instead of re-signing the corpus.
     val (sig, _) = signatureStore(spark, dir, shingleK, bands, rowsPerBand)
     val bucketN = count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy("band", "sig"))
@@ -1346,20 +1229,19 @@ object Dedup {
     * at 100 TB the full re-sign is the single largest dedup cost, and the
     * merge touches a sliver of the keys. Refresh = drop the touched keys
     * from the stored profile (broadcast anti-join against the delta's key
-    * list), sign ONLY the delta rows with the narrow per-row kernel
-    * (bit-identical to the batch signer), and union. The emitted
+    * list), sign ONLY the delta rows with the same per-row kernel the
+    * store was built with, and union. The emitted
     * (n_docs, store_digest) profile is order-independent, and the DuckDB
     * oracle recomputes it from the MERGED corpus with a full independent
     * re-sign — so the equality is a proof that incremental maintenance
     * lands on exactly the store a from-scratch rebuild would produce. */
   def sigstoreRefresh(spark: SparkSession, dir: String): DataFrame = {
     val delta = graft.operators.Curation.corpusDelta(spark, dir)
-    val store = spark.read.parquet(ensureSignatureStore(spark, dir) + "/profile")
+    val (_, store) = signatureStore(spark, dir)
     val kept = store.join(broadcast(delta.select("doc_id")), Seq("doc_id"), "left_anti")
       .select("doc_id", "sig_arr")
     val fresh = withNarrowSignatures(delta, shingleK = 1,
         bands = NumBands, rowsPerBand = RowsPerBand)
-      .filter(size(shingleSetK(1)) > 0)
       .select("doc_id", "sig_arr")
     kept.unionByName(fresh)
       .select(conv(substring(md5(concat_ws("|",
@@ -1773,14 +1655,11 @@ object Dedup {
       // min(LONG), reassemble the fixed-128 array per source.
       val profile =
         if (nHashes == NumBands * RowsPerBand)
-          spark.read.parquet(s"${ensureSignatureStore(spark, dir)}/profile")
-            .select(col("doc_id"), col("mh"))
-        else // non-store geometry (tests): the shared narrow kernel,
-             // one pass, no wide aggregate
+          signatureStore(spark, dir)._2.select(col("doc_id"), col("mh"))
+        else // non-store geometry (tests): the same kernel, one pass
           withNarrowSignatures(
             Tables.documents(spark, dir).select(col("doc_id"), col("text")),
             shingleK = 1, bands = 1, rowsPerBand = nHashes)
-            .filter(size(shingleSetK(1)) > 0)
             .select(col("doc_id"), col("mh"))
       val wide = profile
         .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")),

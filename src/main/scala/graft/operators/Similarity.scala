@@ -177,8 +177,10 @@ object Similarity {
       tmp => computeEmbedNearDup(spark, dir, threshold)
         .write.mode("overwrite").parquet(tmp.resolve("epairs").toString)
     }
-    spark.read.parquet(path.resolve("epairs").toString)
-      .select("vec_a", "vec_b", "sim")
+    // the artifact's schema is known, so the read skips Spark's
+    // footer-inference job
+    spark.read.schema("vec_a BIGINT, vec_b BIGINT, sim DOUBLE")
+      .parquet(path.resolve("epairs").toString)
   }
 
   private def computeEmbedNearDup(spark: SparkSession, dir: String,

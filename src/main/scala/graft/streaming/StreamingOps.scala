@@ -886,7 +886,7 @@ object StreamingOps {
     * against the historical corpus" flow run as an actual stream: the new
     * batch (top doc_id decile, [[graft.operators.Dedup.nearDupNewVsCorpus]]'s
     * split) arrives as a document STREAM, computes its MinHash-128 band
-    * signatures PER ROW with the narrow kernel (no explode, no streaming
+    * signatures PER ROW with the codegen'd kernel (no explode, no streaming
     * aggregation — [[graft.operators.Dedup.withNarrowSignatures]]), then:
     * stream-static equi-join against the corpus signature store on
     * (band, sig); stateful pair dedup (`dropDuplicates` — a bounded
@@ -942,7 +942,6 @@ object StreamingOps {
         shingleK = 1, bands = Dedup.NumBands, rowsPerBand = Dedup.RowsPerBand)
       .select(col("doc_id").as("new_doc"), col("mh").as("mh_a"),
         col("sig_arr"), Dedup.shingleSetK(1).as("set_a"))
-      .filter(size(col("set_a")) > 0)
     val candidates = newStream
       .select(col("new_doc"), col("mh_a"), col("sig_arr"), col("set_a"),
         posexplode(col("sig_arr")).as(Seq("band", "sig")))
@@ -950,8 +949,7 @@ object StreamingOps {
       .dropDuplicates("new_doc", "corpus_doc")
     val pairs = candidates
       .join(corpusProfile, "corpus_doc")
-      .filter(expr("size(filter(zip_with(sig_arr, sig_arr_b, (x, y) -> x = y), v -> v))")
-        >= Dedup.DefaultMinBands)
+      .filter(expr("array_agree_count(sig_arr, sig_arr_b)") >= Dedup.DefaultMinBands)
       .filter(expr("array_agree_count(mh_a, mh_b)") >= minAgree)
       .join(corpusSets, "corpus_doc")
       .withColumn("c", expr("array_intersect_count(set_a, set_b)"))

@@ -43,14 +43,14 @@ class DedupSpec extends AnyFunSuite {
 
   test("incremental near-dup plans a store READ, not a corpus re-sign") {
     // the staging contract: once the signature store exists, dedup plans
-    // scan its parquet instead of re-planning the 128-wide min aggregate
+    // scan its parquet instead of re-running the MinHash kernel
     Dedup.ensureSignatureStore(spark, sf)
-    val plan = Dedup.nearDupNewVsCorpus(spark, sf)
-      .queryExecution.sparkPlan.toString
-    assert(plan.contains(Artifacts.root.toString),
+    val plan = Dedup.nearDupNewVsCorpus(spark, sf).queryExecution.sparkPlan
+    assert(plan.toString.contains(Artifacts.root.toString),
       s"expected parquet scans of the persisted signature store in:\n$plan")
-    assert(!plan.contains("m127"),
-      "the 128-wide min aggregate must not be re-planned per query")
+    val kernels = plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case k: graft.functions.MinHashBands => k })
+    assert(kernels.isEmpty, s"the MinHash kernel is re-planned per query:\n$plan")
   }
 
   test("near-dup pairs: every reported pair really has jaccard >= threshold") {
@@ -83,17 +83,26 @@ class DedupSpec extends AnyFunSuite {
     assert(dflt.exceptAll(unbounded).isEmpty && unbounded.exceptAll(dflt).isEmpty)
   }
 
-  test("narrow per-row kernel matches the batch kernel bit-for-bit at the k=2 geometry") {
-    // shingleSetKSql hand-mirrors shingleSetK's SQL text (it must nest
-    // inside a higher-order lambda); the streaming-vs-batch equivalence
-    // elsewhere only exercises k=1, so this pins the k-gram branch too —
-    // an edit to either form now drifts loudly (ADVICE r6).
-    val docs = Tables.documents(spark, sf)
-    val narrow = Dedup.withNarrowSignatures(docs, shingleK = 2, bands = 32, rowsPerBand = 4)
-      .filter(size(Dedup.shingleSetK(2)) > 0) // batch kernel drops empty sets via explode
-      .select("doc_id", "mh", "sig_arr")
-    val (_, profile) = Dedup.signatureStore(spark, sf, shingleK = 2, bands = 32, rowsPerBand = 4)
-    assert(narrow.exceptAll(profile).isEmpty && profile.exceptAll(narrow).isEmpty)
+  test("artifact reads declare the schema their writers produce") {
+    // every staged dedup artifact is read with a declared schema (no
+    // footer-inference job); each must equal what the parquet footer says
+    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case other => other
+    }
+    def written(df: org.apache.spark.sql.DataFrame): DataType = nullable(spark.read
+      .parquet(new org.apache.hadoop.fs.Path(df.inputFiles.head).getParent.toString).schema)
+    Seq("signature store profile" -> Dedup.signatureStore(spark, sf)._2,
+        "pairs" -> Dedup.nearDupPairs(spark, sf),
+        "clusters" -> Dedup.nearDupClusters(spark, sf),
+        "semantic pairs" -> Similarity.embedNearDup(spark, sf),
+        "semantic clusters" -> Similarity.semanticDedupClusters(spark, sf))
+      .foreach { case (name, df) =>
+        assert(nullable(df.schema) == written(df), s"$name: declared ${df.schema.simpleString}")
+      }
   }
 
   test("LSH bucket cap: over-cap boilerplate buckets are dropped AND accounted") {

@@ -69,6 +69,40 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("signature store build is one query: no aggregate, one exchange (the fanOut spread)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import operators.Dedup
+    val sc = spark.sparkContext
+    val storeDir = java.nio.file.Files.createTempDirectory(Artifacts.root, "sigstore-jobs")
+    val group = s"sigstore-build-${System.nanoTime()}"
+    sc.setJobGroup(group, "signature store build")
+    try Dedup.writeSignatureStore(spark, sf, storeDir.toString)
+    finally sc.clearJobGroup()
+    // three jobs, none of them a second pass over the data: the documents
+    // read's schema inference (a footer job), the spread's map stage (AQE
+    // runs every shuffle stage as its own job) and the profile write. The
+    // aggregate + checkpoint + two-table build ran six.
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).sorted
+    val stages = jobs.map(j => j -> sc.statusTracker.getJobInfo(j).toSeq
+      .flatMap(_.stageIds.toSeq).flatMap(s => sc.statusTracker.getStageInfo(s).toSeq.map(_.name)))
+    assert(jobs.length == 3, s"store build ran ${jobs.length} jobs: ${stages.mkString("; ")}")
+    // the build writes exactly this frame
+    val plan = Dedup.signatureProfile(spark, sf, 1, Dedup.NumBands, Dedup.RowsPerBand)
+      .queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) { case a: HashAggregateExec => a }.isEmpty,
+      s"store build plans an aggregate:\n$plan")
+    assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1,
+      s"store build plans other than the one fanOut exchange:\n$plan")
+    // mh and sig_arr are two fields of one kernel call: projection
+    // collapsing must not inline the call into each field
+    val kernels = helper.collect(plan) { case p => p.expressions }.flatten
+      .flatMap(_.collect { case k: functions.MinHashBands => k })
+    assert(kernels.size == 1, s"the kernel is planned ${kernels.size} times:\n$plan")
+  }
+
   test("registry is 1:1 — every registered query has a DuckDB oracle") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
